@@ -1,0 +1,1 @@
+"""gosling benchmark package: see README.md and run.py."""
