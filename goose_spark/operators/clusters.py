@@ -38,14 +38,26 @@ from goose_spark.queries.base import register, t
 #: wrong cluster labels are worse than a failed job.
 MAX_ROUNDS = 40
 
-#: Below this edge count the component computation runs as ONE executor
-#: task (union-find over the whole edge list via mapInPandas) instead of
-#: the iterative join loop — the LSH candidate graph is orders of
-#: magnitude smaller than the corpus, so even at 100 TB of documents the
-#: pair list usually fits a single task; the iterative path remains the
-#: fallback when it doesn't. This is standard practice (GraphFrames'
-#: connectedComponents has the same small-graph shortcut).
+#: Below this edge count both graph operators here — connected
+#: components (dd6) and PageRank (q84) — run as ONE executor task over
+#: the whole edge list via mapInPandas (union-find / numpy power
+#: iteration) instead of their iterative join loops. The LSH candidate
+#: graph is orders of magnitude smaller than the corpus, so even at
+#: 100 TB of documents the pair list usually fits a single task; the
+#: iterative paths remain the fallback when it doesn't. This is standard
+#: practice (GraphFrames' connectedComponents has the same small-graph
+#: shortcut).
 FAST_PATH_MAX_EDGES = 2_000_000
+
+
+def _size_dispatch(pairs: DataFrame, kernel, schema: str, iterative) -> DataFrame:
+    """Size dispatch shared by components_of and pagerank: the whole
+    edge list through the mapInPandas ``kernel`` in ONE executor task
+    when it has at most FAST_PATH_MAX_EDGES rows, else
+    ``iterative(pairs)``."""
+    if pairs.count() <= FAST_PATH_MAX_EDGES:
+        return pairs.coalesce(1).mapInPandas(kernel, schema=schema)
+    return iterative(pairs)
 
 
 def _union_find_components(batches):
@@ -203,11 +215,10 @@ def components_of(pairs: DataFrame) -> DataFrame:
     b_id) edges → (doc_id, cluster_id) labels, cluster_id = min member
     id. Single-task union-find below FAST_PATH_MAX_EDGES, alternating
     large-star/small-star above it."""
-    if pairs.count() <= FAST_PATH_MAX_EDGES:
-        return pairs.coalesce(1).mapInPandas(
-            _union_find_components, schema="doc_id long, cluster_id long"
-        )
-    return connected_components(pairs)
+    return _size_dispatch(
+        pairs, _union_find_components, "doc_id long, cluster_id long",
+        connected_components,
+    )
 
 
 @register(
@@ -240,20 +251,80 @@ PR_ITERS = 10
 PR_DAMPING = 0.85
 
 
+def _pagerank_kernel(iters: int, damping: float):
+    """mapInPandas kernel factory: the whole power iteration over all
+    edge batches of a single partition, in numpy. Same input rules as
+    the iterative path — null endpoints and self-loops dropped, distinct
+    over the DIRECTED (a_id, b_id) rows, every kept row walked both ways
+    — and the same float64 update r' = base + d·Σ r[src]/deg[src], with
+    the per-node sum a ``bincount``. Yields raw (doc_id, r); rounding
+    stays in Spark so both paths share one rounding mode."""
+
+    def kernel(batches):
+        import numpy as np
+        import pandas as pd
+
+        frames = [pdf.dropna() for pdf in batches]
+        if not frames:
+            return
+        pdf = pd.concat(frames)
+        a = pdf["a_id"].to_numpy(np.int64)
+        b = pdf["b_id"].to_numpy(np.int64)
+        keep = a != b
+        e = np.unique(np.stack([a[keep], b[keep]], axis=1), axis=0)
+        if len(e) == 0:
+            return
+        nodes, idx = np.unique(e.ravel(), return_inverse=True)
+        idx = idx.reshape(-1, 2)
+        src = np.concatenate([idx[:, 0], idx[:, 1]])
+        dst = np.concatenate([idx[:, 1], idx[:, 0]])
+        n = len(nodes)
+        deg = np.bincount(src, minlength=n).astype(np.float64)
+        base = (1.0 - damping) / n
+        r = np.full(n, 1.0 / n)
+        for _ in range(iters):
+            r = base + damping * np.bincount(
+                dst, weights=r[src] / deg[src], minlength=n
+            )
+        yield pd.DataFrame({"doc_id": nodes, "r": r})
+
+    return kernel
+
+
 def pagerank(pairs: DataFrame, iters: int = PR_ITERS,
              damping: float = PR_DAMPING) -> DataFrame:
     """Power-iteration PageRank over an undirected (a_id, b_id) edge
-    list (each edge walked both ways). Fixed ``iters`` rounds, each one
-    edge-keyed join + one dst-keyed partial-agg shuffle over the EDGE
-    list only — the canonical iterative-DataFrame shape, same lineage
-    discipline as connected_components (localCheckpoint every 3 rounds).
-    The symmetric closure has no dangling nodes, so no dangling-mass
-    redistribution term is needed.
+    list (each edge walked both ways), ``iters`` fixed rounds. Returns
+    (doc_id, pr) with pr rounded to 6 places, ordered pr desc, doc_id.
 
-    Float contract: per-round sums are double; executor summation order
-    can differ between runs/partitionings in the last ulp, so outputs
-    are compared at tolerance (tests) and rounded for display — the
-    standard contract for distributed floating-point iteration.
+    Size dispatch, the same as components_of: at most
+    FAST_PATH_MAX_EDGES edges run the whole iteration in ONE executor
+    task (numpy kernel via mapInPandas) — no per-round Spark jobs, whose
+    fixed scheduling cost dominated the work on a few-hundred-node
+    graph; larger graphs run the iterative DataFrame loop. Both paths
+    compute in float64 and round in Spark, so they differ only by
+    float64 summation-order error before the rounding.
+
+    Float contract: summation order differs between the paths and, on
+    the iterative path, between runs/partitionings in the last ulp, so
+    outputs are compared at tolerance (tests) and rounded for display —
+    the standard contract for distributed floating-point iteration."""
+    ranks = _size_dispatch(
+        pairs, _pagerank_kernel(iters, damping), "doc_id long, r double",
+        lambda p: _pagerank_iterative(p, iters, damping),
+    )
+    return ranks.select("doc_id", F.round("r", 6).alias("pr")).orderBy(
+        F.col("pr").desc(), "doc_id"
+    )
+
+
+def _pagerank_iterative(pairs: DataFrame, iters: int, damping: float) -> DataFrame:
+    """pagerank's path above FAST_PATH_MAX_EDGES: raw (doc_id, r). Each
+    round is one edge-keyed join + one dst-keyed partial-agg shuffle
+    over the EDGE list only — the canonical iterative-DataFrame shape,
+    same lineage discipline as connected_components (localCheckpoint
+    every 3 rounds). The symmetric closure has no dangling nodes, so no
+    dangling-mass redistribution term is needed.
 
     Plan shape (optimization r14): the out-degree rides a count() window
     over the SAME src-keyed exchange that lays the edge cache out (one
@@ -289,7 +360,7 @@ def pagerank(pairs: DataFrame, iters: int = PR_ITERS,
         n = nodes.count()
         if n == 0:
             return nodes.select(
-                F.col("node").alias("doc_id"), F.lit(0.0).alias("pr")
+                F.col("node").alias("doc_id"), F.lit(0.0).alias("r")
             )
         ranks = nodes.withColumn("r", F.lit(1.0 / n))
         base = (1.0 - damping) / n
@@ -323,10 +394,7 @@ def pagerank(pairs: DataFrame, iters: int = PR_ITERS,
         # recompute via lineage if ever re-read)
         nodes.unpersist()
         edges.unpersist()
-    out = ranks.select(
-        F.col("node").alias("doc_id"), F.round("r", 6).alias("pr")
-    ).orderBy(F.col("pr").desc(), "doc_id")
-    return out
+    return ranks.select(F.col("node").alias("doc_id"), "r")
 
 
 # ---------------------------------------------------------------------------
@@ -483,7 +551,10 @@ def q87(spark: SparkSession, sf: str) -> DataFrame:
     doc="PageRank (10 power iterations, d=0.85) over the verified "
         "near-dup pair graph: centrality picks the canonical document "
         "per duplicate neighborhood (the web-scale corpus-curation "
-        "authority signal). Each round shuffles only the edge list; "
+        "authority signal). Size dispatch shared with dd6: at most "
+        "FAST_PATH_MAX_EDGES edges run all rounds in ONE executor task "
+        "(numpy power iteration via mapInPandas, 3 Spark jobs per "
+        "call); above it each round shuffles only the edge list, "
         "lineage truncated every 3 rounds.",
     tags=("llm", "graph"),
 )

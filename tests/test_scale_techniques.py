@@ -94,6 +94,26 @@ def test_dd6_iterative_path_matches_fast_path(spark, monkeypatch):
     assert len(fast) > 0
 
 
+def test_q84_iterative_path_matches_fast_path(spark, monkeypatch):
+    """q84's iterative power iteration (above FAST_PATH_MAX_EDGES) ranks
+    the same nodes as the single-task numpy kernel, within 1e-6 (sf0.01
+    near-dup graph)."""
+    import goose_spark.operators.clusters as clusters
+    from goose_spark.queries import load_all
+
+    from tests.conftest import SF_CORRECT
+
+    def ranks():
+        rows = load_all()["q84_pagerank"].builder(spark, SF_CORRECT).collect()
+        return {r["doc_id"]: r["pr"] for r in rows}
+
+    fast = ranks()
+    monkeypatch.setattr(clusters, "FAST_PATH_MAX_EDGES", -1)
+    slow = ranks()
+    assert set(fast) == set(slow) and len(fast) > 0
+    assert max(abs(fast[k] - slow[k]) for k in fast) < 1e-6
+
+
 def test_two_pass_packing_matches_window(spark):
     """The distributed two-pass prefix sum (range partition → partition
     subtotals → per-partition offset + local cumsum) assigns every doc
