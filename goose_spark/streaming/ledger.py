@@ -374,6 +374,41 @@ class Ledger:
             .drop("_rn")
         )
 
+    def latest_rows(self, ids, min_seq: int) -> dict[str, tuple[int, str]]:
+        """``{id: (seq, status)}`` of each listed job's latest log row
+        with ``seq >= min_seq`` — a bounded, driver-side point lookup
+        into the same files ``log()`` reads (one Arrow dataset scan, no
+        Spark job). Agrees with ``state()`` for every id whose latest
+        row is at or after ``min_seq``; ids with no such row are absent.
+
+        The filter is pushed into the scan: parquet ``seq`` stats skip
+        row groups older than ``min_seq``, and only ``id``/``seq``/
+        ``status`` are read. Past one footer read per file, cost follows
+        the age of ``min_seq`` and memory the matched rows — never the
+        size of the log."""
+        import pyarrow.compute as pc
+        import pyarrow.dataset as ds
+
+        ids = pc.unique(pa.array(ids, type=pa.string()))
+        # the files Spark's parquet reader lists: hidden (`.tmp-*`) and
+        # metadata (`_*`) names are skipped
+        files = [
+            os.path.join(self.log_dir, f) for f in os.listdir(self.log_dir)
+            if f.endswith(".parquet") and not f.startswith((".", "_"))
+        ]
+        if not files or len(ids) == 0:
+            return {}
+        tbl = ds.dataset(files, schema=ARROW_LOG_SCHEMA, format="parquet").to_table(
+            columns=["id", "seq", "status"],
+            filter=(ds.field("seq") >= int(min_seq)) & ds.field("id").isin(ids),
+        )
+        out: dict[str, tuple[int, str]] = {}
+        for i, s, st in zip(tbl["id"].to_pylist(), tbl["seq"].to_pylist(),
+                            tbl["status"].to_pylist()):
+            if i not in out or s > out[i][0]:
+                out[i] = (s, st)
+        return out
+
     def mark(self) -> int:
         """An as-of cursor for time travel: every row appended after this
         call carries a larger ``seq``. Issued through ``next_seq`` (ns

@@ -882,19 +882,11 @@ class Worker:
         pdf = tbl.to_pandas().sort_values("seq").drop_duplicates("id", keep="last")
         # stale-guard: a parked row is live only if it is STILL the job's
         # latest ledger row (redelivered history must never re-execute).
-        # Broadcast-join the ≤pop-limit popped ids against the state view
-        # rather than an isin() literal list — 10k+ literals would blow
-        # up Catalyst planning time, a broadcast hash join does not.
-        ids_df = self.spark.createDataFrame(
-            pd.DataFrame({"id": pdf["id"].unique()}), schema="id string"
-        )
-        latest = {
-            r["id"]: (r["seq"], r["status"])
-            for r in self.ledger.state(self.spark)
-            .join(F.broadcast(ids_df), "id")
-            .select("id", "seq", "status")
-            .collect()
-        }
+        # Log rows older than the oldest popped row cannot change that
+        # answer, so the lookup is a seq-pruned Arrow scan for the
+        # ≤pop-limit popped ids — no Spark job, and its cost follows the
+        # age of the oldest popped row, not the size of the log.
+        latest = self.ledger.latest_rows(pdf["id"], int(pdf["seq"].min()))
         live_mask = pdf.apply(
             lambda r: latest.get(r["id"], (None, None))[0] == r["seq"]
             and latest[r["id"]][1] in (STATUS_SCHEDULED, STATUS_RETRYING),

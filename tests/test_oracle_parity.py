@@ -9,17 +9,21 @@ from goose_spark.queries import load_all
 from tests.conftest import SF_CORRECT
 from tests.oracle_utils import compare
 
-# excluded from the DEFAULT pytest run (pytest.ini deselects
-# 'slowsuite' so 'python -m pytest tests/ -x -q' completes inside
-# the grading driver's window — r15 directive 5); tools/partest.py
-# and 'pytest -m ""' still run it
-pytestmark = pytest.mark.slowsuite
-
 REGISTRY = load_all()
 NAMES = sorted(REGISTRY)
 
+# The ledger family (qj*, ~20 s together) runs in the DEFAULT pytest
+# selection, so the default gate checks ledger correctness against the
+# oracle. Every other query is 'slowsuite' (pytest.ini deselects it by
+# default to keep the run short); tools/partest.py and 'pytest -m ""'
+# still run all of them.
+PARAMS = [
+    pytest.param(n) if n.startswith("qj") else pytest.param(n, marks=pytest.mark.slowsuite)
+    for n in NAMES
+]
 
-@pytest.mark.parametrize("name", NAMES)
+
+@pytest.mark.parametrize("name", PARAMS)
 def test_query_matches_oracle(name, spark, oracle):
     spec = REGISTRY[name]
     df = spec.builder(spark, SF_CORRECT)
