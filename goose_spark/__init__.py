@@ -9,9 +9,11 @@ library — see /root/reference) idiomatically on Spark:
 * a **Structured Streaming worker** with checkpoint recovery replaces
   goose's in-progress queues / heartbeats / orphan checker
   (``src/goose/brokers/redis/consumer.clj``, ``orphan_checker.clj``);
-* retry timers, cron ticks and batch completion are **stateful streaming
-  operators** (``src/goose/brokers/redis/retry.clj``, ``cron.clj``,
-  ``batch.clj``);
+* retry and scheduled timers are the worker's **due-sweep** over a
+  ``run_at``-bucketed scheduled store, cron is a per-tick registry scan,
+  and batch completion is a driver-side per-batch counter recompute
+  after each outcome commit (``src/goose/brokers/redis/retry.clj``,
+  ``scheduler.clj``, ``cron.clj``, ``batch.clj``);
 * the console/API queries become plain DataFrame/SQL over the ledger
   (``src/goose/brokers/redis/console/data.clj``, ``src/goose/api/*``).
 

@@ -10,7 +10,7 @@ is a retention job (Delta ``VACUUM`` at scale).
 from __future__ import annotations
 
 import json
-from datetime import datetime, timezone
+from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -79,10 +79,6 @@ def _retry_stale_listing(fn):
             return fn(self, *args, **kwargs)
 
     return wrap
-
-
-def _now() -> datetime:
-    return datetime.now(timezone.utc).replace(tzinfo=None)
 
 
 class LedgerAPI:

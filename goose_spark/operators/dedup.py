@@ -402,14 +402,6 @@ WHERE list_dot_product(a.emb, b.emb)
 ORDER BY a_id, b_id"""
 
 
-def _dot(x, y):
-    return F.aggregate(F.zip_with(x, y, lambda a, b: a * b), F.lit(0.0), lambda s, v: s + v)
-
-
-def _as_double(col):
-    return F.transform(col, lambda v: v.cast("double"))
-
-
 @register(
     "dd5_embedding_near_dup",
     _DD5_ORACLE,

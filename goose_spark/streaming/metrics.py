@@ -20,7 +20,8 @@ Engine mapping:
   statsd.clj default-opts.
 * queue-depth gauges → ``events.job_queue_depth_stream`` aggregation
 * engine-level progress (rows/sec, batch duration, watermark lag) →
-  ``StreamingQueryListener`` (Spark emits these natively per trigger)
+  Spark's own ``StreamingQuery.lastProgress`` / ``StreamingQueryListener``
+  (emitted natively per trigger; no engine wrapper)
 
 The worker emits COUNTS per micro-batch, not one datagram per job: at
 cluster scale a per-job UDP send from the driver would serialize the
@@ -29,12 +30,9 @@ hot path; the per-batch aggregate carries the same information.
 
 from __future__ import annotations
 
-import json
 import random
 import socket
 from dataclasses import dataclass, field
-
-from pyspark.sql.streaming import StreamingQueryListener
 
 #: terminal/failure statuses counted as jobs.failed (a 'deleted' outcome
 #: row is a skip-dead-queue death — still a failure)
@@ -245,23 +243,3 @@ class StatsDMetrics(Metrics):
         except OSError:
             pass  # metrics must never break the worker (fire-and-forget UDP)
 
-
-class ProgressListener(StreamingQueryListener):
-    """Streams Spark's native per-trigger progress (rows/sec, duration,
-    state size) into a list — the engine-side replacement for goose's
-    worker heartbeat visibility (W9)."""
-
-    def __init__(self):
-        self.progress: list[dict] = []
-
-    def onQueryStarted(self, event):  # noqa: N802 (Spark API casing)
-        pass
-
-    def onQueryProgress(self, event):  # noqa: N802
-        self.progress.append(json.loads(event.progress.json))
-
-    def onQueryIdle(self, event):  # noqa: N802
-        pass
-
-    def onQueryTerminated(self, event):  # noqa: N802
-        pass

@@ -63,6 +63,10 @@ def _now() -> datetime:
 # src/goose/defaults.clj:49): bounds rows materialized per due-sweep pop.
 DEFAULT_SCHEDULE_POP_LIMIT = 10_000
 
+# Execution fan-out of a bounded driver-built frame (a small micro-batch
+# or a due-sweep chunk): one task per this many rows, capped at
+# defaultParallelism — 250 quick jobs take 4 tasks, not 32 round-trips.
+ROWS_PER_TASK = 64
 
 
 def _coerce_log_pdf(pdf: "pd.DataFrame") -> "pd.DataFrame":
@@ -260,7 +264,6 @@ class Worker:
                  retry_delay_fn: Callable[[int], int] | None = None,
                  metrics=None, middlewares: tuple = (),
                  emit_in_progress: bool = False,
-                 distributed_commit: bool = True,
                  queues: list[str] | None = None,
                  scheduler_role: bool | None = None,
                  error_handler: str | None = None,
@@ -268,7 +271,6 @@ class Worker:
                  skip_dead_queue: bool = False,
                  schedule_pop_limit: int = DEFAULT_SCHEDULE_POP_LIMIT,
                  small_batch_rows: int = 10_000,
-                 rows_per_task: int = 64,
                  now_fn: Callable[[], datetime] | None = None):
         import threading
 
@@ -289,15 +291,14 @@ class Worker:
         # drain loop still clears any backlog either way, it just takes
         # more iterations.
         self.schedule_pop_limit = max(1, int(schedule_pop_limit))
-        # Micro-batch latency knobs: batches ≤ small_batch_rows take the
+        # Micro-batch latency knob: batches ≤ small_batch_rows take the
         # driver-compacted path (one materialization job + single-file
-        # commit) and fan execution out at ceil(rows / rows_per_task)
+        # commit) and fan execution out at ceil(rows / ROWS_PER_TASK)
         # tasks instead of a fixed 32 — per-batch fixed cost measured
-        # ~1.3 s → ~0.5 s on the 1000 jobs/s parity load. rows_per_task
-        # trades task overhead against per-job runtime: lower it (even
-        # to 1) for slow job fns, keep the default for quick ones.
+        # ~1.3 s → ~0.5 s on the 1000 jobs/s parity load. Larger batches
+        # and sweep chunks take the executor-side commit
+        # (_commit_distributed); 0 sends every batch there.
         self.small_batch_rows = max(0, int(small_batch_rows))
-        self.rows_per_task = max(1, int(rows_per_task))
         # retry.clj:47-55 handler parity: registry fn names called
         # executor-side on failure/death; skip_dead_queue writes dying
         # jobs as 'deleted' (no dead-queue entry). Validated at
@@ -352,12 +353,6 @@ class Worker:
         # observable the same way). Off by default — it costs one extra
         # ledger append per micro-batch.
         self.emit_in_progress = emit_in_progress
-        # Executor-side outcome commit (default): each task writes its own
-        # parquet part into a staging dir and the driver promotes the parts
-        # into log/ with metadata-only renames — the Delta-commit shape.
-        # False falls back to the single-file driver-side append (the
-        # local-mode shortcut SCALE.md documents).
-        self.distributed_commit = distributed_commit
         self.executions = 0
         # W9: process registry + heartbeat (heartbeat.clj:22-33) — the
         # console's workers view. Registered on construction; re-beaten
@@ -631,26 +626,8 @@ class Worker:
                 pa.Table.from_pandas(to_park, schema=ARROW_LOG_SCHEMA, preserve_index=False)
             )
         runnable = live[live["status"] == STATUS_ENQUEUED]
-        if len(runnable) == 0:
-            return
-        width = max(
-            1,
-            min(
-                self.spark.sparkContext.defaultParallelism,
-                -(-len(runnable) // self.rows_per_task),
-            ),
-        )
-        # priority order (P8) applied in pandas — createDataFrame slices
-        # contiguously, so a narrow coalesce() downstream preserves it
-        # and the per-batch repartition SHUFFLE stage disappears
-        runnable = runnable.sort_values(
-            ["priority", "enqueued_at"], ascending=[False, True]
-        )
-        due_df = self.spark.createDataFrame(
-            _coerce_log_pdf(runnable), schema=self.ledger._spark_log_schema()
-        )
-        self._execute_and_log(due_df, width=width, driver_commit=True,
-                              pre_ordered=True)
+        if len(runnable):
+            self._execute_bounded(runnable)
 
     def tick(self) -> None:
         """Timer sweep: due scheduled/retrying jobs + due cron entries.
@@ -665,41 +642,55 @@ class Worker:
 
     # ------------------------------------------------------------------
 
+    def _execute_bounded(self, pdf: pd.DataFrame) -> None:
+        """Execute a bounded driver-built frame of runnable rows (a small
+        micro-batch or a due-sweep chunk). Priority order (P8) is applied
+        in pandas — createDataFrame slices contiguously, so the narrow
+        coalesce in _execute_and_log keeps it and no repartition shuffle
+        runs; fan-out is ceil(rows / ROWS_PER_TASK) tasks; a frame of at
+        most small_batch_rows commits driver-side as one file."""
+        pdf = pdf.sort_values(["priority", "enqueued_at"], ascending=[False, True])
+        width = max(
+            1,
+            min(
+                self.spark.sparkContext.defaultParallelism,
+                -(-len(pdf) // ROWS_PER_TASK),
+            ),
+        )
+        df = self.spark.createDataFrame(
+            _coerce_log_pdf(pdf), schema=self.ledger._spark_log_schema()
+        )
+        self._execute_and_log(
+            df, width=width, driver_commit=len(pdf) <= self.small_batch_rows
+        )
+
     def _execute_and_log(self, df: DataFrame, width: int | None = None,
-                         driver_commit: bool | None = None,
-                         pre_ordered: bool = False) -> None:
-        """Execute job rows and commit outcome rows. ``width`` overrides
-        the execution fan-out (the small-batch path sizes it to the
-        batch instead of paying 32 task round-trips for 250 rows);
-        ``driver_commit`` forces the single-file driver-side commit for
-        bounded batches regardless of ``distributed_commit``."""
+                         driver_commit: bool = False) -> None:
+        """Execute job rows and commit outcome rows. ``width`` set means
+        ``df`` is already in priority order (``_execute_bounded``) and
+        runs on ``width`` tasks; ``driver_commit`` commits the outcome as
+        one driver-written file instead of executor-side parts."""
         if width is None and df.isEmpty():
             return
         import time as _time
 
         _exec_start = _time.perf_counter()
-        # bounded-staleness priority (P8): front-priority rows first.
-        # sortWithinPartitions (not a global orderBy): priority is already
-        # an approximation per SURVEY §7.4.1, and a global sort would add
-        # a range-sampling pass + full shuffle per micro-batch.
-        # width follows the cluster (defaultParallelism), not a constant —
-        # on local[32] this is 32; on a 1000-executor cluster it is the
-        # fleet's task slots — except when the caller already knows the
-        # batch is small and passes a matching width.
         if width is None:
-            width = self.spark.sparkContext.defaultParallelism
-        if pre_ordered:
-            # caller sorted rows already; narrow coalesce keeps the order
-            # and skips the repartition shuffle stage entirely
-            ordered = df.coalesce(width)
+            # bounded-staleness priority (P8): front-priority rows first.
+            # sortWithinPartitions (not a global orderBy): priority is
+            # already an approximation per SURVEY §7.4.1, and a global
+            # sort would add a range-sampling pass + full shuffle per
+            # micro-batch. Width follows the cluster (defaultParallelism),
+            # not a constant — on local[32] this is 32; on a
+            # 1000-executor cluster it is the fleet's task slots.
+            ordered = df.repartition(
+                self.spark.sparkContext.defaultParallelism
+            ).sortWithinPartitions(F.col("priority").desc(), F.col("enqueued_at"))
         else:
-            ordered = df.repartition(width).sortWithinPartitions(
-                F.col("priority").desc(), F.col("enqueued_at")
-            )
-        use_driver = (
-            driver_commit if driver_commit is not None else not self.distributed_commit
-        )
-        if self.emit_in_progress and not use_driver:
+            # narrow coalesce keeps the caller's order and skips the
+            # repartition shuffle stage entirely
+            ordered = df.coalesce(width)
+        if self.emit_in_progress and not driver_commit:
             # executor-side in-progress stamp: same staged-append as the
             # outcome commit; the seq (fresh time base + per-id hash
             # offset) stays below the outcome row's later time base, so
@@ -737,7 +728,7 @@ class Worker:
                            skip_dead_queue=self.skip_dead_queue),
             schema=df.schema,
         )
-        if not use_driver:
+        if not driver_commit:
             self._commit_distributed(outcome, _exec_start)
             return
         out_tbl = self._to_arrow(outcome)
@@ -774,7 +765,7 @@ class Worker:
         and collects only bounded summaries."""
         import time as _time
 
-        moved = self._append_log_distributed(outcome)
+        moved, _ = self.ledger.append_df(outcome)
         if not moved:
             return
         out = self.spark.read.schema(self.ledger._spark_log_schema()).parquet(*moved)
@@ -829,11 +820,6 @@ class Worker:
                 {c: lat_sum[c] / lat_n[c] for c in lat_sum if lat_n.get(c)}
             )
         self._run_batch_callbacks(sorted(touched_set))
-
-    def _append_log_distributed(self, outcome: DataFrame) -> list[str]:
-        """Executor-side outcome publish — see Ledger.append_df."""
-        moved, _ = self.ledger.append_df(outcome)
-        return moved
 
     def _append_log_table(self, table: pa.Table) -> None:
         if table.num_rows == 0:
@@ -928,28 +914,10 @@ class Worker:
                     theirs, schema=ARROW_LOG_SCHEMA, preserve_index=False
                 )
             )
-        if len(mine) == 0:
-            return more
-        # same right-sizing as _process_batch_small: the chunk is a
-        # bounded driver-built frame, so pre-sort in pandas, fan out at
-        # ceil(rows/rows_per_task) tasks, and (when bounded) commit
-        # driver-side — not a fixed 32-task shuffle per chunk
-        mine = mine.sort_values(["priority", "enqueued_at"],
-                                ascending=[False, True])
-        width = max(
-            1,
-            min(
-                self.spark.sparkContext.defaultParallelism,
-                -(-len(mine) // self.rows_per_task),
-            ),
-        )
-        due_df = self.spark.createDataFrame(
-            _coerce_log_pdf(mine), schema=self.ledger._spark_log_schema()
-        )
-        self._execute_and_log(
-            due_df, width=width, pre_ordered=True,
-            driver_commit=True if len(mine) <= self.small_batch_rows else None,
-        )
+        if len(mine):
+            # the chunk is a bounded driver-built frame — right-sized
+            # like a small micro-batch, not a fixed 32-task shuffle
+            self._execute_bounded(mine)
         return more
 
     # ------------------------------------------------------------------

@@ -26,12 +26,6 @@ from goose_spark.operators.similarity import _embeddings, N_QUERIES
 from tests.conftest import SF_CORRECT
 import pytest
 
-# excluded from the DEFAULT pytest run (pytest.ini deselects
-# 'slowsuite' so 'python -m pytest tests/ -x -q' completes inside
-# the grading driver's window — r15 directive 5); tools/partest.py
-# and 'pytest -m ""' still run it
-pytestmark = pytest.mark.slowsuite
-
 
 def _queries(spark):
     v = _embeddings(spark, SF_CORRECT)
@@ -167,12 +161,18 @@ def test_duplicate_append_then_delete_counts_hidden_rows(spark, tmp_path):
     assert man3["n"] == man2["n"]  # physical now equals live
 
 
-def test_ivfpq_duplicate_rows_do_not_eat_rank_slots(spark, tmp_path):
+@pytest.mark.parametrize(
+    "build,query",
+    [(build_ivfpq_index, ivfpq_query), (build_ivf_index, ivf_index_query)],
+    ids=["ivfpq", "ivf_serve"],
+)
+def test_ivfpq_duplicate_rows_do_not_eat_rank_slots(spark, tmp_path, build, query):
     """Duplicate assignment rows for one vec_id (append of an existing
     id) must yield ONE candidate in the exact re-rank, not two rows
-    occupying consecutive ranks."""
-    idx = str(tmp_path / "ivfpq")
-    build_ivfpq_index(spark, SF_CORRECT, idx)
+    occupying consecutive ranks. ``ivf_serve`` is the ss5 serve path,
+    whose corpus-side ``distinct`` carries the same invariant."""
+    idx = str(tmp_path / "ivf")
+    build(spark, SF_CORRECT, idx)
     v = _embeddings(spark, SF_CORRECT)
     some = v.filter(F.col("vec_id").isin([7, 8, 9])).collect()
     dup = spark.createDataFrame(
@@ -182,7 +182,7 @@ def test_ivfpq_duplicate_rows_do_not_eat_rank_slots(spark, tmp_path):
     append_to_ivf_index(spark, dup, idx)
 
     q = _queries(spark)
-    out = ivfpq_query(spark, idx, q).collect()
+    out = query(spark, idx, q).collect()
     per_q: dict = {}
     for r in out:
         per_q.setdefault(r["query_id"], []).append(r["neighbor_id"])

@@ -297,16 +297,26 @@ def test_priority_front_executes_first_within_partitions(spark, ledger, tmp_path
         assert prios == sorted(prios, reverse=True), f"partition {pid}: {prios}"
 
 
-def test_in_progress_visibility_and_crash_window(spark, ledger, tmp_path):
+@pytest.mark.parametrize(
+    "small_batch_rows",
+    [None, 0],
+    ids=["driver_commit", "executor_commit"],
+)
+def test_in_progress_visibility_and_crash_window(spark, ledger, tmp_path,
+                                                 small_batch_rows):
     """emit_in_progress=True: in-flight rows are stamped before
     execution; after a simulated crash (checkpoint rollback) the state
-    view would show them in_progress, and replay finishes them."""
+    view would show them in_progress, and replay finishes them. Runs on
+    both commit paths: the default small batch stamps driver-side,
+    small_batch_rows=0 stamps from the executors (Ledger.append_df)."""
     import shutil
 
     client = JobClient(ledger)
     for i in range(5):
         client.perform_async("noop", i)
-    worker = Worker(spark, ledger, rand_int=lambda n: 0, emit_in_progress=True)
+    opts = {} if small_batch_rows is None else {"small_batch_rows": small_batch_rows}
+    worker = Worker(spark, ledger, rand_int=lambda n: 0, emit_in_progress=True,
+                    **opts)
     snapshot = str(tmp_path / "ck-snap")
     shutil.copytree(ledger.checkpoint_dir, snapshot)
     worker.process_available()
