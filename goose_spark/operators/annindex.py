@@ -24,11 +24,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from goose_spark.plans.guards import EMBEDDING_ROW_CAP, bounded_broadcast
+from goose_spark.plans.guards import EMBEDDING_ROW_CAP
 from goose_spark.operators.similarity import (
     _DIM,
     _embeddings,
     _train_ivf,  # noqa: F401 — re-exported for cold-build tests
+    cosine_pairs,
+    fold_dot,
+    rank_top_k,
     trained_ivf,
     IVF_NPROBE,
     TOP_K,
@@ -167,33 +170,13 @@ def _centroid_matrix(spark: SparkSession, index_dir: str):
     return cmat
 
 
-def _probe_kernel(cmat, nprobe: int):
-    """Factory for the nearest-nprobe-centroid probe kernel — the ONE
-    probe implementation shared by ivf_index_query and ivfpq_query
-    (cloudpickle ships cmat by value into the closure)."""
-    import numpy as np
-
-    def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            mat = np.asarray(list(pdf["qe"]), dtype=np.float64)
-            scores = mat @ cmat.T - 0.5 * (cmat * cmat).sum(axis=1)[None, :]
-            top = np.argsort(-scores, axis=1)[:, :nprobe]
-            rows = [
-                (int(qid), int(c))
-                for qid, cl in zip(pdf["query_id"], top)
-                for c in cl
-            ]
-            yield pd.DataFrame(rows, columns=["query_id", "cluster"])
-
-    return probe
-
-
 def _probe_qe_kernel(cmat, nprobe: int):
-    """``_probe_kernel`` emitting ONE row per query — (query_id, qe,
+    """The nearest-``nprobe``-centroid probe kernel — the ONE probe
+    implementation every index serve shares (cloudpickle ships cmat by
+    value into the closure). Emits ONE row per query — (query_id, qe,
     clusters) — so a single bounded collect serves the probed-cell set,
-    the query count AND the query-embedding batch the scoring kernel
-    needs (the qe values pass through untouched; the cell choice uses
-    the numerically identical scores/argsort as ``_probe_kernel``)."""
+    the per-query probe map AND the query-embedding batch (the qe values
+    pass through untouched)."""
     import numpy as np
 
     def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -208,6 +191,18 @@ def _probe_qe_kernel(cmat, nprobe: int):
             })
 
     return probe
+
+
+def _probe(queries: DataFrame, cmat, nprobe: int):
+    """(per-query probe rows, their bounded collect): the frame stays
+    distributed for the oversized-batch path; the collect stops at
+    ``EMBEDDING_ROW_CAP + 1`` rows, so an unbounded query batch never
+    lands on the driver — callers test ``len(rows) > EMBEDDING_ROW_CAP``."""
+    probes = queries.mapInPandas(
+        _probe_qe_kernel(cmat, nprobe),
+        schema="query_id long, qe array<double>, clusters array<int>",
+    )
+    return probes, probes.limit(EMBEDDING_ROW_CAP + 1).collect()
 
 
 def build_ivfpq_index(spark: SparkSession, sf: str, index_dir: str) -> dict:
@@ -266,36 +261,31 @@ def ivfpq_query(spark: SparkSession, index_dir: str, queries: DataFrame,
 
     cmat = _centroid_matrix(spark, index_dir)
     books = _load_books(spark, index_dir)
-
-    q_probes = queries.mapInPandas(
-        _probe_kernel(cmat, nprobe), schema="query_id long, cluster int"
-    )
-    # ONE collect serves both the static IN partition filter (union of
-    # cells — what the SCAN reads) and the per-query probe map (what
-    # each query SCORES: its own nprobe cells only, so per-query ADC
-    # work stays O(nprobe cells) and is independent of batch makeup)
-    probe_rows = q_probes.collect()
+    # ONE bounded collect serves the static IN partition filter (union of
+    # cells — what the SCAN reads), the per-query probe map (what each
+    # query SCORES: its own nprobe cells only, so per-query ADC work
+    # stays O(nprobe cells) and is independent of batch makeup) and the
+    # query list the ADC tables are built from
+    _, qrows = _probe(queries, cmat, nprobe)
+    if len(qrows) > EMBEDDING_ROW_CAP:
+        raise ValueError(
+            f"ivfpq_query: query batch exceeds {EMBEDDING_ROW_CAP} rows — "
+            "split the batch (ADC closes over the query list)"
+        )
     probes: dict = {}
-    for r in probe_rows:
-        probes.setdefault(int(r["query_id"]), set()).add(int(r["cluster"]))
-    probed = sorted({int(r["cluster"]) for r in probe_rows})
+    for r in qrows:
+        probes.setdefault(int(r["query_id"]), set()).update(r["clusters"])
+    probed = sorted(set().union(*probes.values()))
     cells = _live_cells(spark, index_dir, probed)
-    qlist = [(r["query_id"], r["qe"]) for r in queries.collect()]
+    qlist = [(r["query_id"], r["qe"]) for r in qrows]
     cand = adc_topk(
         cells.select("cluster", "vec_id", "code"), qlist, books,
         topk=topk * refine, probes=probes,
     ).filter(F.col("neighbor_id") != F.col("query_id"))
-
-    qe = queries.select(F.col("query_id"), F.col("qe"))
-    dot = F.aggregate(
-        F.zip_with("qe", "ne", lambda a, b: a * b), F.lit(0.0), lambda acc, x: acc + x
-    )
-    nrm = lambda c: F.sqrt(F.aggregate(  # noqa: E731
-        F.zip_with(c, c, lambda a, b: a * b), F.lit(0.0), lambda acc, x: acc + x
-    ))
-    cos = dot / (nrm(F.col("qe")) * nrm(F.col("ne")))
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), "neighbor_id")
-    return (
+    # ≤ EMBEDDING_ROW_CAP rows (checked above) and JVM-side: a frame
+    # built from qlist would run a Python task per slice to broadcast
+    qe = queries.select("query_id", "qe")
+    pairs = (
         F.broadcast(cand.select("query_id", "neighbor_id"))
         .join(
             cells.select(F.col("vec_id").alias("neighbor_id"), F.col("emb").alias("ne")),
@@ -304,12 +294,8 @@ def ivfpq_query(spark: SparkSession, index_dir: str, queries: DataFrame,
         .distinct()  # duplicate assignment rows for one id must not
         # consume extra top-k rank slots (the ivf_index_query guard)
         .join(F.broadcast(qe), "query_id")
-        .select("query_id", "neighbor_id", cos.alias("cos"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= topk)
-        .select("query_id", "neighbor_id", "rank", F.round("cos", 6).alias("score"))
-        .orderBy("query_id", "rank")
     )
+    return rank_top_k(cosine_pairs(pairs), topk)
 
 
 def _load_books(spark: SparkSession, index_dir: str):
@@ -615,15 +601,14 @@ def _scored_candidates(spark: SparkSession, index_dir: str, queries: DataFrame,
     ``PartitionFilters`` pruning on the assignments scan), exact cosine
     within the pruned cells — scored by ONE vectorized Arrow kernel
     over the probed-cell scan (the bounded query batch rides the task
-    closure; numpy dim-indexed folds, bit-exact vs the interpreted
-    F.aggregate HOF it replaced in r15). Returns (query_id, neighbor_id,
-    cos) unranked — plus the qe/ne embedding columns when ``with_emb``
-    (only ``ivf_candidates`` needs them; everyone else projects them
-    away, and emitting two ~dim-double arrays per candidate through
-    Arrow costs more than the scoring, so the kernel emits only what
-    the caller reads — guide §4). ``_ranked_candidates`` adds the
-    per-query top-k window, ``ivf_range_search`` filters by threshold
-    instead.
+    closure; dot products through ``similarity.fold_dot``, the engine's
+    one fold order). Returns (query_id, neighbor_id, cos) unranked —
+    plus the qe/ne embedding columns when ``with_emb`` (only
+    ``ivf_candidates`` needs them; everyone else projects them away,
+    and emitting two ~dim-double arrays per candidate through Arrow
+    costs more than the scoring, so the kernel emits only what the
+    caller reads — guide §4). ``ivf_index_query`` adds the per-query
+    top-k window, ``ivf_range_search`` filters by threshold instead.
 
     ``allowed`` (optional, one ``vec_id`` column) is the attribute
     PRE-filter of filtered vector search (ss15/ss16): a semi-join
@@ -640,61 +625,34 @@ def _scored_candidates(spark: SparkSession, index_dir: str, queries: DataFrame,
     # ONE bounded collect — one row per query carrying the probe set AND
     # the query embedding — serves every driver-side consumer: the
     # probed-cell set (static IN partition filter), the query count, and
-    # the query batch the scoring kernel closes over. Bounded by
-    # EMBEDDING_ROW_CAP, the same cap the qe broadcast imposed (r15).
+    # the query batch the scoring kernel closes over.
+    probes, qrows = _probe(queries, cmat, nprobe)
+    if len(qrows) > EMBEDDING_ROW_CAP:
+        # oversized batch: stays distributed — no driver copy of the
+        # batch, no broadcast hints (the planner picks the shuffle
+        # strategies); executor-side probe pairs join the probed cells
+        # and the shared pair stage scores them
+        q_probes = probes.select("query_id", "qe", F.explode("clusters").alias("cluster"))
+        probed = sorted(
+            r["cluster"] for r in q_probes.select("cluster").distinct().collect()
+        )
+        cells = _live_cells(spark, index_dir, probed)
+        if allowed is not None:
+            cells = cells.join(allowed.select("vec_id"), "vec_id", "left_semi")
+        pairs = (
+            q_probes.join(cells, "cluster")
+            .filter(F.col("vec_id") != F.col("query_id"))
+            .select("query_id", "qe", F.col("vec_id").alias("neighbor_id"),
+                    F.col("emb").alias("ne"))
+            .distinct()
+        )
+        return cosine_pairs(pairs, with_emb=with_emb)
+
     out_schema = (
         "query_id long, qe array<double>, neighbor_id long, "
         "ne array<double>, cos double"
         if with_emb else "query_id long, neighbor_id long, cos double"
     )
-    qrows = (
-        queries.mapInPandas(_probe_qe_kernel(cmat, nprobe),
-                            schema="query_id long, qe array<double>, clusters array<int>")
-        .limit(EMBEDDING_ROW_CAP + 1)
-        .collect()
-    )
-    if len(qrows) > EMBEDDING_ROW_CAP:
-        # oversized batch: degraded path, shape unchanged from r14 (no
-        # driver copy, no hints, executor-side probe pairs + interpreted
-        # HOF scoring — the planner picks shuffle strategies)
-        probe_schema = "query_id long, cluster int"
-        q_probes = queries.mapInPandas(_probe_kernel(cmat, nprobe), schema=probe_schema)
-        probed = sorted({
-            r["cluster"]
-            for r in q_probes.select("cluster").distinct().collect()
-        })
-        cells = _live_cells(spark, index_dir, probed)
-        if allowed is not None:
-            cells = cells.join(allowed.select("vec_id"), "vec_id", "left_semi")
-        n_q = queries.limit(EMBEDDING_ROW_CAP + 1).count()
-        probe_cap = EMBEDDING_ROW_CAP * nprobe
-        cand = (
-            bounded_broadcast(
-                q_probes, max_rows=probe_cap,
-                n_rows=n_q * nprobe,  # > probe_cap → the guard drops the hint
-                label="ivf-serve q_probes",
-            )
-            .join(cells, "cluster")
-            .filter(F.col("vec_id") != F.col("query_id"))
-            .select("query_id", F.col("vec_id").alias("neighbor_id"), F.col("emb").alias("ne"))
-            .distinct()
-        )
-        qe = queries.select("query_id", "qe")
-        dot = F.aggregate(
-            F.zip_with("qe", "ne", lambda a, b: a * b), F.lit(0.0), lambda acc, x: acc + x
-        )
-        nrm = lambda c: F.sqrt(F.aggregate(  # noqa: E731
-            F.zip_with(c, c, lambda a, b: a * b), F.lit(0.0), lambda acc, x: acc + x
-        ))
-        cos = dot / (nrm(F.col("qe")) * nrm(F.col("ne")))
-        scored = cand.join(
-            bounded_broadcast(qe, max_rows=EMBEDDING_ROW_CAP, n_rows=n_q,
-                              label="ivf-serve qe"),
-            "query_id",
-        ).select("query_id", "qe", "neighbor_id", "ne", cos.alias("cos"))
-        return scored if with_emb else scored.select(
-            "query_id", "neighbor_id", "cos")
-
     if not qrows:
         return spark.createDataFrame([], out_schema)
     probed = sorted({int(c) for r in qrows for c in r["clusters"]})
@@ -720,36 +678,22 @@ def _scored_candidates(spark: SparkSession, index_dir: str, queries: DataFrame,
     # list-values by buffer copy; lists of Python floats convert
     # element-wise and dominated the kernel's cost in the wide form)
     qe_rows = list(qmat)
-    dim = qmat.shape[1]
     # per-query probed-cell membership as a (k, n_q) bool mask
     pmask = np.zeros((cmat.shape[0], n_q), dtype=bool)
     for qi, r in enumerate(qrows):
         for c in r["clusters"]:
             pmask[int(c), qi] = True
-    # Dim-indexed sequential folds — acc += a_j*b_j per step in float64,
-    # BIT-EXACT vs the interpreted F.aggregate HOF this kernel replaces
-    # (left-to-right fold order preserved per pair; the ss19 r14
-    # precedent). np.dot would use pairwise/SIMD summation and can flip
-    # last-ulp ties that the rank window then amplifies.
-    qq = np.zeros(n_q)
-    for j in range(dim):
-        qq += qmat[:, j] * qmat[:, j]
+    qq = fold_dot(qmat, qmat)
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            n = len(pdf)
-            if n == 0:
+            if len(pdf) == 0:
                 continue
             mat = np.asarray(list(pdf["emb"]), dtype=np.float64)
-            dot = np.zeros((n, n_q))
-            cc = np.zeros(n)
-            for j in range(dim):
-                cj = mat[:, j]
-                dot += cj[:, None] * qmat[:, j][None, :]
-                cc += cj * cj
-            # Multiply(sqrt(nn), sqrt(qq)) then Divide — elementwise
-            # identical to the HOF's nrm(qe) * nrm(ne) denominator
-            cos = dot / (np.sqrt(cc)[:, None] * np.sqrt(qq)[None, :])
+            # the pair stage's dot / (sqrt(nn)·sqrt(qq)), elementwise
+            # identical to cosine_pairs on the same (query, neighbor)
+            cos = fold_dot(mat[:, None, :], qmat[None, :, :]) / (
+                np.sqrt(fold_dot(mat, mat))[:, None] * np.sqrt(qq)[None, :])
             ids = pdf["vec_id"].to_numpy(dtype=np.int64)
             ok = pmask[pdf["cluster"].to_numpy(dtype=np.int64)] & (
                 ids[:, None] != qids[None, :]
@@ -765,22 +709,6 @@ def _scored_candidates(spark: SparkSession, index_dir: str, queries: DataFrame,
             yield pd.DataFrame(cols)
 
     return corpus.mapInPandas(score, schema=out_schema)
-
-
-def _ranked_candidates(spark: SparkSession, index_dir: str, queries: DataFrame,
-                       nprobe: int, limit: int,
-                       allowed: DataFrame | None = None,
-                       with_emb: bool = False) -> DataFrame:
-    """``_scored_candidates`` + the per-query WindowGroupLimit rank ≤
-    limit. Returns (query_id, neighbor_id, cos, rank), plus qe/ne when
-    ``with_emb``."""
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), "neighbor_id")
-    return (
-        _scored_candidates(spark, index_dir, queries, nprobe, allowed=allowed,
-                           with_emb=with_emb)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= limit)
-    )
 
 
 def ivf_range_search(spark: SparkSession, index_dir: str, queries: DataFrame,
@@ -815,22 +743,25 @@ def ivf_candidates(spark: SparkSession, index_dir: str, queries: DataFrame,
     with partition-pruned cell reads. This is the candidate stage the
     MMR re-ranker (ss9) plugs in for its brute-force corpus scan: at
     corpus scale the scan reads only the probed cells' files."""
-    return _ranked_candidates(
-        spark, index_dir, queries, nprobe, cand_k, with_emb=True
-    ).select("query_id", "qe", "neighbor_id", F.col("ne").alias("emb"))
+    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), "neighbor_id")
+    return (
+        _scored_candidates(spark, index_dir, queries, nprobe, with_emb=True)
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= cand_k)
+        .select("query_id", "qe", "neighbor_id", F.col("ne").alias("emb"))
+    )
 
 
 def ivf_index_query(spark: SparkSession, index_dir: str, queries: DataFrame,
                     nprobe: int = IVF_NPROBE, topk: int = TOP_K,
                     allowed: DataFrame | None = None) -> DataFrame:
     """Top-k cosine neighbors for ``queries`` (``query_id``, ``qe``)
-    against a built index — the shared ``_ranked_candidates`` serve
-    stage with the embeddings projected away. ``allowed`` turns it
-    into the FILTERED serve (ss16): the attribute predicate is a
+    against a built index — the shared ``_scored_candidates`` serve
+    stage under the per-query WindowGroupLimit rank. ``allowed`` turns
+    it into the FILTERED serve (ss16): the attribute predicate is a
     semi-join inside the probed-cell read, before the distance kernel
     (see ``_scored_candidates``)."""
-    return (
-        _ranked_candidates(spark, index_dir, queries, nprobe, topk, allowed=allowed)
-        .select("query_id", "neighbor_id", "rank", F.round("cos", 6).alias("score"))
-        .orderBy("query_id", "rank")
+    return rank_top_k(
+        _scored_candidates(spark, index_dir, queries, nprobe, allowed=allowed),
+        topk,
     )

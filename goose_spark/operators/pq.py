@@ -32,7 +32,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from goose_spark.operators.similarity import _DIM, _embeddings, N_QUERIES, TOP_K
+from goose_spark.operators.similarity import (
+    _DIM,
+    N_QUERIES,
+    TOP_K,
+    _embeddings,
+    cosine_pairs,
+    rank_top_k,
+)
 from goose_spark.queries.base import register
 
 PQ_M = 8  # subspaces (codes per vector = bytes per vector)
@@ -247,19 +254,9 @@ def ss6(spark: SparkSession, sf: str) -> DataFrame:
         "query_id long, qe array<double>",
     )
     ne = v.select(F.col("vec_id").alias("neighbor_id"), F.col("emb").alias("ne"))
-    from goose_spark.operators.similarity import _dot
-
-    cos = _dot("qe", "ne") / F.sqrt(
-        _dot(F.col("qe"), F.col("qe")) * _dot(F.col("ne"), F.col("ne"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), "neighbor_id")
-    return (
+    pairs = (
         F.broadcast(cand.select("query_id", "neighbor_id"))
         .join(ne, "neighbor_id")
         .join(F.broadcast(qdf), "query_id")
-        .select("query_id", "neighbor_id", cos.alias("cos"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "rank", F.round("cos", 6).alias("score"))
-        .orderBy("query_id", "rank")
     )
+    return rank_top_k(cosine_pairs(pairs), TOP_K)

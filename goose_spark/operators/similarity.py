@@ -46,6 +46,63 @@ def _dot(x, y):
     return F.aggregate(F.zip_with(x, y, lambda a, b: a * b), F.lit(0.0), lambda s, v: s + v)
 
 
+def fold_dot(x: np.ndarray, y: np.ndarray) -> np.ndarray:
+    """Dot products over the last axis as ONE left-to-right float64 fold,
+    ``acc += x[..., j] * y[..., j]`` — bit-exact vs ``_dot``'s
+    ``F.aggregate`` and DuckDB's ``list_dot_product`` (np.dot would use
+    pairwise/SIMD summation and can flip last-ulp ties that a rank
+    window then amplifies). Broadcasts over the leading axes: row-wise
+    pairs are ``fold_dot(a, b)``, a corpus × query matrix is
+    ``fold_dot(mat[:, None, :], qmat[None, :, :])``. The one place the
+    engine's exact-cosine fold order lives."""
+    acc = np.zeros(np.broadcast_shapes(x.shape[:-1], y.shape[:-1]))
+    for j in range(x.shape[-1]):
+        acc += x[..., j] * y[..., j]
+    return acc
+
+
+def cosine_pairs(pairs: DataFrame, with_emb: bool = False) -> DataFrame:
+    """The one pair-scoring stage: (query_id, qe, neighbor_id, ne) rows →
+    (query_id, neighbor_id, cos) with ``cos = dot / (sqrt(qq)·sqrt(nn))``
+    over ``fold_dot``, one Arrow batch at a time. Every re-rank / refine
+    over an explicit candidate list runs through it (IVF+PQ and PQ
+    refine, SQ8 re-rank, the oversized IVF serve). ``with_emb`` passes
+    ``qe``/``ne`` through for callers that read them; the rest skip
+    shipping two dim-double arrays per pair back through Arrow."""
+    schema = (
+        "query_id long, qe array<double>, neighbor_id long, ne array<double>, cos double"
+        if with_emb else "query_id long, neighbor_id long, cos double"
+    )
+
+    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            q = np.asarray(list(pdf["qe"]), dtype=np.float64)
+            n = np.asarray(list(pdf["ne"]), dtype=np.float64)
+            cols = {c: pdf[c] for c in ("query_id", "qe", "neighbor_id", "ne")
+                    if with_emb or c.endswith("_id")}
+            cols["cos"] = fold_dot(q, n) / (
+                np.sqrt(fold_dot(q, q)) * np.sqrt(fold_dot(n, n)))
+            yield pd.DataFrame(cols)
+
+    return pairs.select("query_id", "qe", "neighbor_id", "ne").mapInPandas(
+        score, schema=schema)
+
+
+def rank_top_k(scored: DataFrame, k: int) -> DataFrame:
+    """(query_id, neighbor_id, cos) → the serve family's result rows
+    (query_id, neighbor_id, rank, score): per-query WindowGroupLimit
+    rank by (cos desc, neighbor_id), cut to ``k``, score rounded to 6."""
+    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), "neighbor_id")
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank", F.round("cos", 6).alias("score"))
+        .orderBy("query_id", "rank")
+    )
+
+
 def _as_double(col):
     return F.transform(col, lambda v: v.cast("double"))
 
@@ -108,13 +165,7 @@ def ss1(spark: SparkSession, sf: str) -> DataFrame:
         .filter(F.col("vec_id") != F.col("query_id"))
         .select("query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cos"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "rank", F.round("cos", 6).alias("score"))
-        .orderBy("query_id", "rank")
-    )
+    return rank_top_k(scored, TOP_K)
 
 
 # ---------------------------------------------------------------------------
@@ -187,16 +238,12 @@ def ss2(spark: SparkSession, sf: str) -> DataFrame:
     cos = _dot(F.col("qe"), F.col("ne")) / F.sqrt(
         _dot(F.col("qe"), F.col("qe")) * _dot(F.col("ne"), F.col("ne"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), "neighbor_id")
-    return (
+    return rank_top_k(
         cand.join(bounded_broadcast(qe, max_rows=EMBEDDING_ROW_CAP, n_rows=N_QUERIES,
                                      label="qe"), "query_id")
         .join(ne, "neighbor_id")
-        .select("query_id", "neighbor_id", cos.alias("cos"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "rank", F.round("cos", 6).alias("score"))
-        .orderBy("query_id", "rank")
+        .select("query_id", "neighbor_id", cos.alias("cos")),
+        TOP_K,
     )
 
 
@@ -337,16 +384,12 @@ def ss3(spark: SparkSession, sf: str) -> DataFrame:
     cos = _dot(F.col("qe"), F.col("ne")) / F.sqrt(
         _dot(F.col("qe"), F.col("qe")) * _dot(F.col("ne"), F.col("ne"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), "neighbor_id")
-    return (
+    return rank_top_k(
         cand.join(bounded_broadcast(qe, max_rows=EMBEDDING_ROW_CAP, n_rows=N_QUERIES,
                                      label="qe"), "query_id")
         .join(ne, "neighbor_id")
-        .select("query_id", "neighbor_id", cos.alias("cos"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "rank", F.round("cos", 6).alias("score"))
-        .orderBy("query_id", "rank")
+        .select("query_id", "neighbor_id", cos.alias("cos")),
+        TOP_K,
     )
 
 
@@ -587,17 +630,13 @@ def ss15(spark: SparkSession, sf: str) -> DataFrame:
     cos = _dot(F.col("qe"), F.col("emb")) / F.sqrt(
         _dot(F.col("qe"), F.col("qe")) * _dot(F.col("emb"), F.col("emb"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), "neighbor_id")
-    return (
+    return rank_top_k(
         bounded_broadcast(q, max_rows=EMBEDDING_ROW_CAP, n_rows=N_QUERIES,
                           label="ss15 queries")
         .crossJoin(corpus)
         .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cos"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "rank", F.round("cos", 6).alias("score"))
-        .orderBy("query_id", "rank")
+        .select("query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cos")),
+        TOP_K,
     )
 
 
@@ -793,15 +832,11 @@ def ss19(spark: SparkSession, sf: str) -> DataFrame:
         qids = np.array([r.vec_id for r in qrows], dtype=np.int64)
         qlab = np.array([r.label for r in qrows], dtype=np.int32)
         qmat = np.array([r.emb for r in qrows], dtype=np.float64)
-        nq, dim = qmat.shape
-        # Dim-indexed sequential folds: acc = acc + (a_j * b_j) per
-        # step in float64 — BIT-EXACT to F.aggregate's left-to-right
-        # fold (and to DuckDB's list_dot_product), so ranks and the
-        # rounded scores match the oracle to the last ulp. np.dot would
-        # use pairwise/SIMD summation and can flip last-ulp ties.
-        qq = np.zeros(nq)
-        for j in range(dim):
-            qq += qmat[:, j] * qmat[:, j]
+        nq = len(qmat)
+        # fold_dot: bit-exact to DuckDB's list_dot_product, so ranks and
+        # the rounded scores match the oracle to the last ulp; the
+        # denominator keeps the oracle's sqrt(cc·qq) form
+        qq = fold_dot(qmat, qmat)
 
         def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:
@@ -809,12 +844,8 @@ def ss19(spark: SparkSession, sf: str) -> DataFrame:
                 if n == 0:
                     continue
                 mat = np.array(list(pdf["emb"]), dtype=np.float64)
-                dot = np.zeros((n, nq))
-                cc = np.zeros(n)
-                for j in range(dim):
-                    cj = mat[:, j]
-                    dot += cj[:, None] * qmat[:, j][None, :]
-                    cc += cj * cj
+                dot = fold_dot(mat[:, None, :], qmat[None, :, :])
+                cc = fold_dot(mat, mat)
                 cos = dot / np.sqrt(cc[:, None] * qq[None, :])
                 nid = pdf["vec_id"].to_numpy(dtype=np.int64)
                 lbl = pdf["label"].to_numpy(dtype=np.int32)

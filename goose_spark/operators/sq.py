@@ -34,8 +34,10 @@ from goose_spark.operators.similarity import (
     _DIM,
     N_QUERIES,
     TOP_K,
-    _dot,
     _embeddings,
+    cosine_pairs,
+    fold_dot,
+    rank_top_k,
 )
 from goose_spark.queries.base import register
 
@@ -47,13 +49,15 @@ _SQ_PARAMS_CACHE: dict = {}
 
 def train_sq_params(v: DataFrame) -> tuple[list, list]:
     """Per-dimension (min, max) over the L2-NORMALIZED corpus — the SQ8
-    codebook. One aggregate, 2×dim doubles of driver traffic."""
-    # zero-norm clamp mirrors _unit_rows: an all-zero embedding trains
-    # as a zero row instead of poisoning min/max with 0/0 NaN
-    raw = F.sqrt(_dot(F.col("emb"), F.col("emb")))
-    norm = F.when(raw > 0, raw).otherwise(F.lit(1.0))
-    unit = F.transform(F.col("emb"), lambda x: x / norm)
-    row = v.select(unit.alias("u")).agg(
+    codebook. One Arrow normalize pass under one aggregate, 2×dim
+    doubles of driver traffic."""
+
+    def unit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            mat = np.asarray(list(pdf["emb"]), dtype=np.float64)
+            yield pd.DataFrame({"u": list(_unit_rows(mat))})
+
+    row = v.mapInPandas(unit, schema="u array<double>").agg(
         *[F.min(F.col("u")[i]).alias(f"mn{i}") for i in range(_DIM)],
         *[F.max(F.col("u")[i]).alias(f"mx{i}") for i in range(_DIM)],
     ).collect()[0]
@@ -78,11 +82,12 @@ def sq_encode(mat: np.ndarray, mn: np.ndarray, mx: np.ndarray) -> np.ndarray:
 
 
 def _unit_rows(mat: np.ndarray) -> np.ndarray:
-    """L2-normalize rows with a zero-norm clamp (ADVICE r13): an
-    all-zero embedding must yield a zero row, not NaN scores that
-    propagate into the window rank nondeterministically — the same
-    guard shape as sq_encode's span>0 clamp."""
-    n = np.linalg.norm(mat, axis=1, keepdims=True)
+    """L2-normalize rows (norm through ``fold_dot``) with a zero-norm
+    clamp (ADVICE r13): an all-zero embedding must yield a zero row,
+    not NaN scores that propagate into the window rank
+    nondeterministically — the same guard shape as sq_encode's span>0
+    clamp. The one normalization training, encoding and queries share."""
+    n = np.sqrt(fold_dot(mat, mat))[:, None]
     return mat / np.where(n > 0, n, 1.0)
 
 
@@ -150,16 +155,6 @@ def ss18(spark: SparkSession, sf: str) -> DataFrame:
         )
     )
     nv = v.select(F.col("vec_id").alias("neighbor_id"), F.col("emb").alias("ne"))
-    cos = _dot(F.col("qe"), F.col("ne")) / F.sqrt(
-        _dot(F.col("ne"), F.col("ne"))
-    )  # qe is already unit-norm
-    w2 = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), "neighbor_id")
-    return (
-        head.join(qdf, "query_id")
-        .join(nv, "neighbor_id")
-        .select("query_id", "neighbor_id", cos.alias("cos"))
-        .withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "rank", F.round("cos", 6).alias("score"))
-        .orderBy("query_id", "rank")
+    return rank_top_k(
+        cosine_pairs(head.join(qdf, "query_id").join(nv, "neighbor_id")), TOP_K
     )

@@ -23,7 +23,7 @@ from goose_spark.operators.annindex import (
     ivfpq_query,
 )
 from goose_spark.operators.similarity import _embeddings, N_QUERIES
-from tests.conftest import SF_CORRECT
+from tests.conftest import SF_CORRECT, SF_SMOKE
 import pytest
 
 
@@ -369,3 +369,47 @@ def test_inplace_rebuild_invalidates_cached_quantizers(spark, tmp_path):
     assert man1["version"] == man0["version"] + 1
     m1 = _centroid_matrix(spark, idx)  # must see the NEW quantizer
     assert m1[0].tolist() == [1.0, 1.0]
+
+
+def _smoke_queries(spark, n):
+    v = _embeddings(spark, SF_SMOKE)
+    return v.filter(F.col("vec_id") < n).select(
+        F.col("vec_id").alias("query_id"), F.col("emb").alias("qe")
+    )
+
+
+def test_ivfpq_query_rejects_batch_over_cap(spark, tmp_path, monkeypatch):
+    """ADC builds its per-query tables from the query list in the
+    driver, so ivfpq_query collects the batch bounded by
+    EMBEDDING_ROW_CAP and refuses a larger one instead of pulling it in."""
+    import goose_spark.operators.annindex as ai
+
+    idx = str(tmp_path / "ivfpq")
+    build_ivfpq_index(spark, SF_SMOKE, idx)
+    q = _smoke_queries(spark, 5)
+    assert ivfpq_query(spark, idx, q).count() > 0
+    monkeypatch.setattr(ai, "EMBEDDING_ROW_CAP", 4)  # 5 queries > cap
+    with pytest.raises(ValueError, match="exceeds 4 rows"):
+        ivfpq_query(spark, idx, q)
+
+
+def test_ivfpq_serve_job_budget(spark):
+    """ss7's serve runs one probe collect (probe map, probed cells and
+    query list together) instead of two unbounded collects: at most 10
+    Spark jobs at sf0.001 with the index and codebooks already built
+    (11 with the separate probe and query collects)."""
+    from goose_spark.queries import load_all
+
+    ss7 = load_all()["ss7_ann_ivfpq"].builder
+    want = [tuple(r) for r in ss7(spark, SF_SMOKE).collect()]  # builds the index
+    sc = spark.sparkContext
+    group = "test-ss7-job-budget"
+    sc.setJobGroup(group, "ss7 job budget")
+    try:
+        got = [tuple(r) for r in ss7(spark, SF_SMOKE).collect()]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert got == want and len(got) > 0
+    assert 0 < len(jobs) <= 10, sorted(jobs)

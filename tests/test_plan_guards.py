@@ -10,18 +10,22 @@ from pyspark.sql import functions as F
 
 from goose_spark.plans.guards import bounded_broadcast
 from goose_spark.plans.inspect import physical_plan
+from tests.conftest import SF_SMOKE
 
-# excluded from the DEFAULT pytest run (pytest.ini deselects
-# 'slowsuite' so 'python -m pytest tests/ -x -q' completes inside
-# the grading driver's window — r15 directive 5); tools/partest.py
-# and 'pytest -m ""' still run it
-pytestmark = pytest.mark.slowsuite
+# Every test but the oversized IVF serve check is excluded from the
+# DEFAULT pytest run (pytest.ini deselects 'slowsuite' so
+# 'python -m pytest tests/ -x -q' completes inside the grading driver's
+# window — r15 directive 5); tools/partest.py and 'pytest -m ""' still
+# run them. The serve check is per-test unmarked so the serve family's
+# degraded path is in the default gate.
+slow = pytest.mark.slowsuite
 
 
 def _analyzed(df) -> str:
     return df._jdf.queryExecution().analyzed().toString()
 
 
+@slow
 def test_under_cap_hints_and_broadcasts(spark):
     small = spark.range(10).withColumnRenamed("id", "k")
     big = spark.range(10_000).withColumn("k", F.pmod("id", F.lit(10)))
@@ -40,6 +44,7 @@ def test_under_cap_hints_and_broadcasts(spark):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
+@slow
 def test_over_cap_drops_hint_and_degrades_to_shuffle(spark):
     """The cliff case: a frame over the cap gets NO hint (the helper
     returns it unchanged), so with auto-broadcast off the join plans a
@@ -64,6 +69,7 @@ def test_over_cap_drops_hint_and_degrades_to_shuffle(spark):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
+@slow
 def test_known_cardinality_skips_the_count_job(spark):
     calls = {"n": 0}
 
@@ -84,29 +90,37 @@ def test_known_cardinality_skips_the_count_job(spark):
     assert "ResolvedHint" in _analyzed(out.join(spark.range(20), "id"))
 
 
-def test_ivf_serve_with_oversized_query_batch_matches(spark, tmp_path, monkeypatch):
-    """An IVF serve call with a query batch over the (monkeypatched)
-    cap must fall back to un-hinted joins and return exactly the rows
-    the hinted path returns."""
+_SERVES = {
+    "top_k": lambda ai, spark, idx, q: ai.ivf_index_query(spark, idx, q),
+    "range": lambda ai, spark, idx, q: ai.ivf_range_search(spark, idx, q, tau=0.25),
+    "candidates": lambda ai, spark, idx, q: ai.ivf_candidates(spark, idx, q),
+    "top_k_allowed": lambda ai, spark, idx, q: ai.ivf_index_query(
+        spark, idx, q, allowed=spark.range(0, 10**6, 2).withColumnRenamed("id", "vec_id")),
+}
+
+
+@pytest.mark.parametrize("serve", sorted(_SERVES))
+def test_ivf_serve_with_oversized_query_batch_matches(spark, monkeypatch, serve):
+    """Every IVF serve with a query batch over the (monkeypatched) cap
+    takes the distributed path — no driver copy of the batch, un-hinted
+    joins, the shared pair-scoring stage — and returns exactly the rows
+    of the under-cap in-cell kernel. Runs in the default gate."""
     import goose_spark.operators.annindex as ai
-    from goose_spark.operators.annindex import build_ivf_index, ivf_index_query
+    from goose_spark.operators.similarity import _embeddings, ivf_index_for
 
-    sf = "/root/testdata/sf0.001"
-    idx = str(tmp_path / "idx")
-    build_ivf_index(spark, sf, idx)
-    from goose_spark.operators.similarity import _embeddings
-
+    idx = ivf_index_for(spark, SF_SMOKE)
     q = (
-        _embeddings(spark, sf)
+        _embeddings(spark, SF_SMOKE)
         .filter(F.col("vec_id") < 10)
         .select(F.col("vec_id").alias("query_id"), F.col("emb").alias("qe"))
     )
-    want = sorted(map(tuple, ivf_index_query(spark, idx, q).collect()))
+    want = sorted(map(tuple, _SERVES[serve](ai, spark, idx, q).collect()))
     monkeypatch.setattr(ai, "EMBEDDING_ROW_CAP", 3)  # 10 queries > cap
-    got = sorted(map(tuple, ivf_index_query(spark, idx, q).collect()))
+    got = sorted(map(tuple, _SERVES[serve](ai, spark, idx, q).collect()))
     assert got == want and len(got) > 0
 
 
+@slow
 @pytest.mark.parametrize("n_rows", [None, 7])
 def test_over_cap_via_count_or_hint(spark, n_rows):
     df = spark.range(7)
@@ -114,6 +128,7 @@ def test_over_cap_via_count_or_hint(spark, n_rows):
     assert out is df
 
 
+@slow
 def test_oversized_ingest_batch_degrades_to_shuffle(spark, tmp_path, monkeypatch):
     """Round-10 directive #2: the corpus-ingest hint sites (probe/hits
     anti-join, benchmark-gram decontamination, against-history band join,
@@ -160,6 +175,7 @@ def test_oversized_ingest_batch_degrades_to_shuffle(spark, tmp_path, monkeypatch
     assert want_stats["exact_dups"] == 1 and want_stats["contaminated"] >= 1
 
 
+@slow
 def test_persist_shared_materializes_and_keeps_lineage(spark):
     """persist_shared returns a cached, recomputable frame with the same
     rows; sweep callers drop it between queries via release_shared()."""
@@ -175,6 +191,7 @@ def test_persist_shared_materializes_and_keeps_lineage(spark):
     assert not out.storageLevel.useMemory or out.count() == 100
 
 
+@slow
 def test_local_relation_roundtrip_and_cap(spark):
     """local_relation rebuilds a tiny frame as a driver-local relation
     (schema + values exact, incl. decimals) and REFUSES unbounded ones."""
@@ -201,6 +218,7 @@ def test_local_relation_roundtrip_and_cap(spark):
         local_relation(spark.range(50), max_rows=10)
 
 
+@slow
 def test_release_shared_drops_only_tracked_frames(spark):
     """release_shared unpersists exactly the persist_shared frames —
     session-level caches other code persisted deliberately (the dedup
@@ -219,6 +237,7 @@ def test_release_shared_drops_only_tracked_frames(spark):
     assert release_shared() == 0  # list drained
 
 
+@slow
 def test_tree_counts_count_cached_build_once(spark):
     """tree_counts walks the plan tree: a persisted frame scanned N
     times contributes its build-plan exchanges ONCE (execution builds

@@ -4,6 +4,7 @@ it, so the recall bar lives here)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from goose_spark.queries import load_all
@@ -363,3 +364,42 @@ def test_indexed_label_propagation_agrees_with_exact(spark):
     assert set(served) == set(exact), "every query must be predicted"
     agree = sum(1 for k in exact if served[k] == exact[k]) / len(exact)
     assert agree >= 0.55, f"agreement {agree:.2f} below floor"
+
+
+@pytest.mark.parametrize("shape", ["pair", "matrix"])
+def test_fold_dot_bit_exact_vs_spark_and_duckdb(spark, shape):
+    """``fold_dot`` is the engine's one exact-cosine fold: it must equal
+    Spark's ``_dot`` HOF (the serve family's byte-identity) and DuckDB's
+    ``list_dot_product`` (ss19's hash oracle) to the last bit."""
+    import duckdb
+    import numpy as np
+    import pandas as pd
+
+    from goose_spark.operators.similarity import _dot, fold_dot
+
+    rng = np.random.default_rng(20201)
+    a = rng.standard_normal((12, 64)) * rng.uniform(0.01, 100.0, (12, 1))
+    b = rng.standard_normal((7, 64))
+    if shape == "pair":
+        left, right = a[:7], b
+        pairs = [(i, i) for i in range(7)]
+        got = fold_dot(left, right)
+    else:
+        left, right = a, b
+        pairs = [(i, j) for i in range(12) for j in range(7)]
+        got = fold_dot(a[:, None, :], b[None, :, :])
+    rows = [(i, j, left[i].tolist(), right[j].tolist()) for i, j in pairs]
+    df = spark.createDataFrame(rows, "i int, j int, x array<double>, y array<double>")
+    hof = {(r["i"], r["j"]): r["d"]
+           for r in df.select("i", "j", _dot(F.col("x"), F.col("y")).alias("d")).collect()}
+    con = duckdb.connect()
+    con.register("pairs", pd.DataFrame(rows, columns=["i", "j", "x", "y"]))
+    duck = {(i, j): d for i, j, d in con.execute(
+        "SELECT i, j, list_dot_product(x::DOUBLE[], y::DOUBLE[]) FROM pairs").fetchall()}
+    con.close()
+    for i, j in pairs:
+        g = float(got[i] if shape == "pair" else got[i, j])
+        assert g.hex() == hof[i, j].hex() == duck[i, j].hex(), (i, j)
+    # the fold is not np.dot: on these inputs a pairwise sum differs in
+    # at least one last bit, so the test would notice a swap
+    assert any(float(np.dot(left[i], right[j])) != hof[i, j] for i, j in pairs)

@@ -7,7 +7,7 @@ exact-cosine refine of topk×refine candidates).
 
 The arithmetic mirrors the production kernels EXACTLY — same plane seed
 and packbits banding as ``similarity._band_signatures``, same
-``x @ c - 0.5·|c|²`` scoring as ``similarity._assign``/``_probe_kernel``
+``x @ c - 0.5·|c|²`` scoring as ``similarity._assign``/``annindex._probe_qe_kernel``
 — and the IVF centroids come from the real trainer via one Spark call
 (``similarity.trained_ivf``), so the curve is the query path's recall,
 not a lookalike's. Ground truth is exact cosine top-k (numpy, float64,
@@ -91,7 +91,7 @@ def _wide_key(chunk: np.ndarray) -> np.ndarray:
 
 
 def ivf_recall(mat: np.ndarray, truth, cmat: np.ndarray, nprobe: int):
-    """Mirror _assign/_probe_kernel scoring exactly."""
+    """Mirror _assign/annindex._probe_qe_kernel scoring exactly."""
     scores = mat @ cmat.T - 0.5 * (cmat * cmat).sum(axis=1)[None, :]
     assign = scores.argmax(axis=1)
     unit = mat / np.maximum(np.linalg.norm(mat, axis=1), 1e-12)[:, None]
