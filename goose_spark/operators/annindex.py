@@ -29,7 +29,7 @@ from goose_spark.operators.similarity import (
     _DIM,
     _embeddings,
     _train_ivf,  # noqa: F401 — re-exported for cold-build tests
-    cosine_pairs,
+    cosine,
     fold_dot,
     rank_top_k,
     trained_ivf,
@@ -285,7 +285,7 @@ def ivfpq_query(spark: SparkSession, index_dir: str, queries: DataFrame,
     # ≤ EMBEDDING_ROW_CAP rows (checked above) and JVM-side: a frame
     # built from qlist would run a Python task per slice to broadcast
     qe = queries.select("query_id", "qe")
-    pairs = (
+    scored = (
         F.broadcast(cand.select("query_id", "neighbor_id"))
         .join(
             cells.select(F.col("vec_id").alias("neighbor_id"), F.col("emb").alias("ne")),
@@ -294,8 +294,9 @@ def ivfpq_query(spark: SparkSession, index_dir: str, queries: DataFrame,
         .distinct()  # duplicate assignment rows for one id must not
         # consume extra top-k rank slots (the ivf_index_query guard)
         .join(F.broadcast(qe), "query_id")
+        .select("query_id", "neighbor_id", cosine("qe", "ne").alias("cos"))
     )
-    return rank_top_k(cosine_pairs(pairs), topk)
+    return rank_top_k(scored, topk)
 
 
 def _load_books(spark: SparkSession, index_dir: str):
@@ -630,23 +631,26 @@ def _scored_candidates(spark: SparkSession, index_dir: str, queries: DataFrame,
     if len(qrows) > EMBEDDING_ROW_CAP:
         # oversized batch: stays distributed — no driver copy of the
         # batch, no broadcast hints (the planner picks the shuffle
-        # strategies); executor-side probe pairs join the probed cells
-        # and the shared pair stage scores them
-        q_probes = probes.select("query_id", "qe", F.explode("clusters").alias("cluster"))
+        # strategies); executor-side (query, cell) probe pairs join the
+        # probed cells, and qe joins back once per distinct candidate
+        q_probes = probes.select("query_id", F.explode("clusters").alias("cluster"))
         probed = sorted(
             r["cluster"] for r in q_probes.select("cluster").distinct().collect()
         )
         cells = _live_cells(spark, index_dir, probed)
         if allowed is not None:
             cells = cells.join(allowed.select("vec_id"), "vec_id", "left_semi")
-        pairs = (
+        scored = (
             q_probes.join(cells, "cluster")
             .filter(F.col("vec_id") != F.col("query_id"))
-            .select("query_id", "qe", F.col("vec_id").alias("neighbor_id"),
+            .select("query_id", F.col("vec_id").alias("neighbor_id"),
                     F.col("emb").alias("ne"))
             .distinct()
+            .join(queries.select("query_id", "qe"), "query_id")
+            .select("query_id", "qe", "neighbor_id", "ne",
+                    cosine("qe", "ne").alias("cos"))
         )
-        return cosine_pairs(pairs, with_emb=with_emb)
+        return scored if with_emb else scored.select("query_id", "neighbor_id", "cos")
 
     out_schema = (
         "query_id long, qe array<double>, neighbor_id long, "
@@ -690,8 +694,8 @@ def _scored_candidates(spark: SparkSession, index_dir: str, queries: DataFrame,
             if len(pdf) == 0:
                 continue
             mat = np.asarray(list(pdf["emb"]), dtype=np.float64)
-            # the pair stage's dot / (sqrt(nn)·sqrt(qq)), elementwise
-            # identical to cosine_pairs on the same (query, neighbor)
+            # dot / (sqrt(nn)·sqrt(qq)), elementwise identical to
+            # similarity.cosine on the same (query, neighbor)
             cos = fold_dot(mat[:, None, :], qmat[None, :, :]) / (
                 np.sqrt(fold_dot(mat, mat))[:, None] * np.sqrt(qq)[None, :])
             ids = pdf["vec_id"].to_numpy(dtype=np.int64)

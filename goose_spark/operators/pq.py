@@ -37,7 +37,7 @@ from goose_spark.operators.similarity import (
     N_QUERIES,
     TOP_K,
     _embeddings,
-    cosine_pairs,
+    cosine,
     rank_top_k,
 )
 from goose_spark.queries.base import register
@@ -254,9 +254,10 @@ def ss6(spark: SparkSession, sf: str) -> DataFrame:
         "query_id long, qe array<double>",
     )
     ne = v.select(F.col("vec_id").alias("neighbor_id"), F.col("emb").alias("ne"))
-    pairs = (
+    scored = (
         F.broadcast(cand.select("query_id", "neighbor_id"))
         .join(ne, "neighbor_id")
         .join(F.broadcast(qdf), "query_id")
+        .select("query_id", "neighbor_id", cosine("qe", "ne").alias("cos"))
     )
-    return rank_top_k(cosine_pairs(pairs), TOP_K)
+    return rank_top_k(scored, TOP_K)

@@ -61,33 +61,13 @@ def fold_dot(x: np.ndarray, y: np.ndarray) -> np.ndarray:
     return acc
 
 
-def cosine_pairs(pairs: DataFrame, with_emb: bool = False) -> DataFrame:
-    """The one pair-scoring stage: (query_id, qe, neighbor_id, ne) rows →
-    (query_id, neighbor_id, cos) with ``cos = dot / (sqrt(qq)·sqrt(nn))``
-    over ``fold_dot``, one Arrow batch at a time. Every re-rank / refine
-    over an explicit candidate list runs through it (IVF+PQ and PQ
-    refine, SQ8 re-rank, the oversized IVF serve). ``with_emb`` passes
-    ``qe``/``ne`` through for callers that read them; the rest skip
-    shipping two dim-double arrays per pair back through Arrow."""
-    schema = (
-        "query_id long, qe array<double>, neighbor_id long, ne array<double>, cos double"
-        if with_emb else "query_id long, neighbor_id long, cos double"
-    )
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            q = np.asarray(list(pdf["qe"]), dtype=np.float64)
-            n = np.asarray(list(pdf["ne"]), dtype=np.float64)
-            cols = {c: pdf[c] for c in ("query_id", "qe", "neighbor_id", "ne")
-                    if with_emb or c.endswith("_id")}
-            cols["cos"] = fold_dot(q, n) / (
-                np.sqrt(fold_dot(q, q)) * np.sqrt(fold_dot(n, n)))
-            yield pd.DataFrame(cols)
-
-    return pairs.select("query_id", "qe", "neighbor_id", "ne").mapInPandas(
-        score, schema=schema)
+def cosine(q, n):
+    """Exact cosine as a JVM Column, ``dot / (sqrt(qq)·sqrt(nn))`` over
+    ``_dot``: the one re-rank / refine score over an explicit candidate
+    list (IVF+PQ and PQ refine, SQ8 re-rank, the oversized IVF serve).
+    ``_dot`` folds in ``fold_dot``'s order, so it equals the in-cell
+    serve kernel's score bit for bit."""
+    return _dot(q, n) / (F.sqrt(_dot(q, q)) * F.sqrt(_dot(n, n)))
 
 
 def rank_top_k(scored: DataFrame, k: int) -> DataFrame:

@@ -35,7 +35,7 @@ from goose_spark.operators.similarity import (
     N_QUERIES,
     TOP_K,
     _embeddings,
-    cosine_pairs,
+    cosine,
     fold_dot,
     rank_top_k,
 )
@@ -155,6 +155,9 @@ def ss18(spark: SparkSession, sf: str) -> DataFrame:
         )
     )
     nv = v.select(F.col("vec_id").alias("neighbor_id"), F.col("emb").alias("ne"))
-    return rank_top_k(
-        cosine_pairs(head.join(qdf, "query_id").join(nv, "neighbor_id")), TOP_K
+    scored = (
+        head.join(qdf, "query_id")
+        .join(nv, "neighbor_id")
+        .select("query_id", "neighbor_id", cosine("qe", "ne").alias("cos"))
     )
+    return rank_top_k(scored, TOP_K)

@@ -103,7 +103,7 @@ _SERVES = {
 def test_ivf_serve_with_oversized_query_batch_matches(spark, monkeypatch, serve):
     """Every IVF serve with a query batch over the (monkeypatched) cap
     takes the distributed path — no driver copy of the batch, un-hinted
-    joins, the shared pair-scoring stage — and returns exactly the rows
+    joins, the ``similarity.cosine`` Column score — and returns exactly the rows
     of the under-cap in-cell kernel. Runs in the default gate."""
     import goose_spark.operators.annindex as ai
     from goose_spark.operators.similarity import _embeddings, ivf_index_for
