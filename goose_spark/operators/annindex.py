@@ -172,9 +172,10 @@ def _centroid_matrix(spark: SparkSession, index_dir: str):
 
 def _probe_qe_kernel(cmat, nprobe: int):
     """The nearest-``nprobe``-centroid probe kernel — the ONE probe
-    implementation every index serve shares (cloudpickle ships cmat by
-    value into the closure). Emits ONE row per query — (query_id, qe,
-    clusters) — so a single bounded collect serves the probed-cell set,
+    implementation every index serve shares, run in the driver by
+    ``_probe`` or per Arrow batch for an oversized batch (cloudpickle
+    ships cmat by value into the closure). Emits ONE row per query —
+    (query_id, qe, clusters) — so one frame serves the probed-cell set,
     the per-query probe map AND the query-embedding batch (the qe values
     pass through untouched)."""
     import numpy as np
@@ -193,16 +194,23 @@ def _probe_qe_kernel(cmat, nprobe: int):
     return probe
 
 
-def _probe(queries: DataFrame, cmat, nprobe: int):
-    """(per-query probe rows, their bounded collect): the frame stays
-    distributed for the oversized-batch path; the collect stops at
-    ``EMBEDDING_ROW_CAP + 1`` rows, so an unbounded query batch never
-    lands on the driver — callers test ``len(rows) > EMBEDDING_ROW_CAP``."""
-    probes = queries.mapInPandas(
-        _probe_qe_kernel(cmat, nprobe),
-        schema="query_id long, qe array<double>, clusters array<int>",
-    )
-    return probes, probes.limit(EMBEDDING_ROW_CAP + 1).collect()
+def _probe(queries: DataFrame, cmat, nprobe: int) -> pd.DataFrame | None:
+    """The query batch's probe rows (query_id, qe, clusters) as a driver
+    pandas frame, or None when the batch holds more than
+    ``EMBEDDING_ROW_CAP`` rows. One JVM-only bounded collect of the
+    projection (no Python stage; it stops at ``EMBEDDING_ROW_CAP + 1``
+    rows, so an unbounded batch never lands on the driver), then
+    ``_probe_qe_kernel`` on that frame in the driver. An oversized batch
+    is probed by the same kernel in a ``mapInPandas`` instead
+    (``_scored_candidates``)."""
+    rows = queries.select("query_id", "qe").limit(EMBEDDING_ROW_CAP + 1).collect()
+    if len(rows) > EMBEDDING_ROW_CAP:
+        return None
+    pdf = pd.DataFrame({"query_id": [int(r[0]) for r in rows],
+                        "qe": [r[1] for r in rows]}, columns=["query_id", "qe"])
+    if not rows:
+        return pdf.assign(clusters=[])
+    return next(_probe_qe_kernel(cmat, nprobe)(iter([pdf])))
 
 
 def build_ivfpq_index(spark: SparkSession, sf: str, index_dir: str) -> dict:
@@ -266,18 +274,18 @@ def ivfpq_query(spark: SparkSession, index_dir: str, queries: DataFrame,
     # query SCORES: its own nprobe cells only, so per-query ADC work
     # stays O(nprobe cells) and is independent of batch makeup) and the
     # query list the ADC tables are built from
-    _, qrows = _probe(queries, cmat, nprobe)
-    if len(qrows) > EMBEDDING_ROW_CAP:
+    qrows = _probe(queries, cmat, nprobe)
+    if qrows is None:
         raise ValueError(
             f"ivfpq_query: query batch exceeds {EMBEDDING_ROW_CAP} rows — "
             "split the batch (ADC closes over the query list)"
         )
     probes: dict = {}
-    for r in qrows:
-        probes.setdefault(int(r["query_id"]), set()).update(r["clusters"])
+    for qid, clusters in zip(qrows["query_id"], qrows["clusters"]):
+        probes.setdefault(int(qid), set()).update(clusters)
     probed = sorted(set().union(*probes.values()))
     cells = _live_cells(spark, index_dir, probed)
-    qlist = [(r["query_id"], r["qe"]) for r in qrows]
+    qlist = list(zip(qrows["query_id"], qrows["qe"]))
     cand = adc_topk(
         cells.select("cluster", "vec_id", "code"), qlist, books,
         topk=topk * refine, probes=probes,
@@ -593,46 +601,147 @@ def attach_index_stream(stream: DataFrame, index_dir: str, checkpoint: str,
     )
 
 
+def _score(cluster, ids, mat, qids, qmat, pmask, with_emb: bool) -> pd.DataFrame:
+    """The ONE in-cell scoring kernel, shared by both placements of
+    ``_scored_candidates``: exact cosine of every (cell row, query) pair
+    whose cell the query probes (``pmask``, a (k, n_q) bool mask), self
+    matches dropped. Dot products go through ``similarity.fold_dot``, so
+    each score equals ``similarity.cosine`` on the same pair bit for bit;
+    a zero vector scores NaN. Emits (query_id, neighbor_id, cos), plus
+    the qe/ne embedding columns when ``with_emb`` (only ``ivf_candidates``
+    reads them; two ~dim-double arrays per candidate cost more than the
+    scoring, so the kernel emits only what the caller reads)."""
+    import numpy as np
+
+    with np.errstate(divide="ignore", invalid="ignore"):
+        cos = fold_dot(mat[:, None, :], qmat[None, :, :]) / (
+            np.sqrt(fold_dot(mat, mat))[:, None]
+            * np.sqrt(fold_dot(qmat, qmat))[None, :])
+    ri, qi = np.nonzero(pmask[cluster] & (ids[:, None] != qids[None, :]))
+    cols = {"query_id": qids[qi]}
+    if with_emb:
+        # ndarray list-values: Arrow converts them by buffer copy, lists
+        # of Python floats element-wise
+        cols["qe"] = [qmat[x] for x in qi]
+    cols["neighbor_id"] = ids[ri]
+    if with_emb:
+        cols["ne"] = [mat[x] for x in ri]
+    cols["cos"] = cos[ri, qi]
+    return pd.DataFrame(cols)
+
+
+def _cell_files(index_dir: str, probed: list) -> list:
+    """(cluster, path, footer rows) for every data file of the probed
+    cells: the footers size the driver placement without a job."""
+    import glob as _glob
+
+    import pyarrow.parquet as _pq
+
+    return [
+        (c, f, _pq.read_metadata(f).num_rows)
+        for c in probed
+        for f in sorted(_glob.glob(
+            os.path.join(index_dir, "assignments", f"cluster={c}", "*.parquet")))
+    ]
+
+
+def _driver_cells(spark: SparkSession, index_dir: str, files: list,
+                  allowed: DataFrame | None, dim: int):
+    """``_live_cells`` + the ``allowed`` pre-filter + the corpus-side
+    ``distinct`` of the distributed placement, read in the driver:
+    (cluster, vec_id, emb matrix) of the probed cells' ``files``
+    (``_cell_files``), read with pyarrow. Tombstoned ids go
+    (the whole pending set, as in ``_live_cells``); ``allowed`` is one
+    bounded JVM semi-join of the remaining distinct ids; duplicate
+    (cluster, vec_id, emb) rows collapse with Spark's ``distinct``
+    semantics — -0.0 equals 0.0 and NaN equals NaN, and the kept
+    embedding is the normalized one ``distinct`` emits."""
+    import glob as _glob
+
+    import numpy as np
+    import pyarrow.parquet as _pq
+
+    tables = [_pq.read_table(f, columns=["vec_id", "emb"]) for _, f, _ in files]
+    cluster = np.concatenate(
+        [np.full(t.num_rows, c, dtype=np.int64) for (c, _, _), t in zip(files, tables)]
+        + [np.zeros(0, dtype=np.int64)])
+    ids = np.concatenate(
+        [t.column("vec_id").to_numpy() for t in tables] + [np.zeros(0, dtype=np.int64)])
+    mat = np.concatenate(
+        [t.column("emb").combine_chunks().flatten().to_numpy().reshape(t.num_rows, dim)
+         for t in tables] + [np.zeros((0, dim))])
+    keep = np.ones(len(ids), dtype=bool)
+    tomb = _glob.glob(os.path.join(_tombstones_dir(index_dir), "*.parquet"))
+    if tomb:
+        dead = np.concatenate([_pq.read_table(f, columns=["vec_id"]).column("vec_id").to_numpy()
+                               for f in tomb])
+        keep &= ~np.isin(ids, dead)
+    if allowed is not None and keep.any():
+        ok = (
+            spark.createDataFrame(pd.DataFrame({"vec_id": np.unique(ids[keep])}), "vec_id long")
+            .coalesce(1)  # one task, not one per LocalRelation slice
+            .join(allowed.select("vec_id"), "vec_id", "left_semi")
+            .collect()
+        )
+        keep &= np.isin(ids, np.asarray([r[0] for r in ok], dtype=np.int64))
+    cluster, ids = cluster[keep], ids[keep]
+    mat = np.where(np.isnan(mat[keep]), np.nan, mat[keep] + 0.0)
+    key = np.column_stack([cluster, ids, mat.view(np.int64)])
+    first = np.sort(np.unique(key, axis=0, return_index=True)[1])
+    return cluster[first], ids[first], mat[first]
+
+
 def _scored_candidates(spark: SparkSession, index_dir: str, queries: DataFrame,
                        nprobe: int, allowed: DataFrame | None = None,
-                       with_emb: bool = False) -> DataFrame:
-    """The shared IVF serve stage: probes computed per Arrow batch (one
-    matmul against the ≤k×dim broadcast centroid matrix), probed cells
-    collected as a ≤k-value STATIC partition filter (guaranteed
-    ``PartitionFilters`` pruning on the assignments scan), exact cosine
-    within the pruned cells — scored by ONE vectorized Arrow kernel
-    over the probed-cell scan (the bounded query batch rides the task
-    closure; dot products through ``similarity.fold_dot``, the engine's
-    one fold order). Returns (query_id, neighbor_id, cos) unranked —
-    plus the qe/ne embedding columns when ``with_emb`` (only
-    ``ivf_candidates`` needs them; everyone else projects them away,
-    and emitting two ~dim-double arrays per candidate through Arrow
-    costs more than the scoring, so the kernel emits only what the
-    caller reads — guide §4). ``ivf_index_query`` adds the per-query
-    top-k window, ``ivf_range_search`` filters by threshold instead.
+                       with_emb: bool = False) -> DataFrame | pd.DataFrame:
+    """The shared IVF serve stage: (query_id, neighbor_id, cos) for every
+    query and every live row of the cells it probes, unranked — plus the
+    qe/ne embedding columns when ``with_emb``. ``ivf_index_query`` ranks
+    them, ``ivf_range_search`` filters by threshold, ``ivf_candidates``
+    cuts to the candidate pool.
+
+    ``_probe`` collects the query batch once and probes it in the
+    driver; the probed-cell set is a ≤k-value STATIC partition filter.
+    Three placements follow; the first two run one scoring kernel
+    (``_score``):
+
+    * **driver** (returns a pandas frame): the probed cells' parquet
+      footers hold at most ``EMBEDDING_ROW_CAP`` rows — a metadata read,
+      no job, like ``_count_index_rows``. The cells are read with
+      pyarrow (``_driver_cells``) and scored in the driver; the callers
+      rank and round on a ``createDataFrame`` LocalRelation, so a serve
+      without ``allowed`` runs the probe collect as its only Spark job.
+    * **in-cell** (bigger cells): the probed-cell scan with
+      ``PartitionFilters`` pruning, corpus-side ``distinct``, and
+      ``_score`` per Arrow batch in a ``mapInPandas`` (the query batch
+      rides the task closure).
+    * **oversized batch** (more than ``EMBEDDING_ROW_CAP`` queries):
+      stays distributed — the probe runs in a ``mapInPandas``, probe
+      pairs join the cells and ``similarity.cosine`` scores them.
+
+    A NaN score (a zero vector) crosses the Arrow boundary of the
+    in-cell placement as NULL, and the driver placement's
+    ``createDataFrame`` does the same, so both rank it last and never
+    return it from a range search.
 
     ``allowed`` (optional, one ``vec_id`` column) is the attribute
-    PRE-filter of filtered vector search (ss15/ss16): a semi-join
-    applied to the probed-cell read BEFORE any cosine is computed —
-    pre-filter semantics (filter, then rank), never post-filter (rank,
-    then drop, which silently returns < k and biased neighbors). At
-    100 TB the semi-join keys on the same vec_id the cells are stored
-    by, so the filter prunes candidates at the cell scan, and the
-    distance kernel only ever sees admissible vectors."""
+    PRE-filter of filtered vector search (ss15/ss16): applied to the
+    probed-cell read BEFORE any cosine is computed — pre-filter
+    semantics (filter, then rank), never post-filter (rank, then drop,
+    which silently returns < k and biased neighbors)."""
     import numpy as np
 
     cmat = _centroid_matrix(spark, index_dir)
-
-    # ONE bounded collect — one row per query carrying the probe set AND
-    # the query embedding — serves every driver-side consumer: the
-    # probed-cell set (static IN partition filter), the query count, and
-    # the query batch the scoring kernel closes over.
-    probes, qrows = _probe(queries, cmat, nprobe)
-    if len(qrows) > EMBEDDING_ROW_CAP:
+    qrows = _probe(queries, cmat, nprobe)
+    if qrows is None:
         # oversized batch: stays distributed — no driver copy of the
         # batch, no broadcast hints (the planner picks the shuffle
         # strategies); executor-side (query, cell) probe pairs join the
         # probed cells, and qe joins back once per distinct candidate
+        probes = queries.mapInPandas(
+            _probe_qe_kernel(cmat, nprobe),
+            schema="query_id long, qe array<double>, clusters array<int>",
+        )
         q_probes = probes.select("query_id", F.explode("clusters").alias("cluster"))
         probed = sorted(
             r["cluster"] for r in q_probes.select("cluster").distinct().collect()
@@ -652,14 +761,27 @@ def _scored_candidates(spark: SparkSession, index_dir: str, queries: DataFrame,
         )
         return scored if with_emb else scored.select("query_id", "neighbor_id", "cos")
 
-    out_schema = (
-        "query_id long, qe array<double>, neighbor_id long, "
-        "ne array<double>, cos double"
-        if with_emb else "query_id long, neighbor_id long, cos double"
-    )
-    if not qrows:
-        return spark.createDataFrame([], out_schema)
-    probed = sorted({int(c) for r in qrows for c in r["clusters"]})
+    qids = qrows["query_id"].to_numpy(dtype=np.int64)
+    qmat = np.asarray(list(qrows["qe"]), dtype=np.float64).reshape(len(qids), cmat.shape[1])
+    # per-query probed-cell membership as a (k, n_q) bool mask
+    pmask = np.zeros((cmat.shape[0], len(qrows)), dtype=bool)
+    for qi, clusters in enumerate(qrows["clusters"]):
+        pmask[list(clusters), qi] = True
+    probed = sorted({int(c) for clusters in qrows["clusters"] for c in clusters})
+    files = _cell_files(index_dir, probed)
+    if sum(n for _, _, n in files) <= EMBEDDING_ROW_CAP:
+        cluster, ids, mat = _driver_cells(spark, index_dir, files, allowed, cmat.shape[1])
+        # slices of one Arrow batch: the driver's peak (rows × queries
+        # scores) is that of one in-cell task batch
+        step = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+        if step <= 0:  # no batch limit
+            step = max(len(ids), 1)
+        return pd.concat([
+            _score(cluster[i:i + step], ids[i:i + step], mat[i:i + step], qids, qmat, pmask,
+                   with_emb)
+            for i in range(0, max(len(ids), 1), step)
+        ], ignore_index=True)
+
     cells = _live_cells(spark, index_dir, probed)
     if allowed is not None:
         # attribute pre-filter INSIDE the probed-cell read: candidates
@@ -673,46 +795,38 @@ def _scored_candidates(spark: SparkSession, index_dir: str, queries: DataFrame,
     # equivalent to the old per-(query, neighbor, ne) distinct — on ≤
     # probed-cell corpus rows instead of the full candidate fan-out.
     corpus = cells.select("cluster", "vec_id", "emb").distinct()
-
-    qrows.sort(key=lambda r: int(r["query_id"]))
-    n_q = len(qrows)
-    qids = np.asarray([int(r["query_id"]) for r in qrows], dtype=np.int64)
-    qmat = np.asarray([r["qe"] for r in qrows], dtype=np.float64)
-    # per-query embedding as an ndarray row (Arrow converts ndarray
-    # list-values by buffer copy; lists of Python floats convert
-    # element-wise and dominated the kernel's cost in the wide form)
-    qe_rows = list(qmat)
-    # per-query probed-cell membership as a (k, n_q) bool mask
-    pmask = np.zeros((cmat.shape[0], n_q), dtype=bool)
-    for qi, r in enumerate(qrows):
-        for c in r["clusters"]:
-            pmask[int(c), qi] = True
-    qq = fold_dot(qmat, qmat)
+    dim = cmat.shape[1]
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            mat = np.asarray(list(pdf["emb"]), dtype=np.float64)
-            # dot / (sqrt(nn)·sqrt(qq)), elementwise identical to
-            # similarity.cosine on the same (query, neighbor)
-            cos = fold_dot(mat[:, None, :], qmat[None, :, :]) / (
-                np.sqrt(fold_dot(mat, mat))[:, None] * np.sqrt(qq)[None, :])
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            ok = pmask[pdf["cluster"].to_numpy(dtype=np.int64)] & (
-                ids[:, None] != qids[None, :]
+            yield _score(
+                pdf["cluster"].to_numpy(dtype=np.int64),
+                pdf["vec_id"].to_numpy(dtype=np.int64),
+                np.asarray(list(pdf["emb"]), dtype=np.float64).reshape(len(pdf), dim),
+                qids, qmat, pmask, with_emb,
             )
-            ri, qi = np.nonzero(ok)
-            cols = {"query_id": qids[qi]}
-            if with_emb:
-                cols["qe"] = [qe_rows[x] for x in qi]
-            cols["neighbor_id"] = ids[ri]
-            if with_emb:
-                cols["ne"] = pdf["emb"].to_numpy()[ri]
-            cols["cos"] = cos[ri, qi]
-            yield pd.DataFrame(cols)
 
-    return corpus.mapInPandas(score, schema=out_schema)
+    return corpus.mapInPandas(
+        score,
+        schema="query_id long, qe array<double>, neighbor_id long, "
+               "ne array<double>, cos double"
+        if with_emb else "query_id long, neighbor_id long, cos double",
+    )
+
+
+def _rank_local(scored: pd.DataFrame, k: int) -> pd.DataFrame:
+    """``rank_top_k``'s window on a driver-placement frame: per query,
+    order by (cos desc, neighbor_id), number the rows from 1 (``rank``)
+    and keep rank ≤ ``k``. A NaN cos is the NULL of the distributed
+    placement, so it sorts last."""
+    import numpy as np
+
+    # numpy sorts a NaN key last: where DESC NULLS LAST puts the NULL
+    order = np.lexsort((scored["neighbor_id"].to_numpy(), -scored["cos"].to_numpy(),
+                        scored["query_id"].to_numpy()))
+    out = scored.iloc[order].reset_index(drop=True)
+    out["rank"] = (out.groupby("query_id").cumcount() + 1).astype("int32")
+    return out[out["rank"] <= k]
 
 
 def ivf_range_search(spark: SparkSession, index_dir: str, queries: DataFrame,
@@ -732,9 +846,21 @@ def ivf_range_search(spark: SparkSession, index_dir: str, queries: DataFrame,
     exact full-precision (exactness-tested). ``allowed`` adds the
     attribute pre-filter inside the probed-cell read (ss17), exactly
     as in ``ivf_index_query``."""
+    scored = _scored_candidates(spark, index_dir, queries, nprobe, allowed=allowed)
+    if isinstance(scored, pd.DataFrame):
+        # Spark rounds the hits (a projection folded into the
+        # LocalRelation: no job); the driver orders them by that score
+        hits = scored[scored["cos"] >= tau]  # NaN (NULL) never passes
+        rows = (
+            spark.createDataFrame(hits, "query_id long, neighbor_id long, cos double")
+            .select("query_id", "neighbor_id", F.round("cos", 6).alias("score"))
+            .collect()
+        )
+        out = pd.DataFrame(rows, columns=["query_id", "neighbor_id", "score"]).sort_values(
+            ["query_id", "score", "neighbor_id"], ascending=[True, False, True], kind="stable")
+        return spark.createDataFrame(out, "query_id long, neighbor_id long, score double")
     return (
-        _scored_candidates(spark, index_dir, queries, nprobe, allowed=allowed)
-        .filter(F.col("cos") >= tau)
+        scored.filter(F.col("cos") >= tau)
         .select("query_id", "neighbor_id", F.round("cos", 6).alias("score"))
         .orderBy("query_id", F.col("score").desc(), "neighbor_id")
     )
@@ -747,10 +873,15 @@ def ivf_candidates(spark: SparkSession, index_dir: str, queries: DataFrame,
     with partition-pruned cell reads. This is the candidate stage the
     MMR re-ranker (ss9) plugs in for its brute-force corpus scan: at
     corpus scale the scan reads only the probed cells' files."""
+    scored = _scored_candidates(spark, index_dir, queries, nprobe, with_emb=True)
+    if isinstance(scored, pd.DataFrame):
+        return spark.createDataFrame(
+            _rank_local(scored, cand_k)[["query_id", "qe", "neighbor_id", "ne"]],
+            "query_id long, qe array<double>, neighbor_id long, emb array<double>",
+        )
     w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), "neighbor_id")
     return (
-        _scored_candidates(spark, index_dir, queries, nprobe, with_emb=True)
-        .withColumn("rank", F.row_number().over(w))
+        scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= cand_k)
         .select("query_id", "qe", "neighbor_id", F.col("ne").alias("emb"))
     )
@@ -761,11 +892,16 @@ def ivf_index_query(spark: SparkSession, index_dir: str, queries: DataFrame,
                     allowed: DataFrame | None = None) -> DataFrame:
     """Top-k cosine neighbors for ``queries`` (``query_id``, ``qe``)
     against a built index — the shared ``_scored_candidates`` serve
-    stage under the per-query WindowGroupLimit rank. ``allowed`` turns
-    it into the FILTERED serve (ss16): the attribute predicate is a
-    semi-join inside the probed-cell read, before the distance kernel
+    stage under the per-query rank (``rank_top_k``'s WindowGroupLimit,
+    or ``_rank_local`` on the driver placement, where Spark still rounds
+    the score: a projection folded into the LocalRelation). ``allowed``
+    turns it into the FILTERED serve (ss16): the attribute predicate is
+    a semi-join inside the probed-cell read, before the distance kernel
     (see ``_scored_candidates``)."""
-    return rank_top_k(
-        _scored_candidates(spark, index_dir, queries, nprobe, allowed=allowed),
-        topk,
-    )
+    scored = _scored_candidates(spark, index_dir, queries, nprobe, allowed=allowed)
+    if isinstance(scored, pd.DataFrame):
+        return spark.createDataFrame(
+            _rank_local(scored, topk)[["query_id", "neighbor_id", "rank", "cos"]],
+            "query_id long, neighbor_id long, rank int, cos double",
+        ).select("query_id", "neighbor_id", "rank", F.round("cos", 6).alias("score"))
+    return rank_top_k(scored, topk)

@@ -241,18 +241,16 @@ def ss6(spark: SparkSession, sf: str) -> DataFrame:
     v = _embeddings(spark, sf)
     books = trained_codebooks(spark, sf)
     codes = encode_corpus(v, books)
-    queries = [
-        (r["vec_id"], r["emb"])
-        for r in v.filter(F.col("vec_id") < N_QUERIES).collect()
-    ]
+    qdf = v.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"), F.col("emb").alias("qe")
+    )
+    queries = [(r["query_id"], r["qe"]) for r in qdf.collect()]
     cand = adc_topk(codes, queries, books, topk=TOP_K * PQ_REFINE)
     # refine: exact cosine over ONLY the topk×PQ_REFINE ADC candidates
     # (q × 40 rows — broadcast), the same stage ivfpq_query runs; ADC
-    # stays the 8-byte scan, full precision touches a bounded set
-    qdf = spark.createDataFrame(
-        [(int(i), [float(x) for x in emb]) for i, emb in queries],
-        "query_id long, qe array<double>",
-    )
+    # stays the 8-byte scan, full precision touches a bounded set. The
+    # query side is JVM-side too: a frame built from the collected list
+    # would run a Python task per slice to broadcast
     ne = v.select(F.col("vec_id").alias("neighbor_id"), F.col("emb").alias("ne"))
     scored = (
         F.broadcast(cand.select("query_id", "neighbor_id"))

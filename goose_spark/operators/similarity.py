@@ -11,6 +11,7 @@ table is a broadcast-joinable skeleton. Recall tunes with bands/bits.
 
 from __future__ import annotations
 
+import atexit
 from typing import Iterator
 
 import numpy as np
@@ -438,24 +439,64 @@ def ss4(spark: SparkSession, sf: str) -> DataFrame:
 # ss5 — persisted IVF index lifecycle (build once → partition-pruned query)
 # ---------------------------------------------------------------------------
 
+#: sf → temp index dir of the two session index caches (IVF: ss5, ss11,
+#: ss12, ss14, ss16, ss17, ss20; IVF+PQ: ss7). ``remove_index_dirs``
+#: deletes the dirs at interpreter exit.
 _IVF_INDEX_DIRS: dict = {}
+_IVFPQ_INDEX_DIRS: dict = {}
+
+
+def _index_dir_for(cache: dict, spark: SparkSession, sf: str, prefix: str, build) -> str:
+    """``cache[sf]``, (re)built by ``build(spark, sf, dir)`` in a fresh
+    temp dir when missing or without a manifest. A rebuilt entry's old
+    dir, and the dir of a build that fails, are removed."""
+    import os as _os
+    import shutil as _shutil
+    import tempfile as _tempfile
+
+    idx = cache.get(sf)
+    if idx is None or not _os.path.exists(_os.path.join(idx, "manifest.json")):
+        if idx is not None:
+            _shutil.rmtree(idx, ignore_errors=True)
+            del cache[sf]
+        idx = _tempfile.mkdtemp(prefix=prefix)
+        try:
+            build(spark, sf, idx)
+        except BaseException:
+            _shutil.rmtree(idx, ignore_errors=True)
+            raise
+        cache[sf] = idx
+    return idx
+
+
+def remove_index_dirs() -> None:
+    """Delete every index dir the session index caches created and
+    forget them (the next serve rebuilds). Registered with ``atexit``."""
+    import shutil as _shutil
+
+    for cache in (_IVF_INDEX_DIRS, _IVFPQ_INDEX_DIRS):
+        for idx in cache.values():
+            _shutil.rmtree(idx, ignore_errors=True)
+        cache.clear()
+
+
+atexit.register(remove_index_dirs)
 
 
 def ivf_index_for(spark: SparkSession, sf: str) -> str:
     """Session-cached persisted-IVF index dir for a testdata sf — built
     once, shared by every serve-path consumer (ss5 top-k, ss11 range
     search, the ss9 indexed-MMR candidate stage)."""
-    import os as _os
-    import tempfile as _tempfile
-
     from goose_spark.operators.annindex import build_ivf_index
 
-    idx = _IVF_INDEX_DIRS.get(sf)
-    if idx is None or not _os.path.exists(_os.path.join(idx, "manifest.json")):
-        idx = _tempfile.mkdtemp(prefix="goose-ivf-idx-")
-        build_ivf_index(spark, sf, idx)
-        _IVF_INDEX_DIRS[sf] = idx
-    return idx
+    return _index_dir_for(_IVF_INDEX_DIRS, spark, sf, "goose-ivf-idx-", build_ivf_index)
+
+
+def ivfpq_index_for(spark: SparkSession, sf: str) -> str:
+    """Session-cached persisted IVF+PQ index dir for a testdata sf (ss7)."""
+    from goose_spark.operators.annindex import build_ivfpq_index
+
+    return _index_dir_for(_IVFPQ_INDEX_DIRS, spark, sf, "goose-ivfpq-idx-", build_ivfpq_index)
 
 
 @register(
@@ -468,7 +509,10 @@ def ivf_index_for(spark: SparkSession, sf: str) -> str:
         "nprobe/k of the corpus, the rest is never opened). ss3 is the "
         "inline form; this is the durable-index form a 100 TB corpus "
         "actually operates — build cost amortizes over every query "
-        "batch. Index cached per sf within the session.",
+        "batch. Probed cells within EMBEDDING_ROW_CAP footer rows are "
+        "read, scored and ranked in the driver (one Spark job, the "
+        "query collect); bigger cells score in a mapInPandas stage. "
+        "Index cached per sf within the session.",
     tags=("llm", "similarity"),
 )
 def ss5(spark: SparkSession, sf: str) -> DataFrame:
@@ -516,9 +560,6 @@ def ss11(spark: SparkSession, sf: str) -> DataFrame:
     return ivf_range_search(spark, idx, q, tau=RANGE_TAU)
 
 
-_IVFPQ_INDEX_DIRS: dict = {}
-
-
 @register(
     "ss7_ann_ivfpq",
     None,  # approximate (quantized candidate ranking) — rows-only;
@@ -534,16 +575,9 @@ _IVFPQ_INDEX_DIRS: dict = {}
     tags=("llm", "similarity"),
 )
 def ss7(spark: SparkSession, sf: str) -> DataFrame:
-    import os as _os
-    import tempfile as _tempfile
+    from goose_spark.operators.annindex import ivfpq_query
 
-    from goose_spark.operators.annindex import build_ivfpq_index, ivfpq_query
-
-    idx = _IVFPQ_INDEX_DIRS.get(sf)
-    if idx is None or not _os.path.exists(_os.path.join(idx, "manifest.json")):
-        idx = _tempfile.mkdtemp(prefix="goose-ivfpq-idx-")
-        build_ivfpq_index(spark, sf, idx)
-        _IVFPQ_INDEX_DIRS[sf] = idx
+    idx = ivfpq_index_for(spark, sf)
     v = _embeddings(spark, sf)
     q = v.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("emb").alias("qe")

@@ -34,6 +34,7 @@ from goose_spark.operators.similarity import (
     _DIM,
     N_QUERIES,
     TOP_K,
+    _dot,
     _embeddings,
     cosine,
     fold_dot,
@@ -147,11 +148,19 @@ def ss18(spark: SparkSession, sf: str) -> DataFrame:
         .select("query_id", "neighbor_id")
     )
     # exact re-rank of the head only: join true embeddings back for the
-    # candidate and look the query vector up from the collected batch
+    # candidate; the query side is qm built JVM-side — ``_unit_rows`` as
+    # Columns (the same fold, sqrt and division, so bit-identical to qm).
+    # A frame built from a Python list would run a Python task per slice
+    # to broadcast.
+    qn = F.col("qn")
     qdf = F.broadcast(
-        v.sparkSession.createDataFrame(
-            [(qid, [float(x) for x in qm[i]]) for i, qid in enumerate(qids)],
-            schema="query_id long, qe array<double>",
+        v.filter(F.col("vec_id") < N_QUERIES)
+        .withColumn("qn", F.sqrt(_dot(F.col("emb"), F.col("emb"))))
+        .select(
+            F.col("vec_id").alias("query_id"),
+            F.transform(
+                "emb", lambda x: x / F.when((qn > 0) & ~F.isnan(qn), qn).otherwise(1.0)
+            ).alias("qe"),
         )
     )
     nv = v.select(F.col("vec_id").alias("neighbor_id"), F.col("emb").alias("ne"))

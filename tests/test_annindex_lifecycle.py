@@ -23,7 +23,7 @@ from goose_spark.operators.annindex import (
     ivfpq_query,
 )
 from goose_spark.operators.similarity import _embeddings, N_QUERIES
-from tests.conftest import SF_CORRECT, SF_SMOKE
+from tests.conftest import SF_CORRECT, SF_SMOKE, in_job_group
 import pytest
 
 
@@ -395,9 +395,10 @@ def test_ivfpq_query_rejects_batch_over_cap(spark, tmp_path, monkeypatch):
 
 def test_ivfpq_serve_job_budget(spark):
     """ss7's serve runs one probe collect (probe map, probed cells and
-    query list together) instead of two unbounded collects: at most 10
-    Spark jobs at sf0.001 with the index and codebooks already built
-    (11 with the separate probe and query collects)."""
+    query list together; a JVM-only projection, probed in the driver)
+    instead of two unbounded collects: at most 10 Spark jobs at sf0.001
+    with the index and codebooks already built (11 with the separate
+    probe and query collects)."""
     from goose_spark.queries import load_all
 
     ss7 = load_all()["ss7_ann_ivfpq"].builder
@@ -413,3 +414,34 @@ def test_ivfpq_serve_job_budget(spark):
     jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert got == want and len(got) > 0
     assert 0 < len(jobs) <= 10, sorted(jobs)
+
+
+def test_ivf_serve_job_budget(spark):
+    """Warm ss5 at sf0.001 runs one Spark job, the query-batch collect:
+    its probed cells hold at most EMBEDDING_ROW_CAP footer rows, so they
+    are read, scored and ranked in the driver, and the result is a
+    LocalRelation (7 jobs with the in-cell ``mapInPandas`` stage)."""
+    from goose_spark.queries import load_all
+
+    ss5 = load_all()["ss5_ann_ivf_index"].builder
+    want = [tuple(r) for r in ss5(spark, SF_SMOKE).collect()]  # builds the index
+    got, jobs, _ = in_job_group(
+        spark, "test-ss5-job-budget", lambda: [tuple(r) for r in ss5(spark, SF_SMOKE).collect()])
+    assert got == want and len(got) > 0
+    assert len(jobs) <= 1, sorted(jobs)
+
+
+def test_session_index_dirs_are_removed(spark):
+    """The session index caches remove their temp dirs: a rebuilt entry's
+    old dir at once, every dir on ``remove_index_dirs`` (run at
+    interpreter exit)."""
+    from goose_spark.operators import similarity as sim
+
+    old = sim.ivf_index_for(spark, SF_SMOKE)
+    os.remove(os.path.join(old, "manifest.json"))
+    idx = sim.ivf_index_for(spark, SF_SMOKE)
+    assert idx != old and not os.path.exists(old)
+    pq_idx = sim.ivfpq_index_for(spark, SF_SMOKE)
+    sim.remove_index_dirs()
+    assert not os.path.exists(idx) and not os.path.exists(pq_idx)
+    assert SF_SMOKE not in sim._IVF_INDEX_DIRS and SF_SMOKE not in sim._IVFPQ_INDEX_DIRS

@@ -10,7 +10,7 @@ import re
 from pyspark.sql import functions as F
 
 from goose_spark.queries import load_all
-from tests.conftest import SF_CORRECT
+from tests.conftest import SF_CORRECT, cells_read, probed_cells
 
 REG = load_all()
 
@@ -57,18 +57,29 @@ def test_indexed_hybrid_fusion_parity(spark):
     assert avg >= 0.9, f"indexed-hybrid fusion parity too low: {avg:.2f} ({overlaps})"
 
 
-def test_registered_ss14_plan_prunes_and_schema_matches_ss13(spark):
+def test_registered_ss14_plan_prunes_and_schema_matches_ss13(spark, monkeypatch):
     """The REGISTERED ss14 (default serve nprobe): dense side reads only
-    probed cells (PartitionFilters on cluster), no corpus-wide cross
+    probed cells (the driver placement's pyarrow reads; PartitionFilters
+    on cluster in the in-cell placement's plan), no corpus-wide cross
     join in the dense path, and the output schema is column-identical
     to ss13 so the two are drop-in interchangeable."""
+    import goose_spark.operators.annindex as ai
+    from goose_spark.operators.hybrid import N_Q
+    from goose_spark.operators.similarity import IVF_NPROBE, _embeddings, ivf_index_for
     from goose_spark.plans.inspect import report
 
+    read = cells_read(monkeypatch)
     df14 = REG["ss14_hybrid_indexed"].builder(spark, SF_CORRECT)
     df13 = REG["ss13_hybrid_rrf"].builder(spark, SF_CORRECT)
     assert df14.columns == df13.columns
+    q = _embeddings(spark, SF_CORRECT).filter(F.col("vec_id") < N_Q).select(
+        F.col("vec_id").alias("query_id"), F.col("emb").alias("qe"))
+    assert read == probed_cells(spark, ivf_index_for(spark, SF_CORRECT), q, IVF_NPROBE)
+    assert "CartesianProduct" not in report(df14).text
 
-    r = report(df14)
+    with monkeypatch.context() as m:
+        m.setattr(ai, "EMBEDDING_ROW_CAP", N_Q)
+        r = report(REG["ss14_hybrid_indexed"].builder(spark, SF_CORRECT))
     assert any(
         "cluster" in pf
         for pf in re.findall(r"PartitionFilters: \[[^\]]*\]", r.text)

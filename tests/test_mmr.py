@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 from goose_spark.operators.mmr import CAND_K, MMR_LAMBDA, mmr_rerank
 from goose_spark.queries import load_all
 from goose_spark.queries.base import t
-from tests.conftest import SF_CORRECT
+from tests.conftest import SF_CORRECT, cells_read, probed_cells
 
 REG = load_all()
 
@@ -101,14 +101,16 @@ def test_diversity_covers_both_clusters(spark):
     assert picked & a_ids and picked & b_ids
 
 
-def test_indexed_candidates_recall_parity(spark, tmp_path):
+def test_indexed_candidates_recall_parity(spark, tmp_path, monkeypatch):
     """The 100 TB candidate stage (round-9 directive #1): MMR served
     off the persisted IVF index must agree with MMR over the exact
     brute-force candidate stage — per-query top-k overlap ≥ 0.9 at
-    nprobe=10 (of 16 cells) — and the serve plan must read only the
-    probed cells (PartitionFilters) with NO corpus-wide cosine scan."""
+    nprobe=10 (of 16 cells) — and the serve must read only the probed
+    cells (the driver placement's pyarrow reads; PartitionFilters on the
+    in-cell placement's plan) with NO corpus-wide cosine scan."""
     import re
 
+    import goose_spark.operators.annindex as ai
     from goose_spark.operators.annindex import build_ivf_index
     from goose_spark.operators.mmr import mmr_rerank_indexed
     from goose_spark.operators.similarity import _embeddings, N_QUERIES
@@ -120,11 +122,16 @@ def test_indexed_candidates_recall_parity(spark, tmp_path):
     q = v.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("emb").alias("qe")
     )
+    read = cells_read(monkeypatch)
     served_df = mmr_rerank_indexed(spark, idx, q, nprobe=10)
+    assert read == probed_cells(spark, idx, q, 10)
+    assert "CartesianProduct" not in report(served_df).text
 
-    # plan: the candidate scan partition-prunes on cluster and there is
-    # no broadcast-corpus cross join anywhere in the indexed path
-    r = report(served_df)
+    # plan: the in-cell candidate scan partition-prunes on cluster and
+    # there is no broadcast-corpus cross join anywhere in the indexed path
+    with monkeypatch.context() as m:
+        m.setattr(ai, "EMBEDDING_ROW_CAP", N_QUERIES)
+        r = report(mmr_rerank_indexed(spark, idx, q, nprobe=10))
     assert any(
         "cluster" in pf
         for pf in re.findall(r"PartitionFilters: \[[^\]]*\]", r.text)

@@ -6,7 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from goose_spark.queries import load_all
-from tests.conftest import SF_CORRECT
+from tests.conftest import SF_CORRECT, in_job_group
 import pytest
 
 # excluded from the DEFAULT pytest run (pytest.ini deselects
@@ -135,3 +135,16 @@ def test_adc_probes_restrict_candidates_per_query(spark):
     assert sorted(
         (r["neighbor_id"], r["rank"]) for r in both if r["query_id"] == 9_999_999
     ) == sorted((r["neighbor_id"], r["rank"]) for r in only0)
+
+
+def test_pq_warm_task_budget(spark):
+    """ss6's refine reads its queries JVM-side, not from a Python-list
+    frame whose broadcast ran one Python task per slice: a warm call at
+    sf0.01 completes at most 8 Spark tasks (11 with the list frame),
+    with the same rows."""
+    ss6 = REGISTRY["ss6_ann_pq"].builder
+    want = [tuple(r) for r in ss6(spark, SF_CORRECT).collect()]
+    got, _, tasks = in_job_group(
+        spark, "test-ss6-task-budget", lambda: [tuple(r) for r in ss6(spark, SF_CORRECT).collect()])
+    assert got == want and len(got) > 0
+    assert 0 < tasks <= 8, tasks

@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from goose_spark.queries import load_all
-from tests.conftest import SF_CORRECT
+from tests.conftest import SF_CORRECT, cells_read, probed_cells
 
 REGISTRY = load_all()
 
@@ -132,15 +132,17 @@ def test_lsh_blocked_hot_bucket_cap(spark, tmp_path):
     assert found >= 0.9, f"capped recall {found} on selective pairs"
 
 
-def test_ivf_index_lifecycle(spark, tmp_path):
+def test_ivf_index_lifecycle(spark, tmp_path, monkeypatch):
     """Persisted IVF index: build writes the cluster-partitioned layout,
-    the query scan proves PartitionFilters pruning, recall clears the
-    ss3 floor, and a second query batch reuses the index without
-    rebuilding (the file set is untouched)."""
+    the serve reads only the probed cells (the driver placement's
+    pyarrow reads; PartitionFilters on the in-cell placement's scan),
+    recall clears the ss3 floor, and a second query batch reuses the
+    index without rebuilding (the file set is untouched)."""
     import os
 
+    import goose_spark.operators.annindex as ai
     from goose_spark.operators.annindex import build_ivf_index, ivf_index_query
-    from goose_spark.operators.similarity import _embeddings, IVF_K, N_QUERIES
+    from goose_spark.operators.similarity import _embeddings, IVF_K, IVF_NPROBE, N_QUERIES
     from goose_spark.plans.inspect import report
 
     idx = str(tmp_path / "ivf")
@@ -154,9 +156,13 @@ def test_ivf_index_lifecycle(spark, tmp_path):
     q = v.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("emb").alias("qe")
     )
+    read = cells_read(monkeypatch)
     res = ivf_index_query(spark, idx, q)
-    # partition pruning is in the PLAN, not just hoped for
-    r = report(res)
+    assert read == probed_cells(spark, idx, q, IVF_NPROBE) and len(read) < len(cells)
+    # partition pruning is in the in-cell placement's PLAN, not just hoped for
+    with monkeypatch.context() as m:
+        m.setattr(ai, "EMBEDDING_ROW_CAP", N_QUERIES)
+        r = report(ivf_index_query(spark, idx, q))
     assert any("cluster" in pf for pf in
                __import__("re").findall(r"PartitionFilters: \[[^\]]*\]", r.text)), r.text
 

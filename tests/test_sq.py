@@ -6,7 +6,7 @@ from __future__ import annotations
 import numpy as np
 
 from goose_spark.queries import load_all
-from tests.conftest import SF_CORRECT
+from tests.conftest import SF_CORRECT, in_job_group
 
 REGISTRY = load_all()
 
@@ -60,3 +60,16 @@ def test_sq8_deterministic(spark):
     a = [tuple(r) for r in REGISTRY["ss18_ann_sq8"].builder(spark, SF_CORRECT).collect()]
     b = [tuple(r) for r in REGISTRY["ss18_ann_sq8"].builder(spark, SF_CORRECT).collect()]
     assert a == b
+
+
+def test_sq8_warm_task_budget(spark):
+    """ss18's re-rank reads its unit-normalized queries JVM-side (a
+    Column ``_unit_rows``), not from a Python-list frame whose broadcast
+    ran one Python task per slice: a warm call at sf0.01 completes at
+    most 7 Spark tasks (10 with the list frame), with the same rows."""
+    ss18 = REGISTRY["ss18_ann_sq8"].builder
+    want = [tuple(r) for r in ss18(spark, SF_CORRECT).collect()]
+    got, _, tasks = in_job_group(
+        spark, "test-ss18-task-budget", lambda: [tuple(r) for r in ss18(spark, SF_CORRECT).collect()])
+    assert got == want and len(got) > 0
+    assert 0 < tasks <= 7, tasks

@@ -13,9 +13,15 @@ Usage:  python3 tools/scale_point_serve.py <cpus> [n_corpus] [n_query]
 The index is built fresh in a temp dir each run (same build path as
 ss5/ss20 — build_ivf_index_from + _train_ivf's deterministic k-means)
 and timing covers ONLY the serve (ivf_index_query), not the build.
+The line also reports the probed cells' parquet footer rows and the
+placement the serve ran: "driver" (footer rows within
+EMBEDDING_ROW_CAP: pyarrow read, one driver kernel call) or
+"distributed" (a mapInPandas stage over the probed-cell scan). The
+default point is far above the bound; ``n_corpus`` 5000 is below it.
 """
 import json
 import os
+import shutil
 import sys
 import tempfile
 import time
@@ -36,9 +42,10 @@ spark.sparkContext.setLogLevel("ERROR")
 from pyspark.sql import functions as F  # noqa: E402
 
 from goose_spark.operators.annindex import (  # noqa: E402
-    build_ivf_index_from, ivf_index_query,
+    _cell_files, _centroid_matrix, _probe, build_ivf_index_from, ivf_index_query,
 )
-from goose_spark.operators.similarity import _DIM, IVF_K  # noqa: E402
+from goose_spark.operators.similarity import _DIM, IVF_K, IVF_NPROBE  # noqa: E402
+from goose_spark.plans.inspect import physical_plan  # noqa: E402
 
 # deterministic synthetic corpus: hash-derived pseudo-random doubles,
 # executor-generated (no driver materialization of the corpus)
@@ -71,10 +78,17 @@ for _ in range(3):
     t0 = time.perf_counter()
     n = ivf_index_query(spark, idx, q).count()
     runs.append(round(time.perf_counter() - t0, 3))
+probes = _probe(q, _centroid_matrix(spark, idx), IVF_NPROBE)
+probed = sorted({int(c) for cl in probes["clusters"] for c in cl})
+cell_rows = sum(n for _, _, n in _cell_files(idx, probed))
+placement = ("distributed" if "MapInPandas" in physical_plan(ivf_index_query(spark, idx, q))
+             else "driver")
 
 print(json.dumps({
     "cpus": CPUS, "n_corpus": N_CORPUS, "n_query": N_QUERY,
     "build_sec": round(build_s, 2), "serve_runs": runs,
     "serve_best": min(runs), "rows": n,
+    "probed_cell_rows": cell_rows, "placement": placement,
 }))
+shutil.rmtree(idx, ignore_errors=True)
 spark.stop()
