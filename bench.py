@@ -17,25 +17,16 @@ so run 2 re-pays its own materializations (DuckDB's second run also
 re-executes fully); the deliberate cross-query session caches stay
 warm either way. Every query gets exactly two timed runs — no
 conditional third run, which could only ever lower a time and so
-biased the record. ``os.getloadavg()`` is recorded after each query
-(``queries_loadavg`` in the sidecar) and before/after the sweep,
-emitted in the compact line, so a host-contaminated record
-self-identifies (the r12 driver record was a uniform ~1.55x multiple of
-the judge's idle re-run — invisible without a load sentinel).
-``cache_builds`` in the sidecar attributes session-cache build cost
-(trained k-means, the dedup pair table) to the query that first paid
-it, making the per-query numbers sweep-order-interpretable.
+biased the record. ``cache_builds`` in the sidecar attributes
+session-cache build cost (trained k-means, the dedup pair table) to the
+query that first paid it, making the per-query numbers
+sweep-order-interpretable.
 
-Idle gate (VERDICT r13 directive #1): three rounds of driver records
-were captured on a contended host (r13: 111.9 s at loadavg 4.28 vs
-79.3/84.3 s idle). The sentinel *detects* that after the fact; the
-idle gate *prevents* it: before the sweep, if the 1-min loadavg
-exceeds ``SPARK_GRAFT_IDLE_LOADAVG`` (default 2.0 on this 32-core
-box), sleep-and-retry in bounded 30 s steps up to
-``SPARK_GRAFT_IDLE_MAX_WAIT`` (default 180 s) total, then proceed
-regardless (a bench that never runs is worse than a flagged one).
-The observed wait and whether the budget was exhausted are recorded
-in the compact line (``idle_wait_sec`` / ``idle_wait_exhausted``).
+Both timed runs of a query execute under a Spark job group named after
+it, and ``profile`` in the sidecar records the Spark jobs and completed
+tasks that group ran, from the status tracker. Wall-clock moves with
+host load; these counts do not, so a query whose counts rose against an
+earlier record did more work, whatever the host was doing.
 """
 
 from __future__ import annotations
@@ -52,46 +43,8 @@ os.environ.setdefault(
 )
 
 
-def wait_for_idle_host() -> tuple[float, bool]:
-    """Bounded wait for the 1-min loadavg to drop under the idle
-    threshold before timing anything (VERDICT r13 directive #1).
-
-    Returns (seconds_waited, budget_exhausted). Never blocks more than
-    SPARK_GRAFT_IDLE_MAX_WAIT seconds total; on exhaustion the sweep
-    proceeds anyway and the record self-identifies via the sentinel
-    plus idle_wait_exhausted=true.
-    """
-    threshold = float(os.environ.get("SPARK_GRAFT_IDLE_LOADAVG", "2.0"))
-    max_wait = float(os.environ.get("SPARK_GRAFT_IDLE_MAX_WAIT", "180"))
-    step = 30.0
-    waited = 0.0
-    while os.getloadavg()[0] > threshold:
-        if waited >= max_wait:
-            print(
-                f"bench: idle-wait budget exhausted ({waited:.0f}s); "
-                f"loadavg {os.getloadavg()[0]:.2f} > {threshold} — "
-                "proceeding on a contended host",
-                file=sys.stderr,
-            )
-            return waited, True
-        chunk = min(step, max_wait - waited)
-        print(
-            f"bench: loadavg {os.getloadavg()[0]:.2f} > {threshold}; "
-            f"waiting {chunk:.0f}s for an idle host "
-            f"({waited:.0f}/{max_wait:.0f}s used)",
-            file=sys.stderr,
-        )
-        time.sleep(chunk)
-        waited += chunk
-    return waited, False
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    # idle gate BEFORE the session spins up: the JVM/warm-up work below
-    # contributes to the 1-min loadavg itself, so gating here measures
-    # the *host's* contention, not our own warm-up
-    idle_wait_sec, idle_wait_exhausted = wait_for_idle_host()
     from goose_spark.plans.guards import release_shared
     from goose_spark.queries import load_all
     from goose_spark.session import get_spark
@@ -120,17 +73,15 @@ def main() -> None:
 
     from goose_spark.operators.cache import BUILD_LOG
 
-    load_before = tuple(round(v, 2) for v in os.getloadavg())
+    sc = spark.sparkContext
     timings: dict[str, float] = {}
     cold: dict[str, float] = {}
     cache_builds: dict[str, dict] = {}
-    # VERDICT r14 directive #1 (sidecar-only): a per-query 1-min
-    # loadavg stamp (queries_loadavg), so a same-code outlier in the
-    # record can be matched to a contended window on the host
-    queries_loadavg: dict[str, float] = {}
+    profile: dict[str, dict] = {}
     for name in sorted(registry):
         spec = registry[name]
         runs: list[float] = []
+        sc.setJobGroup(name, f"bench {name}")
         # best-of-2 (min), matching the DuckDB baseline's methodology —
         # single-shot/first-run timing made BENCH_r12 a hostage to host
         # state (229 s driver vs 148 s judge vs 114 s builder, same
@@ -161,14 +112,14 @@ def main() -> None:
             # k-means) stay warm — clearCache() here cost the sweep
             # ~8-15 s in rebuilt caches
             release_shared()
-        queries_loadavg[name] = round(os.getloadavg()[0], 2)
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        profile[name] = job_profile(sc, name)
         if not runs:
             timings[name] = cold[name] = -1.0
         else:
             # cold = first SUCCESSFUL run; min over successful runs
             cold[name] = round(runs[0], 4)
             timings[name] = round(min(runs), 4)
-    load_after = tuple(round(v, 2) for v in os.getloadavg())
 
     ok = [v for v in timings.values() if v >= 0]
     full = {
@@ -179,16 +130,12 @@ def main() -> None:
         "queries": timings,
         "queries_cold": cold,
         "cache_builds": cache_builds,
-        "loadavg": {"before": load_before, "after": load_after},
-        "idle_wait_sec": round(idle_wait_sec, 1),
-        "idle_wait_exhausted": idle_wait_exhausted,
+        "profile": profile,
         "sf": sf_dir,
         "n_queries": len(timings),
         "failed": sorted(k for k, v in timings.items() if v < 0),
         "vs_duckdb": vs_duckdb(timings, sf_dir),
         "jobs_throughput": jobs_throughput(spark),
-        # per-query host-state stamps (VERDICT r14 directive #1)
-        "queries_loadavg": queries_loadavg,
         # JIT code-cache headroom at sweep end (VERDICT r14 directive
         # #9): the r14 ReservedCodeCacheSize=512m fix must keep >20%
         # headroom as the inventory grows, or late-sweep queries start
@@ -229,15 +176,6 @@ def main() -> None:
         "jobs_per_sec": jt["jobs_per_sec"],
         "enqueue_jobs_per_sec": jt["enqueue_jobs_per_sec"],
         "jobs_p50_latency_sec": jt["latency_sec"]["p50"],
-        # host-state sentinel (1-min loadavg): a record captured on a
-        # contended host self-identifies instead of reading as a
-        # regression (the BENCH_r12 lesson)
-        "loadavg_1m": [load_before[0], load_after[0]],
-        # idle gate (r14): seconds spent waiting for loadavg < threshold
-        # before the session started; exhausted=true means the bounded
-        # budget ran out and the sweep proceeded on a contended host
-        "idle_wait_sec": round(idle_wait_sec, 1),
-        "idle_wait_exhausted": idle_wait_exhausted,
         "timing": "best-of-2",
         "full": sidecar,
     }
@@ -247,6 +185,17 @@ def main() -> None:
         line = json.dumps(compact)
     print(line)
     spark.stop()
+
+
+def job_profile(sc, group: str) -> dict:
+    """Spark jobs and completed tasks run under job group ``group``, read
+    from the status tracker once the listener bus has drained."""
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    st = sc.statusTracker()
+    jobs = st.getJobIdsForGroup(group)
+    stages = [s for j in jobs if (info := st.getJobInfo(j)) for s in info.stageIds]
+    tasks = sum(info.numCompletedTasks for s in stages if (info := st.getStageInfo(s)))
+    return {"jobs": len(jobs), "tasks": tasks}
 
 
 def code_cache_usage(spark) -> dict | None:

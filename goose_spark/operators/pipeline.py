@@ -518,8 +518,7 @@ FROM dx GROUP BY 1 ORDER BY split"""
         "contamination sp6/sp12 then only have to police across "
         "DATASETS, not within one). Same ~80/10/10 bucketing as sp1; "
         "the only extra cost over sp1 is the cluster-label join, and "
-        "the label table is the already-maintained dd6/IncrementalComponents "
-        "output at 100 TB. Leakage-zero is pinned in "
+        "the label table is dd6's output at 100 TB. Leakage-zero is pinned in "
         "tests/test_pipeline_ops.py (no verified near-dup pair straddles "
         "two splits; the sp1 doc-id split DOES straddle).",
     tags=("llm", "pipeline", "dedup"),

@@ -67,8 +67,10 @@ def cosine(q, n):
     ``_dot``: the one re-rank / refine score over an explicit candidate
     list (IVF+PQ and PQ refine, SQ8 re-rank, the oversized IVF serve).
     ``_dot`` folds in ``fold_dot``'s order, so it equals the in-cell
-    serve kernel's score bit for bit."""
-    return _dot(q, n) / (F.sqrt(_dot(q, q)) * F.sqrt(_dot(n, n)))
+    serve kernel's score bit for bit. A zero-norm vector scores NULL, as
+    in the kernel placements: ``try_divide``, since ANSI mode's ``/``
+    raises DIVIDE_BY_ZERO and fails the whole query."""
+    return F.try_divide(_dot(q, n), F.sqrt(_dot(q, q)) * F.sqrt(_dot(n, n)))
 
 
 def rank_top_k(scored: DataFrame, k: int) -> DataFrame:
@@ -255,7 +257,7 @@ def _train_ivf(v: DataFrame, k: int = IVF_K) -> list:
     (mapInPandas matmul); the centroid update collects only k×dim floats
     to the driver — the standard scalable k-means shape. ``k`` defaults
     to the registry's IVF_K; the cells-proportional-to-corpus scale
-    experiment (tools/scale_cells64.py) passes a larger k — the dial
+    point (tools/scale_point.py serve --cells K) passes a larger k — the dial
     that keeps per-query candidate volume BOUNDED as the corpus grows
     (the fixed-k index degrades to a constant-fraction scan)."""
     import numpy as np

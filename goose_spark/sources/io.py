@@ -2,10 +2,8 @@
 
 The reference's "sources" are broker queues (Redis lists / RMQ queues);
 the engine's sources are storage formats + streams. This module gives
-the uniform load/save surface: batch formats (parquet/csv/json/orc),
-streaming file sources, and gated connectors for systems absent from
-this environment (Kafka, Delta) — the call sites are real, the drivers
-load lazily.
+the uniform load/save surface: batch formats (parquet/csv/json/orc)
+and streaming file sources.
 
 Scale defaults: writers partition by the supplied columns (partition
 pruning on read), `maxFilesPerTrigger` bounds streaming admission, CSV/
@@ -62,115 +60,6 @@ def load_stream(spark: SparkSession, path: str, schema: T.StructType | str,
         .options(**options)
         .load(path)
     )
-
-
-def kafka_stream(spark: SparkSession, bootstrap: str, topic: str, **options) -> DataFrame:
-    """Kafka source — the production ledger transport (SCALE.md). The
-    connector jar is not present in this environment; the call site is
-    the real API shape."""
-    try:
-        return (
-            spark.readStream.format("kafka")
-            .option("kafka.bootstrap.servers", bootstrap)
-            .option("subscribe", topic)
-            .options(**options)
-            .load()
-        )
-    except Exception as exc:  # pragma: no cover — absent connector
-        raise NotImplementedError(
-            "kafka connector not available in this environment"
-        ) from exc
-
-
-# ---------------------------------------------------------------------------
-# Kafka wire format (transport for the job ledger at scale — SCALE.md).
-#
-# The connector binding above is environmental; everything else about the
-# Kafka path — the wire schema, the record<->job-row transforms, and the
-# per-queue partitioning contract — is plain DataFrame code, testable
-# without a broker by constructing batch DataFrames in KAFKA_WIRE_SCHEMA.
-# ---------------------------------------------------------------------------
-
-#: Exact schema the Spark Kafka source produces (and the sink consumes:
-#: key/value/topic). Mirrors spark-sql-kafka's fixed output columns.
-KAFKA_WIRE_SCHEMA = T.StructType(
-    [
-        T.StructField("key", T.BinaryType(), True),
-        T.StructField("value", T.BinaryType(), True),
-        T.StructField("topic", T.StringType(), True),
-        T.StructField("partition", T.IntegerType(), True),
-        T.StructField("offset", T.LongType(), True),
-        T.StructField("timestamp", T.TimestampType(), True),
-        T.StructField("timestampType", T.IntegerType(), True),
-    ]
-)
-
-#: Topic naming contract: one topic per goose queue (the analog of the
-#: reference's one-Redis-list-per-queue, src/goose/defaults.clj:24-26).
-TOPIC_PREFIX = "goose.jobs."
-
-
-def jobs_to_kafka_records(jobs):
-    """Producer-side transform: ledger rows → Kafka records.
-
-    key = job queue (all rows of a queue land on one topic-partition,
-    preserving goose's per-queue FIFO within a partition — the same
-    ordering contract as the Redis list, src/goose/brokers/redis/
-    commands.clj:128-132); value = the whole job row as JSON (the
-    engine's analog of the nippy blob, src/goose/utils.clj:13-17).
-    """
-    from pyspark.sql import functions as F
-
-    cols = [f.name for f in jobs.schema.fields]
-    return jobs.select(
-        F.col("queue").cast("string").cast("binary").alias("key"),
-        F.to_json(F.struct(*cols)).cast("binary").alias("value"),
-        F.concat(F.lit(TOPIC_PREFIX), F.col("queue")).alias("topic"),
-    )
-
-
-def kafka_records_to_jobs(records, drop_malformed: bool = True):
-    """Consumer-side transform: Kafka records → ledger-schema rows.
-
-    Parses ``value`` against JOB_SCHEMA, then normalizes the fields a
-    sparse producer may omit: status defaults to 'enqueued', priority to
-    back-of-queue, max_retries to the goose default
-    (src/goose/retry.clj:61), enqueued_at to the broker append time
-    (Kafka record timestamp), and queue to the topic suffix. Malformed
-    payloads (unparseable JSON / missing id or execute_fn) are dropped
-    by default — pass drop_malformed=False to keep them with a
-    ``_malformed`` flag for a dead-letter sink.
-    """
-    from pyspark.sql import functions as F
-
-    from goose_spark.schema import (
-        DEFAULT_MAX_RETRIES,
-        JOB_SCHEMA,
-        PRIORITY_BACK,
-        STATUS_ENQUEUED,
-    )
-
-    j = records.select(
-        F.from_json(F.col("value").cast("string"), JOB_SCHEMA).alias("j"),
-        F.col("topic"),
-        F.col("timestamp").alias("_kafka_ts"),
-    )
-    topic_queue = F.regexp_replace("topic", f"^{TOPIC_PREFIX.replace('.', chr(92) + '.')}", "")
-    fixed = {
-        "queue": F.coalesce(F.col("j.queue"), topic_queue),
-        "status": F.coalesce(F.col("j.status"), F.lit(STATUS_ENQUEUED)),
-        "priority": F.coalesce(F.col("j.priority"), F.lit(PRIORITY_BACK)),
-        "enqueued_at": F.coalesce(F.col("j.enqueued_at"), F.col("_kafka_ts")),
-        "max_retries": F.coalesce(F.col("j.max_retries"), F.lit(DEFAULT_MAX_RETRIES)),
-        "retry_count": F.coalesce(F.col("j.retry_count"), F.lit(0)),
-    }
-    out = j.select(
-        *[fixed.get(f.name, F.col(f"j.{f.name}")).alias(f.name) for f in JOB_SCHEMA.fields]
-    )
-    malformed = F.col("id").isNull() | F.col("execute_fn").isNull()
-    if drop_malformed:
-        return out.filter(~malformed)
-    return out.withColumn("_malformed", malformed)
 
 
 def load_jsonl_quarantined(

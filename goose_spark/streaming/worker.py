@@ -68,6 +68,15 @@ DEFAULT_SCHEDULE_POP_LIMIT = 10_000
 # defaultParallelism — 250 quick jobs take 4 tasks, not 32 round-trips.
 ROWS_PER_TASK = 64
 
+# Micro-batch latency bound: batches of at most this many rows take the
+# driver-compacted path (one materialization job + single-file commit)
+# and fan execution out at ceil(rows / ROWS_PER_TASK) tasks instead of a
+# fixed 32 — per-batch fixed cost measured ~1.3 s → ~0.5 s on the
+# 1000 jobs/s parity load. Larger batches and sweep chunks take the
+# executor-side commit (_commit_distributed); 0 sends every batch there.
+# Read at call time.
+SMALL_BATCH_ROWS = 10_000
+
 
 def _coerce_log_pdf(pdf: "pd.DataFrame") -> "pd.DataFrame":
     """pandas → Spark-log-schema dtype coercion: a toPandas()/pyarrow
@@ -270,7 +279,6 @@ class Worker:
                  death_handler: str | None = None,
                  skip_dead_queue: bool = False,
                  schedule_pop_limit: int = DEFAULT_SCHEDULE_POP_LIMIT,
-                 small_batch_rows: int = 10_000,
                  now_fn: Callable[[], datetime] | None = None):
         import threading
 
@@ -291,14 +299,6 @@ class Worker:
         # drain loop still clears any backlog either way, it just takes
         # more iterations.
         self.schedule_pop_limit = max(1, int(schedule_pop_limit))
-        # Micro-batch latency knob: batches ≤ small_batch_rows take the
-        # driver-compacted path (one materialization job + single-file
-        # commit) and fan execution out at ceil(rows / ROWS_PER_TASK)
-        # tasks instead of a fixed 32 — per-batch fixed cost measured
-        # ~1.3 s → ~0.5 s on the 1000 jobs/s parity load. Larger batches
-        # and sweep chunks take the executor-side commit
-        # (_commit_distributed); 0 sends every batch there.
-        self.small_batch_rows = max(0, int(small_batch_rows))
         # retry.clj:47-55 handler parity: registry fn names called
         # executor-side on failure/death; skip_dead_queue writes dying
         # jobs as 'deleted' (no dead-queue entry). Validated at
@@ -537,12 +537,12 @@ class Worker:
         # the park/queue splits happen in pandas, and the outcome commits
         # as one file — vs 4-5 Spark jobs (park collect, isEmpty, 32-task
         # staged write, read-back summary) whose fixed costs floored
-        # per-batch latency at ~1.3 s. Bounded by small_batch_rows
-        # (default 10k ≈ a few MB): large batches — the 100 TB shape —
+        # per-batch latency at ~1.3 s. Bounded by SMALL_BATCH_ROWS
+        # (10k ≈ a few MB): large batches — the 100 TB shape —
         # keep the fully distributed path, so this is a latency
         # optimization with a hard ceiling, not a driver funnel.
         n_est = self._batch_rows_estimate(epoch_id)
-        small = n_est is not None and 0 < n_est <= self.small_batch_rows
+        small = n_est is not None and 0 < n_est <= SMALL_BATCH_ROWS
         rows = batch_df if small else batch_df.persist()
         try:
             with self._lock:
@@ -648,7 +648,7 @@ class Worker:
         in pandas — createDataFrame slices contiguously, so the narrow
         coalesce in _execute_and_log keeps it and no repartition shuffle
         runs; fan-out is ceil(rows / ROWS_PER_TASK) tasks; a frame of at
-        most small_batch_rows commits driver-side as one file."""
+        most SMALL_BATCH_ROWS commits driver-side as one file."""
         pdf = pdf.sort_values(["priority", "enqueued_at"], ascending=[False, True])
         width = max(
             1,
@@ -661,7 +661,7 @@ class Worker:
             _coerce_log_pdf(pdf), schema=self.ledger._spark_log_schema()
         )
         self._execute_and_log(
-            df, width=width, driver_commit=len(pdf) <= self.small_batch_rows
+            df, width=width, driver_commit=len(pdf) <= SMALL_BATCH_ROWS
         )
 
     def _execute_and_log(self, df: DataFrame, width: int | None = None,

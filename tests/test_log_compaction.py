@@ -1,8 +1,6 @@
 """Generational ledger-log compaction (round-10 directive #5): fold
 stream-committed micro-batch files into gen-* generations WHILE
-consumers run — bounded per-trigger listing cost, zero behavior change.
-Transparency standard modeled on test_components_inc's corpus-store
-compaction tests."""
+consumers run — bounded per-trigger listing cost, zero behavior change."""
 
 from __future__ import annotations
 

@@ -155,10 +155,12 @@ def test_ivf_serve_driver_placement_matches_in_cell(spark, monkeypatch, edge_ind
     """Probed cells within EMBEDDING_ROW_CAP footer rows are read, scored
     and ranked in the driver; the rows equal those of the distributed
     in-cell ``mapInPandas`` placement (forced here by a cap below the
-    probed rows but not below the 10-query batch) on a tombstoned id, a
-    -0.0/0.0 duplicate append and a zero vector, whose NaN cosine is
-    NULL on both placements. Rows compare by ``repr``, so NaN, NULL and
-    the sign of a zero count. Runs in the default gate."""
+    probed rows but not below the 10-query batch) and of the
+    oversized-batch placement (a cap below the batch, scored by
+    ``similarity.cosine``) on a tombstoned id, a -0.0/0.0 duplicate
+    append and a zero vector, whose NaN cosine is NULL on all three.
+    Rows compare by ``repr``, so NaN, NULL and the sign of a zero count.
+    Runs in the default gate."""
     import goose_spark.operators.annindex as ai
     from goose_spark.operators.similarity import _embeddings
 
@@ -175,6 +177,9 @@ def test_ivf_serve_driver_placement_matches_in_cell(spark, monkeypatch, edge_ind
     got = sorted(repr(tuple(r)) for r in driver.collect())
     want = sorted(repr(tuple(r)) for r in in_cell.collect())
     assert got == want
+    monkeypatch.setattr(ai, "EMBEDDING_ROW_CAP", 3)  # 10 queries > cap
+    oversized = _EDGE_SERVES[serve](ai, spark, edge_index, q)
+    assert sorted(repr(tuple(r)) for r in oversized.collect()) == want
     hits = [r for r in driver.collect() if r["neighbor_id"] >= 9000]
     dup_rows = [r["query_id"] for r in hits if r["neighbor_id"] == 9000]
     assert 0 in dup_rows and len(dup_rows) == len(set(dup_rows))  # one slot per query

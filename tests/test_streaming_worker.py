@@ -13,6 +13,7 @@ import pytest
 from goose_spark.api import LedgerAPI
 from goose_spark.client import JobClient
 from goose_spark.functions.registry import reset_flaky
+import goose_spark.streaming.worker as worker_mod
 from goose_spark.streaming.ledger import Ledger
 from goose_spark.streaming.worker import Worker
 
@@ -302,21 +303,21 @@ def test_priority_front_executes_first_within_partitions(spark, ledger, tmp_path
     [None, 0],
     ids=["driver_commit", "executor_commit"],
 )
-def test_in_progress_visibility_and_crash_window(spark, ledger, tmp_path,
+def test_in_progress_visibility_and_crash_window(spark, ledger, tmp_path, monkeypatch,
                                                  small_batch_rows):
     """emit_in_progress=True: in-flight rows are stamped before
     execution; after a simulated crash (checkpoint rollback) the state
     view would show them in_progress, and replay finishes them. Runs on
     both commit paths: the default small batch stamps driver-side,
-    small_batch_rows=0 stamps from the executors (Ledger.append_df)."""
+    SMALL_BATCH_ROWS=0 stamps from the executors (Ledger.append_df)."""
     import shutil
 
     client = JobClient(ledger)
     for i in range(5):
         client.perform_async("noop", i)
-    opts = {} if small_batch_rows is None else {"small_batch_rows": small_batch_rows}
-    worker = Worker(spark, ledger, rand_int=lambda n: 0, emit_in_progress=True,
-                    **opts)
+    if small_batch_rows is not None:
+        monkeypatch.setattr(worker_mod, "SMALL_BATCH_ROWS", small_batch_rows)
+    worker = Worker(spark, ledger, rand_int=lambda n: 0, emit_in_progress=True)
     snapshot = str(tmp_path / "ck-snap")
     shutil.copytree(ledger.checkpoint_dir, snapshot)
     worker.process_available()
@@ -562,7 +563,7 @@ def test_per_batch_linger_compaction(spark, ledger):
     assert ledger.compact(spark)["expired_batches"] == 0
 
 
-def test_crash_recovery_replays_unacked_batch(spark, ledger):
+def test_crash_recovery_replays_unacked_batch(spark, ledger, monkeypatch):
     """W10 orphan recovery, exercised not just designed (mirrors
     test/goose/brokers/redis/integration_test.clj:67-86): a worker dies
     mid-commit — executor parts staged, the publishing rename never
@@ -574,11 +575,11 @@ def test_crash_recovery_replays_unacked_batch(spark, ledger):
     for i in range(5):
         client.perform_async("noop", i)
 
-    # small_batch_rows=0 pins the STAGED (distributed) commit path —
+    # SMALL_BATCH_ROWS=0 pins the STAGED (distributed) commit path —
     # this test exercises its torn-staging recovery specifically; the
     # small-batch driver commit has its own crash test below
-    w1 = Worker(spark, ledger, worker_id="w-crash", rand_int=lambda n: 0,
-                small_batch_rows=0)
+    monkeypatch.setattr(worker_mod, "SMALL_BATCH_ROWS", 0)
+    w1 = Worker(spark, ledger, worker_id="w-crash", rand_int=lambda n: 0)
     orig_append = ledger.append_df
 
     def dying_append(df):
@@ -600,7 +601,8 @@ def test_crash_recovery_replays_unacked_batch(spark, ledger):
     assert any(f.startswith(".staging-") for f in os.listdir(ledger.root))
 
     # restart (same checkpoint = the preservation queue): the unacked
-    # micro-batch replays, exactly once
+    # micro-batch replays, exactly once, under the default bound
+    monkeypatch.undo()
     w2 = Worker(spark, ledger, worker_id="w-recovered", rand_int=lambda n: 0)
     w2.process_available()
     assert w2.executions == 5
@@ -648,7 +650,7 @@ def test_crash_recovery_small_batch_path(spark, ledger):
 
 
 def test_small_batch_routing(spark, ledger, monkeypatch):
-    """Micro-batches at or under small_batch_rows take the driver-
+    """Micro-batches at or under SMALL_BATCH_ROWS take the driver-
     compacted path; bigger ones keep the fully distributed path. The
     row estimate comes from the streaming source log + parquet footers
     (no Spark job)."""
@@ -671,8 +673,8 @@ def test_small_batch_routing(spark, ledger, monkeypatch):
     calls.clear()
     for i in range(20):
         client.perform_async("noop", 100 + i)
-    Worker(spark, ledger, rand_int=lambda n: 0,
-           small_batch_rows=5).process_available()
+    monkeypatch.setattr(worker_mod, "SMALL_BATCH_ROWS", 5)
+    Worker(spark, ledger, rand_int=lambda n: 0).process_available()
     assert calls == []  # 20 rows > 5 → distributed path
     assert counts(spark, ledger) == {"success": 40}
 
