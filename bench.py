@@ -47,7 +47,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from goose_spark.plans.guards import release_shared
     from goose_spark.queries import load_all
-    from goose_spark.session import get_spark
+    from goose_spark.session import get_spark, warm_up
 
     # console_progress=False: the compact JSON line on stdout is the
     # driver's bench channel; progress-bar escape codes on stderr were
@@ -56,20 +56,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     registry = load_all()
 
-    # warm-up parity with the reference harness (criterium JVM warm-up,
-    # perf/goose/core.clj:39-53): touch the JVM, parquet reader, AND the
-    # Python worker pool (Arrow path) before timing anything
-    spark.read.parquet(os.path.join(sf_dir, "region.parquet")).count()
-    import pandas as _pd
-
-    spark.range(1000).mapInPandas(lambda it: it, schema="id long").count()
-    # ... and the shuffle/exchange + broadcast machinery (first shuffle in
-    # a fresh JVM costs seconds of codegen/AQE spin-up that otherwise
-    # lands on whichever query runs first)
-    from pyspark.sql import functions as F
-
-    warm = spark.range(100_000).withColumn("k", F.col("id") % 101)
-    warm.groupBy("k").count().join(F.broadcast(spark.range(101).withColumnRenamed("id", "k")), "k").count()
+    warm_up(spark, sf_dir)
 
     from goose_spark.operators.cache import BUILD_LOG
 

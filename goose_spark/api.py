@@ -276,8 +276,9 @@ class LedgerAPI:
             )
         ).persist()
         try:
-            _, n = self.ledger.append_df(doomed)
-            self.ledger.add_tombstones_df(doomed)
+            # log rows and tombstones are one commit: a crash can never
+            # leave "deleted" rows whose undelivered jobs still execute
+            n = self.ledger.append_deletes_df(doomed)
         finally:
             doomed.unpersist()
         return n

@@ -33,8 +33,6 @@ LLM-pipeline operator family (SURVEY §2.5 north star).
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -43,6 +41,7 @@ from pyspark.sql.window import Window
 from goose_spark.operators.dedup import _band_keys, _minhash_sig
 from goose_spark.operators.textlib import normalized_fingerprint, with_shingles
 from goose_spark.plans.guards import NARROW_ROW_CAP, bounded_broadcast
+from goose_spark.streaming.commit import Publisher
 
 #: Quality gate (tx3 buckets): accept medium+ docs.
 MIN_CHARS = 100
@@ -93,141 +92,6 @@ def anti_join_history(batch: DataFrame, history: DataFrame, keys,
     )
 
 
-class _AtomicPublisher:
-    """Multi-directory staged publish under ONE commit manifest — the
-    corpus row append and both index appends land together or not at
-    all (the ADVICE desync: a crash between three separate publishes
-    left the dedup indexes out of step with the corpus forever). Same
-    manifest/roll-forward protocol as Ledger._write_manifest: manifest
-    write is the commit point; any later open finishes the renames."""
-
-    def __init__(self, root: str):
-        self.root = root
-        self.commits_dir = os.path.join(root, "_commits")
-        os.makedirs(self.commits_dir, exist_ok=True)
-
-    def recover(self) -> None:
-        import json as _json
-
-        for f in sorted(os.listdir(self.commits_dir)):
-            if not f.endswith(".json"):
-                continue
-            try:
-                with open(os.path.join(self.commits_dir, f)) as fh:
-                    manifest = _json.load(fh)
-            except (OSError, ValueError):
-                continue
-            staged = any(
-                os.path.isdir(os.path.join(self.root, s))
-                for s in manifest.get("stagings", [])
-                if s.startswith(".staging-")
-            )
-            # a compaction manifest may have finished its renames but
-            # died mid-delete: removed filenames are uuid-unique, so
-            # "remove target still present" always means pending work
-            pending_removes = any(
-                os.path.exists(os.path.join(self.root, r["dest"], r["file"]))
-                for r in manifest.get("removes", [])
-            )
-            if staged or pending_removes:
-                self._apply(manifest)
-
-    def _apply(self, manifest: dict) -> int:
-        rows = 0
-        for e in manifest["entries"]:
-            src = os.path.join(self.root, e["staging"], e["src"])
-            dst_dir = os.path.join(self.root, e["dest"])
-            os.makedirs(dst_dir, exist_ok=True)
-            dst = os.path.join(dst_dir, e["dst"])
-            if os.path.exists(dst):
-                rows += e["rows"]
-                continue
-            if os.path.exists(src):
-                os.replace(src, dst)
-                rows += e["rows"]
-        # deletes AFTER all adds, and ONLY once every add is in place:
-        # if any entry's dst is missing (its staged src was lost — e.g.
-        # a rename raised and something cleaned the staging), deleting
-        # the originals would turn a recoverable torn commit into data
-        # loss. Leave everything for the operator / a later recover.
-        satisfied = all(
-            os.path.exists(os.path.join(self.root, e["dest"], e["dst"]))
-            for e in manifest["entries"]
-        )
-        if not satisfied:
-            return rows
-        for r in manifest.get("removes", []):
-            p = os.path.join(self.root, r["dest"], r["file"])
-            if os.path.exists(p):
-                os.remove(p)
-        for s in manifest.get("stagings", []):
-            if s.startswith(".staging-"):
-                shutil.rmtree(os.path.join(self.root, s), ignore_errors=True)
-        return rows
-
-    def publish(self, items: list[tuple[DataFrame, str]],
-                removes: list[dict] | None = None) -> int:
-        """Stage every (df, dest_subdir), then commit all renames —
-        plus optional ``removes`` ([{dest, file}], the compaction
-        delete-set) — under one manifest. Returns total rows published."""
-        import json as _json
-        import time as _time
-
-        import pyarrow.parquet as pq
-
-        stagings: list[str] = []
-        entries: list[dict] = []
-        committed = False
-        try:
-            for df, dest in items:
-                staging = os.path.join(self.root, f".staging-{uuid.uuid4().hex}")
-                df.write.mode("overwrite").parquet(staging)
-                stagings.append(staging)
-                for f in sorted(os.listdir(staging)):
-                    if not f.endswith(".parquet"):
-                        continue
-                    n = pq.ParquetFile(os.path.join(staging, f)).metadata.num_rows
-                    if n == 0:
-                        continue
-                    entries.append(
-                        {
-                            "staging": os.path.basename(staging),
-                            "src": f,
-                            "dest": dest,
-                            "dst": f"{uuid.uuid4().hex}.parquet",
-                            "rows": n,
-                        }
-                    )
-            manifest = {
-                "seq": _time.time_ns(),
-                "stagings": [os.path.basename(s) for s in stagings],
-                "entries": entries,
-                "removes": removes or [],
-            }
-            if not entries and not removes:
-                return 0
-            path = os.path.join(self.commits_dir, f"{manifest['seq']}.json")
-            tmp = path + f".tmp-{uuid.uuid4().hex}"
-            with open(tmp, "w") as fh:
-                _json.dump(manifest, fh)
-                fh.flush()
-                os.fsync(fh.fileno())
-            os.replace(tmp, path)  # ← the commit point
-            committed = True
-            return self._apply(manifest)
-        finally:
-            # pre-commit: abandoned stagings are garbage — clean them.
-            # POST-commit, the staged files ARE the durable copy of any
-            # entry whose rename hasn't happened yet; deleting them
-            # after an _apply failure would strand the manifest with
-            # neither src nor dst (and a compaction's removes would
-            # then be the only thing recover could do — data loss).
-            # _apply removes stagings itself once every dst is in place.
-            if not committed:
-                for s in stagings:
-                    shutil.rmtree(s, ignore_errors=True)
-
-
 class CorpusIngest:
     """Accumulating corpus store under ``root``:
 
@@ -240,8 +104,11 @@ class CorpusIngest:
         self.root = root
         for d in ("corpus", "fingerprints", "bands"):
             os.makedirs(os.path.join(root, d), exist_ok=True)
-        self._publisher = _AtomicPublisher(root)
-        # roll any torn multi-dir commit forward before serving reads
+        # corpus rows and both indexes land under ONE commit manifest (a
+        # crash between separate publishes would leave the dedup indexes
+        # out of step with the corpus forever); roll any torn commit
+        # forward before serving reads
+        self._publisher = Publisher(root)
         self._publisher.recover()
 
     def _read(self, spark: SparkSession, name: str) -> DataFrame | None:
@@ -279,7 +146,7 @@ class CorpusIngest:
             if len(files) <= target_files:
                 continue
             df = spark.read.parquet(*files).coalesce(target_files)
-            items.append((df, name))
+            items.append((df, name, ""))
             removes.extend(
                 {"dest": name, "file": os.path.basename(f)} for f in files
             )
@@ -456,9 +323,9 @@ class CorpusIngest:
             #    manifest — all three land or none do
             self._publisher.publish(
                 [
-                    (accepted.drop("fp"), "corpus"),
-                    (accepted.select("fp", "doc_id"), "fingerprints"),
-                    (new_bands.join(accepted.select("doc_id"), "doc_id"), "bands"),
+                    (accepted.drop("fp"), "corpus", ""),
+                    (accepted.select("fp", "doc_id"), "fingerprints", ""),
+                    (new_bands.join(accepted.select("doc_id"), "doc_id"), "bands", ""),
                 ]
             )
             return {

@@ -99,6 +99,23 @@ def get_spark(app_name: str = "gosling", cpus: int | None = None,
     return builder.getOrCreate()
 
 
+def warm_up(spark: SparkSession, sf_dir: str) -> None:
+    """Pay a fresh session's one-time costs before anything is timed:
+    the parquet reader, the Python worker pool (Arrow path), and the
+    shuffle/exchange + broadcast machinery — the first shuffle in a new
+    JVM costs seconds of codegen/AQE spin-up that otherwise lands on
+    whichever query runs first (the criterium JVM warm-up of the
+    reference harness, perf/goose/core.clj:39-53)."""
+    from pyspark.sql import functions as F
+
+    spark.read.parquet(os.path.join(sf_dir, "region.parquet")).count()
+    spark.range(1000).mapInPandas(lambda it: it, schema="id long").count()
+    warm = spark.range(100_000).withColumn("k", F.col("id") % 101)
+    warm.groupBy("k").count().join(
+        F.broadcast(spark.range(101).withColumnRenamed("id", "k")), "k"
+    ).count()
+
+
 def load_testdata(spark: SparkSession, sf_dir: str) -> dict[str, "object"]:
     """Register every testdata table as a temp view and return the dict.
 

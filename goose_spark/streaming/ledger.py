@@ -28,9 +28,8 @@ the full set.
 
 from __future__ import annotations
 
-import itertools
+import contextlib
 import os
-import shutil
 import time
 import uuid
 
@@ -42,6 +41,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from goose_spark.schema import JOB_SCHEMA
+from goose_spark.streaming.commit import Publisher, next_seq
 
 _TS = pa.timestamp("us")
 ARROW_JOB_FIELDS = [
@@ -65,13 +65,6 @@ ARROW_JOB_FIELDS = [
     ("worker_id", pa.string()),
 ]
 ARROW_LOG_SCHEMA = pa.schema(ARROW_JOB_FIELDS + [("seq", pa.int64())])
-
-_seq_tiebreak = itertools.count()
-
-
-def next_seq() -> int:
-    """Monotonic log sequence (ns clock + in-process tiebreak)."""
-    return time.time_ns() + next(_seq_tiebreak)
 
 
 def _stream_committed_files(checkpoint: str) -> set[str] | None:
@@ -135,142 +128,13 @@ class Ledger:
         self.commits_dir = os.path.join(root, "_commits")
         for d in (self.log_dir, self.scheduled_dir, self.batches_dir,
                   self.tombstones_dir, os.path.join(root, "cron"),
-                  self.checkpoint_dir, self.commits_dir):
+                  self.checkpoint_dir):
             os.makedirs(d, exist_ok=True)
-        # roll torn commits forward BEFORE sweeping staging dirs: a
-        # staging dir referenced by a manifest is a commit in flight,
-        # not an orphan
-        self._recover_torn_commits()
-        self._sweep_stale_staging()
-        self._prune_manifests()
-
-    # ---- commit manifests (the transaction-log shape) ----------------------
-    #
-    # A distributed append publishes N staged parts with N renames — not
-    # atomic by itself. The manifest (`_commits/<seq>.json`, written
-    # atomically BEFORE the first rename) makes it transactional the way
-    # a Delta commit file does: a crash mid-publish leaves either no
-    # manifest (staging is garbage, swept by age) or a manifest whose
-    # remaining renames any later Ledger open completes (roll-forward).
-    # Readers keep listing log/ — the invariant is that parts appear
-    # there only under a commit guaranteed to finish.
-
-    def _write_manifest(self, seq: int, staging: str, entries: list[dict],
-                        deletes: list[str] | None = None) -> str:
-        import json as _json
-
-        path = os.path.join(self.commits_dir, f"{seq}.json")
-        tmp = path + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as fh:
-            _json.dump(
-                {
-                    "seq": seq,
-                    "staging": os.path.basename(staging),
-                    "files": entries,
-                    "deletes": [os.path.basename(d) for d in (deletes or [])],
-                },
-                fh,
-            )
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(tmp, path)
-        self._manifest_writes = getattr(self, "_manifest_writes", 0) + 1
-        if self._manifest_writes % 512 == 0:
-            self._prune_manifests()
-        return path
-
-    def _prune_manifests(self, keep: int = 1024) -> None:
-        """Drop the oldest COMMITTED manifests beyond ``keep`` (their
-        staging dirs are gone, so they are pure audit) — the checkpoint-
-        and-expire a Delta log applies to its commit files."""
-        names = sorted(
-            f for f in os.listdir(self.commits_dir) if f.endswith(".json")
-        )
-        for f in names[:-keep] if len(names) > keep else []:
-            import json as _json
-
-            path = os.path.join(self.commits_dir, f)
-            try:
-                with open(path) as fh:
-                    staging = _json.load(fh).get("staging", "")
-                if staging and not os.path.isdir(os.path.join(self.root, staging)):
-                    os.remove(path)
-            except (OSError, ValueError):
-                continue
-
-    def _apply_manifest(self, manifest: dict) -> list[str]:
-        """Execute (or re-execute after a crash) a manifest's renames +
-        deletes. Idempotent: a rename whose dst exists already happened;
-        a delete whose target is gone already happened."""
-        staging = os.path.join(self.root, manifest["staging"])
-        moved = []
-        for e in manifest["files"]:
-            src = os.path.join(staging, e["src"])
-            dst = os.path.join(self.log_dir, e["dst"])
-            if os.path.exists(dst):
-                moved.append(dst)
-                continue
-            if os.path.exists(src):
-                os.replace(src, dst)
-                moved.append(dst)
-        for d in manifest.get("deletes", []):
-            p = os.path.join(self.log_dir, d)
-            if os.path.exists(p):
-                os.remove(p)
-        shutil.rmtree(staging, ignore_errors=True)
-        return moved
-
-    def _recover_torn_commits(self) -> None:
-        import json as _json
-
-        for f in sorted(os.listdir(self.commits_dir)):
-            if not f.endswith(".json"):
-                continue
-            path = os.path.join(self.commits_dir, f)
-            try:
-                with open(path) as fh:
-                    manifest = _json.load(fh)
-            except (OSError, ValueError):
-                continue
-            staging = manifest.get("staging", "")
-            if not (staging.startswith(".staging-") or staging.startswith(".compact-")):
-                continue
-            if os.path.isdir(os.path.join(self.root, staging)):
-                self._apply_manifest(manifest)
-                continue
-            # staging gone but the manifest's deletes still pending: a
-            # crash AFTER every rename landed but BEFORE the delete loop
-            # finished (the _AtomicPublisher precedent — log file names
-            # are uuid-unique, so "delete target still present" always
-            # means pending work, never a re-created file). Finish the
-            # deletes ONLY when every published dst is in place;
-            # otherwise deleting the originals would turn a recoverable
-            # torn commit into data loss.
-            deletes = manifest.get("deletes", [])
-            if deletes and any(
-                os.path.exists(os.path.join(self.log_dir, d)) for d in deletes
-            ) and all(
-                os.path.exists(os.path.join(self.log_dir, e["dst"]))
-                for e in manifest.get("files", [])
-            ):
-                self._apply_manifest(manifest)
-
-    def _sweep_stale_staging(self, max_age_sec: int = 3600) -> None:
-        """Remove orphaned `.staging-*` / `.compact-*` dirs left by a
-        crash mid-publish (the un-renamed parts were never part of the
-        log, so removal is safe — checkpoint replay re-creates the
-        batch). Age-gated so a concurrently-publishing writer on a
-        shared filesystem is never raced."""
-        now = time.time()
-        for f in os.listdir(self.root):
-            if not (f.startswith(".staging-") or f.startswith(".compact-")):
-                continue
-            p = os.path.join(self.root, f)
-            try:
-                if os.path.isdir(p) and now - os.path.getmtime(p) > max_age_sec:
-                    shutil.rmtree(p, ignore_errors=True)
-            except OSError:
-                pass
+        # multi-file publishes (append_df, compact, compact_log, purge)
+        # commit through one manifest protocol; an open rolls any torn
+        # commit forward before serving reads
+        self._publisher = Publisher(root)
+        self._publisher.recover()
 
     # ---- producer-side append (Spark-free, like the goose client) -------
 
@@ -289,10 +153,17 @@ class Ledger:
             seqs.append(r.get("seq", base_seq + i))
         arrays = [pa.array(cols[name], type=typ) for name, typ in ARROW_JOB_FIELDS]
         arrays.append(pa.array(seqs, type=pa.int64()))
-        table = pa.Table.from_arrays(arrays, schema=ARROW_LOG_SCHEMA)
+        self.append_table(pa.Table.from_arrays(arrays, schema=ARROW_LOG_SCHEMA))
+
+    def append_table(self, table: pa.Table) -> None:
+        """Publish ``table`` into ``log/`` as ONE ``{seq}-{uuid}.parquet``
+        file: a hidden tmp write, then one atomic rename — the commit of
+        every producer append and of each small micro-batch."""
+        if table.num_rows == 0:
+            return
         tmp = os.path.join(self.log_dir, f".tmp-{uuid.uuid4().hex}.parquet")
-        pq.write_table(table, tmp)
-        os.replace(tmp, os.path.join(self.log_dir, f"{base_seq}-{uuid.uuid4().hex}.parquet"))
+        pq.write_table(table.cast(ARROW_LOG_SCHEMA), tmp)
+        os.replace(tmp, os.path.join(self.log_dir, f"{next_seq()}-{uuid.uuid4().hex}.parquet"))
 
     # ---- Spark-side distributed append ------------------------------------
 
@@ -302,43 +173,22 @@ class Ledger:
         metadata renames (the Delta-commit shape — row data never
         funnels through the driver). Returns (published files, row count
         from parquet footers)."""
-        import shutil
+        entries = self._publisher.publish([(df, "log", "")])
+        return (
+            [os.path.join(self.log_dir, e["dst"]) for e in entries],
+            sum(e["rows"] for e in entries),
+        )
 
-        staging = os.path.join(self.root, f".staging-{uuid.uuid4().hex}")
-        df.write.mode("overwrite").parquet(staging)
-        try:
-            base = next_seq()
-            entries: list[dict] = []
-            rows = 0
-            for f in sorted(os.listdir(staging)):
-                if not f.endswith(".parquet"):
-                    continue
-                n = pq.ParquetFile(os.path.join(staging, f)).metadata.num_rows
-                if n == 0:
-                    # empty parts (tasks that got no rows) must not reach
-                    # log/: the streaming source's listing + checkpoint
-                    # index grows per file, and a wide repartition emits
-                    # up to `width` empties per micro-batch
-                    continue
-                rows += n
-                entries.append(
-                    {
-                        "src": f,
-                        "dst": f"{base + len(entries)}-{uuid.uuid4().hex}.parquet",
-                        "rows": n,
-                    }
-                )
-            if not entries:
-                return [], 0
-            # the manifest write is THE commit point: before it, the
-            # append never happened; after it, any Ledger open finishes it
-            self._write_manifest(base, staging, entries)
-            moved = self._apply_manifest(
-                {"staging": os.path.basename(staging), "files": entries}
-            )
-        finally:
-            shutil.rmtree(staging, ignore_errors=True)
-        return moved, rows
+    def append_deletes_df(self, doomed: DataFrame) -> int:
+        """Append ``doomed``'s deleted-status rows AND a full-delete
+        tombstone per id as ONE commit (purge's unbounded delete): the
+        log rows never land without the tombstones that stop the jobs'
+        undelivered rows from executing. Returns the log rows written."""
+        entries = self._publisher.publish([
+            (doomed, "log", ""),
+            (doomed.select("id", F.lit(self.TOMB_ALL).alias("max_seq")), "tombstones", ""),
+        ])
+        return sum(e["rows"] for e in entries if e["dest"] == "log")
 
     # ---- Spark-side reads -------------------------------------------------
 
@@ -559,7 +409,6 @@ class Ledger:
         OPTIMIZE-commit shape) — row data never funnels through the
         driver; ``rows_after`` comes from parquet footers."""
         import glob
-        import shutil
 
         state = self.state(spark)
         if drop_terminal_before is not None:
@@ -575,44 +424,23 @@ class Ledger:
             # literal list and let Spark pick the join strategy
             exp_df = spark.createDataFrame([(b,) for b in expired], "batch_id string")
             state = state.join(exp_df, "batch_id", "left_anti")
-        staging = os.path.join(self.root, f".compact-{uuid.uuid4().hex}")
-        state.write.mode("overwrite").parquet(staging)
+        staged = self._publisher.stage([(state, "log", "")])
         old_files = glob.glob(os.path.join(self.log_dir, "*.parquet"))
-        before = len(old_files)
-        rows_after = 0
-        try:
-            base = next_seq()
-            entries: list[dict] = []
-            for f in sorted(os.listdir(staging)):
-                if not f.endswith(".parquet"):
-                    continue
-                n = pq.ParquetFile(os.path.join(staging, f)).metadata.num_rows
-                if n == 0:
-                    continue
-                rows_after += n
-                entries.append(
-                    {"src": f, "dst": f"{base + len(entries)}-compacted.parquet", "rows": n}
-                )
-            # one manifest = the whole OPTIMIZE txn: publish the compacted
-            # parts FIRST, drop the superseded files after (a crash
-            # between the two shows duplicate history rows, which the
-            # max-seq state view already collapses — never missing rows)
-            manifest = {
-                "staging": os.path.basename(staging),
-                "files": entries,
-                "deletes": [os.path.basename(f) for f in old_files],
-            }
-            self._write_manifest(base, staging, entries, deletes=old_files)
-            self._apply_manifest(manifest)
-            # advance the time-travel horizon: versions before this
-            # commit are vacuumed (state_as_of refuses older cursors)
-            marker = os.path.join(self.commits_dir, "COMPACTION")
-            tmp_m = marker + f".tmp-{uuid.uuid4().hex}"
-            with open(tmp_m, "w") as fh:
-                fh.write(str(base))
-            os.replace(tmp_m, marker)
-        finally:
-            shutil.rmtree(staging, ignore_errors=True)
+        floor = next_seq()
+        # one manifest = the whole OPTIMIZE txn: the compacted parts land
+        # FIRST, the superseded files go after (a crash between the two
+        # shows duplicate history rows, which the max-seq state view
+        # already collapses — never missing rows)
+        entries = self._publisher.commit(staged, removes=[
+            {"dest": "log", "file": os.path.basename(f)} for f in old_files
+        ])
+        # advance the time-travel horizon: versions before this commit
+        # are vacuumed (state_as_of refuses older cursors)
+        marker = os.path.join(self.commits_dir, "COMPACTION")
+        tmp_m = marker + f".tmp-{uuid.uuid4().hex}"
+        with open(tmp_m, "w") as fh:
+            fh.write(str(floor))
+        os.replace(tmp_m, marker)
         if expired:
             # drop the expired batches' entity rows too (the EXPIRE hits
             # the batch hash itself in the reference)
@@ -632,8 +460,8 @@ class Ledger:
                 else:
                     os.remove(p)
         return {
-            "files_before": before,
-            "rows_after": rows_after,
+            "files_before": len(old_files),
+            "rows_after": sum(e["rows"] for e in entries),
             "expired_batches": len(expired),
         }
 
@@ -702,39 +530,16 @@ class Ledger:
         df = spark.read.schema(self._spark_log_schema()).parquet(
             *[os.path.join(self.log_dir, f) for f in cand]
         ).coalesce(target_files)
-        staging = os.path.join(self.root, f".compact-{uuid.uuid4().hex}")
-        df.write.mode("overwrite").parquet(staging)
-        import shutil as _shutil
-
-        try:
-            base = next_seq()
-            entries: list[dict] = []
-            rows = 0
-            for f in sorted(os.listdir(staging)):
-                if not f.endswith(".parquet"):
-                    continue
-                n = pq.ParquetFile(os.path.join(staging, f)).metadata.num_rows
-                if n == 0:
-                    continue
-                rows += n
-                entries.append(
-                    {"src": f, "dst": f"gen-{base}-{len(entries)}.parquet", "rows": n}
-                )
-            import contextlib as _contextlib
-
-            with publish_lock if publish_lock is not None else _contextlib.nullcontext():
-                self._write_manifest(base, staging, entries, deletes=cand)
-                self._apply_manifest(
-                    {"staging": os.path.basename(staging), "files": entries,
-                     "deletes": cand}
-                )
-        finally:
-            _shutil.rmtree(staging, ignore_errors=True)
+        staged = self._publisher.stage([(df, "log", "gen-")])
+        with publish_lock if publish_lock is not None else contextlib.nullcontext():
+            entries = self._publisher.commit(staged, removes=[
+                {"dest": "log", "file": f} for f in cand
+            ])
         return {
             "files": len(raw),
             "folded": len(cand),
             "generations": len(entries),
-            "rows": rows,
+            "rows": sum(e["rows"] for e in entries),
         }
 
     # ---- deletion tombstone index -----------------------------------------
@@ -777,33 +582,6 @@ class Ledger:
         tmp = os.path.join(self.tombstones_dir, f".tmp-{uuid.uuid4().hex}.parquet")
         pq.write_table(table, tmp)
         os.replace(tmp, os.path.join(self.tombstones_dir, f"{next_seq()}.parquet"))
-
-    def add_tombstones_df(self, ids_df: DataFrame) -> int:
-        """Distributed variant for unbounded deletions (purge): id rows
-        are written executor-side then published into the index."""
-        import shutil as _shutil
-
-        staging = os.path.join(self.root, f".staging-{uuid.uuid4().hex}")
-        ids_df.select(
-            "id", F.lit(self.TOMB_ALL).alias("max_seq")
-        ).write.mode("overwrite").parquet(staging)
-        rows = 0
-        try:
-            base = next_seq()
-            i = 0
-            for f in sorted(os.listdir(staging)):
-                if not f.endswith(".parquet"):
-                    continue
-                src = os.path.join(staging, f)
-                n = pq.ParquetFile(src).metadata.num_rows
-                if n == 0:
-                    continue
-                rows += n
-                os.replace(src, os.path.join(self.tombstones_dir, f"{base + i}.parquet"))
-                i += 1
-        finally:
-            _shutil.rmtree(staging, ignore_errors=True)
-        return rows
 
     def tombstoned_ids(self, spark: SparkSession) -> DataFrame | None:
         """(id, tomb_max_seq) — suppress a job's rows with seq <= the

@@ -720,7 +720,7 @@ class Worker:
                 "seq",
                 pa.array([base + i for i in range(marked.num_rows)], type=pa.int64()),
             )
-            self._append_log_table(marked)
+            self.ledger.append_table(marked)
         outcome = ordered.mapInPandas(
             _make_executor(self.retry_delay_fn, self.worker_id, self.middlewares,
                            error_handler=self.error_handler,
@@ -734,7 +734,7 @@ class Worker:
         out_tbl = self._to_arrow(outcome)
         self.executions += out_tbl.num_rows
         # one parquet file per micro-batch == the ack/commit txn
-        self._append_log_table(out_tbl)
+        self.ledger.append_table(out_tbl)
         # park retry outcomes immediately so the next tick can sweep them
         # (the stream will also redeliver them; the sweep dedupes by seq)
         retrying = out_tbl.filter(
@@ -821,15 +821,6 @@ class Worker:
             )
         self._run_batch_callbacks(sorted(touched_set))
 
-    def _append_log_table(self, table: pa.Table) -> None:
-        if table.num_rows == 0:
-            return
-        import uuid as _uuid
-
-        tmp = os.path.join(self.ledger.log_dir, f".tmp-{_uuid.uuid4().hex}.parquet")
-        pq.write_table(table.cast(ARROW_LOG_SCHEMA), tmp)
-        os.replace(tmp, os.path.join(self.ledger.log_dir, f"{next_seq()}-{_uuid.uuid4().hex}.parquet"))
-
     @staticmethod
     def _to_arrow(df: DataFrame) -> pa.Table:
         """Micro-batch → arrow (bounded by maxFilesPerTrigger; at 100 TB
@@ -909,7 +900,7 @@ class Worker:
             theirs = theirs.copy()
             base = next_seq()
             theirs["seq"] = [base + i for i in range(len(theirs))]
-            self._append_log_table(
+            self.ledger.append_table(
                 pa.Table.from_pandas(
                     theirs, schema=ARROW_LOG_SCHEMA, preserve_index=False
                 )

@@ -403,15 +403,8 @@ def test_ivfpq_serve_job_budget(spark):
 
     ss7 = load_all()["ss7_ann_ivfpq"].builder
     want = [tuple(r) for r in ss7(spark, SF_SMOKE).collect()]  # builds the index
-    sc = spark.sparkContext
-    group = "test-ss7-job-budget"
-    sc.setJobGroup(group, "ss7 job budget")
-    try:
-        got = [tuple(r) for r in ss7(spark, SF_SMOKE).collect()]
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    got, jobs, _ = in_job_group(spark, "test-ss7-job-budget",
+                                lambda: [tuple(r) for r in ss7(spark, SF_SMOKE).collect()])
     assert got == want and len(got) > 0
     assert 0 < len(jobs) <= 10, sorted(jobs)
 

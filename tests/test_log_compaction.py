@@ -12,6 +12,7 @@ import pytest
 
 from goose_spark.client import JobClient
 from goose_spark.functions.registry import reset_flaky
+from goose_spark.streaming.commit import Publisher
 from goose_spark.streaming.ledger import Ledger, _stream_committed_files
 from goose_spark.streaming.worker import Worker
 
@@ -175,14 +176,14 @@ def test_torn_fold_finishes_deletes_on_reopen(spark, ledger, monkeypatch):
     worker = Worker(spark, ledger, rand_int=lambda n: 0)
     worker.process_available()
 
-    real_apply = Ledger._apply_manifest
+    real_apply = Publisher._apply
 
     def renames_only(self, manifest):
         # simulate the crash: renames land, deletes don't
-        crippled = dict(manifest, deletes=[])
+        crippled = dict(manifest, removes=[])
         return real_apply(self, crippled)
 
-    monkeypatch.setattr(Ledger, "_apply_manifest", renames_only)
+    monkeypatch.setattr(Publisher, "_apply", renames_only)
     stats = ledger.compact_log(spark, [worker.checkpoint_dir],
                                min_files=1, keep_recent=0)
     monkeypatch.undo()
@@ -446,20 +447,20 @@ def test_fold_build_runs_outside_the_publish_lock(spark, ledger):
 
     class SpyLock:
         def __enter__(self):
-            staged = glob.glob(os.path.join(ledger.root, ".compact-*", "*.parquet"))
+            staged = glob.glob(os.path.join(ledger.root, ".staging-*", "*.parquet"))
             events.append("acquire-staged" if staged else "acquire-UNSTAGED")
 
         def __exit__(self, *a):
             events.append("release")
             return False
 
-    real_apply = ledger._apply_manifest
+    real_apply = ledger._publisher._apply
 
     def spy_apply(*a, **k):
         events.append("apply")
         return real_apply(*a, **k)
 
-    ledger._apply_manifest = spy_apply
+    ledger._publisher._apply = spy_apply
     stats = ledger.compact_log(
         spark, [worker.checkpoint_dir], min_files=5, keep_recent=4,
         max_files=12, publish_lock=SpyLock(),

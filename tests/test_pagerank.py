@@ -11,7 +11,7 @@ import numpy as np
 import goose_spark.operators.clusters as clusters
 from goose_spark.operators.clusters import PR_DAMPING, PR_ITERS, pagerank
 from goose_spark.queries import load_all
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, in_job_group
 
 REG = load_all()
 
@@ -108,18 +108,11 @@ def test_q84_job_budget_and_single_task_kernel(spark):
     stage that runs the kernel has one task."""
     q84 = REG["q84_pagerank"].builder
     q84(spark, SF_SMOKE).collect()  # builds the pair-table cache outside the group
-    sc = spark.sparkContext
-    group = "test-q84-job-budget"
-    sc.setJobGroup(group, "q84 job budget")
-    try:
-        q84(spark, SF_SMOKE).collect()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    # job/stage events reach the status store through the async bus
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    tracker = sc.statusTracker()
-    jobs = tracker.getJobIdsForGroup(group)
+    _, jobs, _ = in_job_group(spark, "test-q84-job-budget",
+                              lambda: q84(spark, SF_SMOKE).collect())
     assert 0 < len(jobs) <= 4, sorted(jobs)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
     store = sc._jsc.sc().statusStore()
     kernel = []
     for sid in sorted({s for j in jobs for s in tracker.getJobInfo(j).stageIds}):

@@ -630,17 +630,17 @@ def test_crash_recovery_small_batch_path(spark, ledger):
         client.perform_async("noop", i)
 
     w1 = Worker(spark, ledger, worker_id="w-crash-s", rand_int=lambda n: 0)
-    orig = Worker._append_log_table
+    orig = Ledger.append_table
 
     def dying_append(self, table):
         raise RuntimeError("simulated crash before driver-commit rename")
 
-    Worker._append_log_table = dying_append
+    Ledger.append_table = dying_append
     try:
         with pytest.raises(Exception):
             w1.process_available()
     finally:
-        Worker._append_log_table = orig
+        Ledger.append_table = orig
 
     assert counts(spark, ledger) == {"enqueued": 5}  # nothing published
     w2 = Worker(spark, ledger, worker_id="w-recovered-s", rand_int=lambda n: 0)
@@ -717,8 +717,11 @@ def test_torn_commit_rolls_forward(spark, ledger):
             schema=ARROW_LOG_SCHEMA,
         )
         pq.write_table(tbl, os.path.join(staging, f))
-        rows.append({"src": f, "dst": f"{base + i}-torn.parquet", "rows": 1})
-    ledger._write_manifest(base, staging, rows)
+        rows.append({"staging": ".staging-torn", "src": f, "dest": "log",
+                     "dst": f"{base + i}-torn.parquet", "rows": 1})
+    with open(os.path.join(ledger.root, "_commits", f"{base}.json"), "w") as fh:
+        _json.dump({"seq": base, "stagings": [".staging-torn"],
+                    "entries": rows, "removes": []}, fh)
     os.replace(
         os.path.join(staging, "part-0.parquet"),
         os.path.join(ledger.log_dir, rows[0]["dst"]),
@@ -1107,7 +1110,7 @@ def test_torn_compaction_completes_deletes(spark, ledger):
     assert len(old_files) == 3
 
     # stage the compacted snapshot (the state view, one part)
-    staging = os.path.join(ledger.root, ".compact-torn")
+    staging = os.path.join(ledger.root, ".staging-torn")
     os.makedirs(staging)
     state = ledger.state(spark)
     state.coalesce(1).write.mode("overwrite").parquet(staging)
@@ -1116,8 +1119,12 @@ def test_torn_compaction_completes_deletes(spark, ledger):
     )
     base = next_seq()
     n = pq.ParquetFile(os.path.join(staging, part)).metadata.num_rows
-    entries = [{"src": part, "dst": f"{base}-compacted.parquet", "rows": n}]
-    ledger._write_manifest(base, staging, entries, deletes=old_files)
+    entries = [{"staging": ".staging-torn", "src": part, "dest": "log",
+                "dst": f"{base}-compacted.parquet", "rows": n}]
+    with open(os.path.join(ledger.root, "_commits", f"{base}.json"), "w") as fh:
+        json.dump({"seq": base, "stagings": [".staging-torn"], "entries": entries,
+                   "removes": [{"dest": "log", "file": os.path.basename(f)}
+                               for f in old_files]}, fh)
     # the crash: compacted part renamed in, deletes never executed
     os.replace(
         os.path.join(staging, part),

@@ -33,6 +33,7 @@ from goose_spark.schema import (
 )
 from goose_spark.streaming.ledger import ARROW_LOG_SCHEMA, Ledger, next_seq
 from goose_spark.streaming.worker import Worker
+from tests.conftest import in_job_group
 
 
 def utcnow():
@@ -283,18 +284,6 @@ def test_redelivered_retry_executes_once(spark, ledger):
 
 # --- Spark-job budget of one tick -------------------------------------------
 
-def _jobs_in_group(spark, group: str, fn) -> list[int]:
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    # job events reach the status tracker through the async bus
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return sorted(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_tick_job_budget(spark, ledger):
     """A tick that executes 20 due rows runs exactly one Spark job (the
     execution itself); a tick whose pop is all stale runs none."""
@@ -304,14 +293,14 @@ def test_tick_job_budget(spark, ledger):
     worker = Worker(spark, ledger, rand_int=lambda n: 0,
                     now_fn=lambda: run_at + timedelta(minutes=1))
     tag = uuid.uuid4().hex
-    jobs = _jobs_in_group(spark, f"tick-due-{tag}", worker.tick)
+    _, jobs, _ = in_job_group(spark, f"tick-due-{tag}", worker.tick)
     assert len(jobs) == 1, jobs
     assert worker.executions == 20
     assert ledger.scheduled_files() == []
     # the same rows parked again are stale: each job's latest row is
     # now its success
     ledger.park(table)
-    jobs = _jobs_in_group(spark, f"tick-stale-{tag}", worker.tick)
+    _, jobs, _ = in_job_group(spark, f"tick-stale-{tag}", worker.tick)
     assert jobs == []
     assert worker.executions == 20
     assert ledger.scheduled_files() == []

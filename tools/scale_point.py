@@ -310,18 +310,18 @@ def main() -> None:
     ap.add_argument("--n-query", type=int, default=500,
                     help="synthetic serve query count")
     ap.add_argument("--cells", type=int, help="serve ss20 on N copies with K cells")
-    args = ap.parse_args()
+    args = ap.parse_intermixed_args()
 
     from goose_spark.queries import load_all
     from goose_spark.queries.base import FIXTURES_DIR
-    from goose_spark.session import get_spark
+    from goose_spark.session import get_spark, warm_up
 
     unknown = [n for n in args.queries if n not in load_all()]
     if unknown:  # fail in ms, not after the dataset build
         raise SystemExit(f"unknown queries: {unknown}")
     spark = get_spark(f"gosling-scale-{args.mode}", console_progress=False)
     spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000).mapInPandas(lambda it: it, schema="id long").count()
+    warm_up(spark, SF)
 
     if args.mode == "serve" and args.cells is None:
         synthetic_serve(spark, args.corpus, args.n_query)
