@@ -47,23 +47,6 @@ def spark_prop(spark):
     return spark
 
 
-def in_job_group(spark, group: str, fn):
-    """(fn(), its Spark job ids, their completed task count): ``fn`` runs
-    under job group ``group``, counted once the listener bus drains."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    st = sc.statusTracker()
-    jobs = st.getJobIdsForGroup(group)
-    tasks = sum(st.getStageInfo(s).numCompletedTasks
-                for j in jobs for s in st.getJobInfo(j).stageIds if st.getStageInfo(s))
-    return out, jobs, tasks
-
-
 def cells_read(monkeypatch) -> set:
     """The cluster ids of the IVF index cells whose files pyarrow reads
     from now on — how the serve's driver placement reads its probed

@@ -23,7 +23,8 @@ from goose_spark.operators.annindex import (
     ivfpq_query,
 )
 from goose_spark.operators.similarity import _embeddings, N_QUERIES
-from tests.conftest import SF_CORRECT, SF_SMOKE, in_job_group
+from goose_spark.plans.profile import group_profile, job_group
+from tests.conftest import SF_CORRECT, SF_SMOKE
 import pytest
 
 
@@ -403,10 +404,11 @@ def test_ivfpq_serve_job_budget(spark):
 
     ss7 = load_all()["ss7_ann_ivfpq"].builder
     want = [tuple(r) for r in ss7(spark, SF_SMOKE).collect()]  # builds the index
-    got, jobs, _ = in_job_group(spark, "test-ss7-job-budget",
-                                lambda: [tuple(r) for r in ss7(spark, SF_SMOKE).collect()])
+    with job_group(spark, "test-ss7-job-budget"):
+        got = [tuple(r) for r in ss7(spark, SF_SMOKE).collect()]
+    jobs = group_profile(spark, "test-ss7-job-budget")["jobs"]
     assert got == want and len(got) > 0
-    assert 0 < len(jobs) <= 10, sorted(jobs)
+    assert 0 < jobs <= 10, jobs
 
 
 def test_ivf_serve_job_budget(spark):
@@ -418,10 +420,11 @@ def test_ivf_serve_job_budget(spark):
 
     ss5 = load_all()["ss5_ann_ivf_index"].builder
     want = [tuple(r) for r in ss5(spark, SF_SMOKE).collect()]  # builds the index
-    got, jobs, _ = in_job_group(
-        spark, "test-ss5-job-budget", lambda: [tuple(r) for r in ss5(spark, SF_SMOKE).collect()])
+    with job_group(spark, "test-ss5-job-budget"):
+        got = [tuple(r) for r in ss5(spark, SF_SMOKE).collect()]
+    jobs = group_profile(spark, "test-ss5-job-budget")["jobs"]
     assert got == want and len(got) > 0
-    assert len(jobs) <= 1, sorted(jobs)
+    assert jobs <= 1, jobs
 
 
 def test_session_index_dirs_are_removed(spark):

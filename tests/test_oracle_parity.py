@@ -12,13 +12,14 @@ from tests.oracle_utils import compare
 REGISTRY = load_all()
 NAMES = sorted(REGISTRY)
 
-# The ledger family (qj*, ~20 s together) runs in the DEFAULT pytest
-# selection, so the default gate checks ledger correctness against the
-# oracle. Every other query is 'slowsuite' (pytest.ini deselects it by
-# default to keep the run short); tools/partest.py and 'pytest -m ""'
-# still run all of them.
+# Every case runs in the DEFAULT pytest selection except four whose
+# DuckDB oracles take ~168 s of the file's ~6.5 min at sf0.01 (q87 76 s,
+# sp13 33 s, dd6 30 s, dd7 29 s): they are 'slowsuite', which
+# tools/oracle_gate.py, tools/partest.py and 'pytest -m ""' still run.
+SLOW_ORACLES = {"q87_triangle_count", "sp13_leakage_safe_split",
+                "dd6_dedup_clusters", "dd7_cluster_keep_best"}
 PARAMS = [
-    pytest.param(n) if n.startswith("qj") else pytest.param(n, marks=pytest.mark.slowsuite)
+    pytest.param(n, marks=pytest.mark.slowsuite) if n in SLOW_ORACLES else pytest.param(n)
     for n in NAMES
 ]
 

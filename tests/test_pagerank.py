@@ -10,8 +10,9 @@ import numpy as np
 
 import goose_spark.operators.clusters as clusters
 from goose_spark.operators.clusters import PR_DAMPING, PR_ITERS, pagerank
+from goose_spark.plans.profile import group_profile, job_group
 from goose_spark.queries import load_all
-from tests.conftest import SF_SMOKE, in_job_group
+from tests.conftest import SF_SMOKE
 
 REG = load_all()
 
@@ -108,11 +109,13 @@ def test_q84_job_budget_and_single_task_kernel(spark):
     stage that runs the kernel has one task."""
     q84 = REG["q84_pagerank"].builder
     q84(spark, SF_SMOKE).collect()  # builds the pair-table cache outside the group
-    _, jobs, _ = in_job_group(spark, "test-q84-job-budget",
-                              lambda: q84(spark, SF_SMOKE).collect())
-    assert 0 < len(jobs) <= 4, sorted(jobs)
+    with job_group(spark, "test-q84-job-budget"):
+        q84(spark, SF_SMOKE).collect()
+    prof = group_profile(spark, "test-q84-job-budget")
+    assert 0 < prof["jobs"] <= 4, prof
     sc = spark.sparkContext
     tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup("test-q84-job-budget")
     store = sc._jsc.sc().statusStore()
     kernel = []
     for sid in sorted({s for j in jobs for s in tracker.getJobInfo(j).stageIds}):

@@ -5,8 +5,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from goose_spark.plans.profile import group_profile, job_group
 from goose_spark.queries import load_all
-from tests.conftest import SF_CORRECT, in_job_group
+from tests.conftest import SF_CORRECT
 import pytest
 
 # excluded from the DEFAULT pytest run (pytest.ini deselects
@@ -144,7 +145,8 @@ def test_pq_warm_task_budget(spark):
     with the same rows."""
     ss6 = REGISTRY["ss6_ann_pq"].builder
     want = [tuple(r) for r in ss6(spark, SF_CORRECT).collect()]
-    got, _, tasks = in_job_group(
-        spark, "test-ss6-task-budget", lambda: [tuple(r) for r in ss6(spark, SF_CORRECT).collect()])
+    with job_group(spark, "test-ss6-task-budget"):
+        got = [tuple(r) for r in ss6(spark, SF_CORRECT).collect()]
+    tasks = group_profile(spark, "test-ss6-task-budget")["tasks"]
     assert got == want and len(got) > 0
     assert 0 < tasks <= 8, tasks

@@ -5,8 +5,9 @@ from __future__ import annotations
 
 import numpy as np
 
+from goose_spark.plans.profile import group_profile, job_group
 from goose_spark.queries import load_all
-from tests.conftest import SF_CORRECT, in_job_group
+from tests.conftest import SF_CORRECT
 
 REGISTRY = load_all()
 
@@ -69,7 +70,8 @@ def test_sq8_warm_task_budget(spark):
     most 7 Spark tasks (10 with the list frame), with the same rows."""
     ss18 = REGISTRY["ss18_ann_sq8"].builder
     want = [tuple(r) for r in ss18(spark, SF_CORRECT).collect()]
-    got, _, tasks = in_job_group(
-        spark, "test-ss18-task-budget", lambda: [tuple(r) for r in ss18(spark, SF_CORRECT).collect()])
+    with job_group(spark, "test-ss18-task-budget"):
+        got = [tuple(r) for r in ss18(spark, SF_CORRECT).collect()]
+    tasks = group_profile(spark, "test-ss18-task-budget")["tasks"]
     assert got == want and len(got) > 0
     assert 0 < tasks <= 7, tasks

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from goose_spark.api import LedgerAPI
 from goose_spark.client import JobClient
+from goose_spark.plans.profile import group_profile, job_group
 from goose_spark.schema import (
     PRIORITY_BACK,
     STATUS_ENQUEUED,
@@ -33,7 +34,6 @@ from goose_spark.schema import (
 )
 from goose_spark.streaming.ledger import ARROW_LOG_SCHEMA, Ledger, next_seq
 from goose_spark.streaming.worker import Worker
-from tests.conftest import in_job_group
 
 
 def utcnow():
@@ -293,14 +293,17 @@ def test_tick_job_budget(spark, ledger):
     worker = Worker(spark, ledger, rand_int=lambda n: 0,
                     now_fn=lambda: run_at + timedelta(minutes=1))
     tag = uuid.uuid4().hex
-    _, jobs, _ = in_job_group(spark, f"tick-due-{tag}", worker.tick)
-    assert len(jobs) == 1, jobs
+    with job_group(spark, f"tick-due-{tag}"):
+        worker.tick()
+    prof = group_profile(spark, f"tick-due-{tag}")
+    assert prof["jobs"] == 1, prof
     assert worker.executions == 20
     assert ledger.scheduled_files() == []
     # the same rows parked again are stale: each job's latest row is
     # now its success
     ledger.park(table)
-    _, jobs, _ = in_job_group(spark, f"tick-stale-{tag}", worker.tick)
-    assert jobs == []
+    with job_group(spark, f"tick-stale-{tag}"):
+        worker.tick()
+    assert group_profile(spark, f"tick-stale-{tag}")["jobs"] == 0
     assert worker.executions == 20
     assert ledger.scheduled_files() == []
