@@ -65,6 +65,36 @@ ARROW_JOB_FIELDS = [
     ("worker_id", pa.string()),
 ]
 ARROW_LOG_SCHEMA = pa.schema(ARROW_JOB_FIELDS + [("seq", pa.int64())])
+_TOMB_SCHEMA = pa.schema([("id", pa.string()), ("max_seq", pa.int64())])
+
+
+def visible_parquet(directory: str) -> list[str]:
+    """The parquet files of ``directory`` that Spark's parquet reader
+    lists: names starting with "." (a hidden tmp write) or "_"
+    (metadata) are skipped."""
+    return [
+        os.path.join(directory, f) for f in os.listdir(directory)
+        if f.endswith(".parquet") and not f.startswith((".", "_"))
+    ]
+
+
+def _footer_seq_max(path: str) -> int | None:
+    """Largest ``seq`` of a parquet file from its footer statistics;
+    None when the file or a row group's stats cannot tell."""
+    try:
+        meta = pq.ParquetFile(path).metadata
+    except OSError:
+        return None
+    col = meta.schema.to_arrow_schema().get_field_index("seq")
+    if col < 0 or meta.num_row_groups == 0:
+        return None
+    out = None
+    for g in range(meta.num_row_groups):
+        stats = meta.row_group(g).column(col).statistics
+        if stats is None or not stats.has_min_max:
+            return None
+        out = stats.max if out is None else max(out, stats.max)
+    return out
 
 
 def _stream_committed_files(checkpoint: str) -> set[str] | None:
@@ -135,6 +165,8 @@ class Ledger:
         # commit forward before serving reads
         self._publisher = Publisher(root)
         self._publisher.recover()
+        # log file -> its largest seq (footer stats), for latest_rows
+        self._log_seq_max: dict[str, int | None] = {}
 
     # ---- producer-side append (Spark-free, like the goose client) -------
 
@@ -231,21 +263,23 @@ class Ledger:
         Spark job). Agrees with ``state()`` for every id whose latest
         row is at or after ``min_seq``; ids with no such row are absent.
 
-        The filter is pushed into the scan: parquet ``seq`` stats skip
-        row groups older than ``min_seq``, and only ``id``/``seq``/
-        ``status`` are read. Past one footer read per file, cost follows
-        the age of ``min_seq`` and memory the matched rows — never the
-        size of the log."""
+        Files whose largest ``seq`` is below ``min_seq`` are not opened:
+        each file's footer is read once per ``Ledger``, because a log
+        file never changes once renamed into place under its unique
+        name. In the files left, parquet ``seq`` stats skip older row
+        groups, and only ``id``/``seq``/``status`` are read. Past one
+        directory listing, cost follows the age of ``min_seq`` and
+        memory the matched rows — never the size of the log."""
         import pyarrow.compute as pc
         import pyarrow.dataset as ds
 
         ids = pc.unique(pa.array(ids, type=pa.string()))
-        # the files Spark's parquet reader lists: hidden (`.tmp-*`) and
-        # metadata (`_*`) names are skipped
-        files = [
-            os.path.join(self.log_dir, f) for f in os.listdir(self.log_dir)
-            if f.endswith(".parquet") and not f.startswith((".", "_"))
-        ]
+        known = self._log_seq_max
+        self._log_seq_max = {
+            f: known[f] if f in known else _footer_seq_max(f)
+            for f in visible_parquet(self.log_dir)
+        }
+        files = [f for f, m in self._log_seq_max.items() if m is None or m >= min_seq]
         if not files or len(ids) == 0:
             return {}
         tbl = ds.dataset(files, schema=ARROW_LOG_SCHEMA, format="parquet").to_table(
@@ -586,15 +620,35 @@ class Ledger:
     def tombstoned_ids(self, spark: SparkSession) -> DataFrame | None:
         """(id, tomb_max_seq) — suppress a job's rows with seq <= the
         max recorded tombstone (a delete dominates any supersession)."""
-        import glob
-
-        if not glob.glob(os.path.join(self.tombstones_dir, "*.parquet")):
+        if not visible_parquet(self.tombstones_dir):
             return None
         return (
             spark.read.parquet(self.tombstones_dir)
             .groupBy("id")
             .agg(F.max("max_seq").alias("tomb_max_seq"))
         )
+
+    def live_log_rows(self, files: list[str]) -> pa.Table:
+        """The rows of the given log files that the deletion index lets
+        execute, read with pyarrow (no Spark job): the driver-side form
+        of the ``tombstoned_ids`` anti-join. A row is dropped when its
+        ``seq`` is at or below the largest tombstone ``max_seq`` of its
+        id; only tombstones of the read ids are kept past the scan."""
+        import pyarrow.compute as pc
+        import pyarrow.dataset as ds
+
+        rows = ds.dataset(files, schema=ARROW_LOG_SCHEMA, format="parquet").to_table()
+        tomb_files = visible_parquet(self.tombstones_dir)
+        if not tomb_files or rows.num_rows == 0:
+            return rows
+        tombs = (
+            ds.dataset(tomb_files, schema=_TOMB_SCHEMA, format="parquet")
+            .to_table(filter=ds.field("id").isin(pc.unique(rows["id"])))
+            .group_by("id")
+            .aggregate([("max_seq", "max")])
+        )
+        cap = pc.take(tombs["max_seq_max"], pc.index_in(rows["id"], value_set=tombs["id"]))
+        return rows.filter(pc.or_kleene(pc.is_null(cap), pc.greater(rows["seq"], cap)))
 
     # ---- scheduled store (sorted-set analog) ------------------------------
 

@@ -21,7 +21,11 @@ Engine mapping:
 * queue-depth gauges → ``events.job_queue_depth_stream`` aggregation
 * engine-level progress (rows/sec, batch duration, watermark lag) →
   Spark's own ``StreamingQuery.lastProgress`` / ``StreamingQueryListener``
-  (emitted natively per trigger; no engine wrapper)
+  (emitted natively per trigger; no engine wrapper). Its input-row
+  counts cover only micro-batches above ``SMALL_BATCH_ROWS``: a smaller
+  batch is read with pyarrow and executed in the driver, so Spark never
+  runs its batch frame and reports 0 input rows; the per-batch outcome
+  counts below still cover it
 
 The worker emits COUNTS per micro-batch, not one datagram per job: at
 cluster scale a per-job UDP send from the driver would serialize the

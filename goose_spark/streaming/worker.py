@@ -7,9 +7,12 @@ One streaming query replaces goose's whole worker fleet:
   unacked micro-batch on restart — the orphan checker
   (``src/goose/brokers/redis/orphan_checker.clj:9-40``) becomes a no-op.
   Same at-least-once contract as the reference (ADR reliability.md).
-* **Execution (W2/W3)**: ``mapInPandas`` applies the registered job fn
-  row-by-row on executors; Arrow batches move the rows, not pickled
-  Python rows.
+* **Execution (W2/W3)**: the registered job fn runs row by row in the
+  driver for a bounded batch of at most ``SMALL_BATCH_ROWS`` rows (a
+  small micro-batch or a due-sweep chunk), as goose runs job fns on
+  in-process worker threads (``worker.clj:81-87``); above that bound
+  ``mapInPandas`` runs it on executors, with Arrow batches moving the
+  rows.
 * **Retry/bury (W5/W6)**: failure-state fields and the
   ``20 + rand(20)·(n+1) + n⁴`` backoff mirror ``src/goose/retry.clj``.
 * **Scheduler (W7)**: scheduled/retrying rows are parked in the
@@ -63,18 +66,17 @@ def _now() -> datetime:
 # src/goose/defaults.clj:49): bounds rows materialized per due-sweep pop.
 DEFAULT_SCHEDULE_POP_LIMIT = 10_000
 
-# Execution fan-out of a bounded driver-built frame (a small micro-batch
-# or a due-sweep chunk): one task per this many rows, capped at
-# defaultParallelism — 250 quick jobs take 4 tasks, not 32 round-trips.
+# Execution fan-out of a driver-built frame above SMALL_BATCH_ROWS (a
+# due-sweep chunk of a raised schedule_pop_limit): one mapInPandas task
+# per this many rows, capped at defaultParallelism.
 ROWS_PER_TASK = 64
 
-# Micro-batch latency bound: batches of at most this many rows take the
-# driver-compacted path (one materialization job + single-file commit)
-# and fan execution out at ceil(rows / ROWS_PER_TASK) tasks instead of a
-# fixed 32 — per-batch fixed cost measured ~1.3 s → ~0.5 s on the
-# 1000 jobs/s parity load. Larger batches and sweep chunks take the
-# executor-side commit (_commit_distributed); 0 sends every batch there.
-# Read at call time.
+# Driver placement bound. A micro-batch (by its parquet footer rows) or
+# a due-sweep chunk of at most this many rows runs in the driver: pyarrow
+# reads the batch, the job fns execute in this process and the outcome
+# commits as one file — no Spark job. Larger ones run through
+# mapInPandas on executors and the executor-side commit
+# (_commit_distributed); 0 sends every batch there. Read at call time.
 SMALL_BATCH_ROWS = 10_000
 
 
@@ -142,9 +144,11 @@ def _make_executor(retry_delay_fn: Callable[[int], int] | None, worker_id: str,
                    middlewares: tuple = (), error_handler: str | None = None,
                    death_handler: str | None = None,
                    skip_dead_queue: bool = False):
-    """Build the mapInPandas execution fn (W3/W4/W5/W6). The returned
-    closure is serialized to executors; it resolves fns via the registry
-    and emits full outcome rows. Column-wise output assembly (no per-row
+    """Build the execution fn (W3/W4/W5/W6): it maps pandas frames of
+    job rows to full outcome rows, resolving fns via the registry. The
+    worker calls it directly in the driver on a batch of at most
+    ``SMALL_BATCH_ROWS`` rows; above that it is the ``mapInPandas`` fn,
+    serialized to executors. Column-wise output assembly (no per-row
     .loc mutation) keeps the Python side ~10× faster per batch.
 
     ``middlewares`` composes around the execute call exactly like
@@ -156,7 +160,7 @@ def _make_executor(retry_delay_fn: Callable[[int], int] | None, worker_id: str,
     ``error_handler`` / ``death_handler`` are registry fn names (the
     engine's fn-symbol form of retry.clj:47-53 error/death-handler-fn-
     sym) called as ``handler(job_dict, error_str)`` on a non-final
-    failure / on death respectively, executor-side; a handler exception
+    failure / on death respectively, where the job runs; a handler exception
     is swallowed (it must never corrupt the outcome row, matching
     goose's log-and-continue handlers). ``skip_dead_queue``
     (retry.clj:55): a dying job's terminal row is written as 'deleted'
@@ -286,8 +290,8 @@ class Worker:
         # Injectable clock for every DRIVER-side time decision (due-sweep
         # cutoffs, cron tick, latency bases). Tests freeze it so cron
         # materialization never races a real minute boundary (the one
-        # mid-round flake of r12); executor-side outcome stamps keep the
-        # real clock — they are data, not scheduling decisions.
+        # mid-round flake of r12); outcome stamps keep the real clock —
+        # they are data, not scheduling decisions.
         self._now = now_fn or _now
         self.ledger = ledger if isinstance(ledger, Ledger) else Ledger(ledger)
         self.worker_id = worker_id
@@ -299,8 +303,8 @@ class Worker:
         # drain loop still clears any backlog either way, it just takes
         # more iterations.
         self.schedule_pop_limit = max(1, int(schedule_pop_limit))
-        # retry.clj:47-55 handler parity: registry fn names called
-        # executor-side on failure/death; skip_dead_queue writes dying
+        # retry.clj:47-55 handler parity: registry fn names called where
+        # the job runs, on failure/death; skip_dead_queue writes dying
         # jobs as 'deleted' (no dead-queue entry). Validated at
         # construction (specs.clj:124-128 handler fn-sym + arity specs) —
         # a typo'd handler name must fail the worker at startup, not be
@@ -336,7 +340,7 @@ class Worker:
         # thread: batch terminal transitions and due-sweeps must not
         # interleave, or both threads can derive + append the same batch
         # terminal row and double-fire the callback (goose gets this from
-        # its single MULTI txn, batch.clj). RLock: _execute_and_log runs
+        # its single MULTI txn, batch.clj). RLock: _execute_bounded runs
         # under it from both the stream path and the sweep path.
         self._lock = threading.RLock()
         if retry_delay_fn is None and rand_int is not None:
@@ -488,16 +492,16 @@ class Worker:
     # micro-batch body
     # ------------------------------------------------------------------
 
-    def _batch_rows_estimate(self, epoch_id: int) -> int | None:
-        """Row count of a file-source micro-batch from its parquet
-        footers — O(batch files) driver-side metadata reads, no Spark
-        job. The batch's file list comes from the streaming source log
-        (``checkpoint/sources/0/<batchId>``, the committed manifest the
-        file source itself replays from — ``DataFrame.inputFiles()`` is
-        empty on streaming batch frames). None = couldn't tell cheaply
-        (no log entry, non-local files, too many files) → caller takes
-        the fully distributed path."""
-        from urllib.parse import urlparse
+    def _batch_files(self, epoch_id: int) -> tuple[list[str], int] | None:
+        """The local paths of a file-source micro-batch's files and their
+        parquet footer row sum — O(batch files) driver-side metadata
+        reads, no Spark job. The file list comes from the streaming
+        source log (``checkpoint/sources/0/<batchId>``, the committed
+        manifest the file source itself replays from —
+        ``DataFrame.inputFiles()`` is empty on streaming batch frames).
+        None = couldn't tell cheaply (no log entry, non-local files, too
+        many files) → caller takes the fully distributed path."""
+        from urllib.parse import unquote, urlparse
 
         src_dir = os.path.join(self.checkpoint_dir, "sources", "0")
         path = os.path.join(src_dir, str(epoch_id))
@@ -520,30 +524,35 @@ class Worker:
             return None
         if len(files) > 256:
             return None  # that many append txns is a big batch anyway
-        n = 0
+        paths, n = [], 0
         for uri in files:
             parsed = urlparse(uri)
             if parsed.scheme not in ("", "file"):
                 return None
+            paths.append(unquote(parsed.path) if parsed.scheme else uri)
             try:
-                n += pq.ParquetFile(parsed.path or uri).metadata.num_rows
+                n += pq.ParquetFile(paths[-1]).metadata.num_rows
             except OSError:
                 return None
-        return n
+        return paths, n
 
     def _for_each_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        # Small batches (the steady-state of a low-latency trigger) take
-        # a driver-compacted path: ONE Spark job materializes the batch,
-        # the park/queue splits happen in pandas, and the outcome commits
-        # as one file — vs 4-5 Spark jobs (park collect, isEmpty, 32-task
-        # staged write, read-back summary) whose fixed costs floored
-        # per-batch latency at ~1.3 s. Bounded by SMALL_BATCH_ROWS
-        # (10k ≈ a few MB): large batches — the 100 TB shape —
-        # keep the fully distributed path, so this is a latency
-        # optimization with a hard ceiling, not a driver funnel.
-        n_est = self._batch_rows_estimate(epoch_id)
-        small = n_est is not None and 0 < n_est <= SMALL_BATCH_ROWS
-        rows = batch_df if small else batch_df.persist()
+        # Small batches (the steady state of a low-latency trigger) run
+        # in the driver with no Spark job: pyarrow reads the batch's own
+        # files, the park/queue splits happen in pandas, the jobs execute
+        # here and the outcome commits as one file — vs the distributed
+        # branch's jobs (tombstone join, park collect, execution, staged
+        # write, read-back summary) whose fixed costs floor per-batch
+        # latency. Bounded by SMALL_BATCH_ROWS (10k ≈ a few MB): large
+        # batches — the 100 TB shape — keep the fully distributed path,
+        # so this is a latency optimization with a hard ceiling, not a
+        # driver funnel.
+        batch = self._batch_files(epoch_id)
+        if batch is not None and 0 < batch[1] <= SMALL_BATCH_ROWS:
+            with self._lock:
+                self._process_batch_local(batch[0])
+            return
+        rows = batch_df.persist()
         try:
             with self._lock:
                 # deletion guard (api/enqueued_jobs.clj:42-55): jobs
@@ -568,9 +577,6 @@ class Worker:
                         )
                         .drop("tomb_max_seq")
                     )
-                if small:
-                    self._process_batch_small(rows_all)
-                    return
                 rows_live = rows_all
                 if self.queues:
                     # queue binding (worker.clj:27): scoped workers only
@@ -596,8 +602,7 @@ class Worker:
                 self.ledger.park(park_tbl)
                 self._execute_and_log(runnable)
         finally:
-            if not small:
-                rows.unpersist()
+            rows.unpersist()
 
     def _other_fleets_queues(self) -> list[str]:
         """Queues claimed by scoped fleets — an unscoped worker must NOT
@@ -606,12 +611,12 @@ class Worker:
         O(workers) registry read per micro-batch, never O(jobs)."""
         return sorted(self.registry.claimed_queues(exclude_worker=self.worker_id))
 
-    def _process_batch_small(self, rows_all: DataFrame) -> None:
-        """Driver-compacted micro-batch body (same semantics as the
-        distributed branch, pandas splits instead of per-split Spark
-        jobs). Execution itself still runs as a Spark mapInPandas job —
-        only the routing of a bounded batch happens driver-side."""
-        pdf = rows_all.toPandas()  # the ONE materialization job
+    def _process_batch_local(self, files: list[str]) -> None:
+        """Micro-batch body in the driver (same semantics as the
+        distributed branch): pyarrow reads the batch's files minus the
+        tombstoned rows, pandas splits park / queue / runnable, and
+        ``_execute_bounded`` runs the jobs in this process."""
+        pdf = self.ledger.live_log_rows(files).to_pandas()
         if len(pdf) == 0:
             return
         if self.queues:
@@ -643,13 +648,16 @@ class Worker:
     # ------------------------------------------------------------------
 
     def _execute_bounded(self, pdf: pd.DataFrame) -> None:
-        """Execute a bounded driver-built frame of runnable rows (a small
-        micro-batch or a due-sweep chunk). Priority order (P8) is applied
-        in pandas — createDataFrame slices contiguously, so the narrow
-        coalesce in _execute_and_log keeps it and no repartition shuffle
-        runs; fan-out is ceil(rows / ROWS_PER_TASK) tasks; a frame of at
-        most SMALL_BATCH_ROWS commits driver-side as one file."""
+        """Execute a driver-built frame of runnable rows (a small
+        micro-batch or a due-sweep chunk) in priority order (P8, applied
+        in pandas). At most SMALL_BATCH_ROWS rows run in the driver.
+        Above that, createDataFrame slices contiguously, so the narrow
+        coalesce in _execute_and_log keeps the order and no repartition
+        shuffle runs; fan-out is ceil(rows / ROWS_PER_TASK) tasks."""
         pdf = pdf.sort_values(["priority", "enqueued_at"], ascending=[False, True])
+        if len(pdf) <= SMALL_BATCH_ROWS:
+            self._execute_local(pdf)
+            return
         width = max(
             1,
             min(
@@ -660,78 +668,36 @@ class Worker:
         df = self.spark.createDataFrame(
             _coerce_log_pdf(pdf), schema=self.ledger._spark_log_schema()
         )
-        self._execute_and_log(
-            df, width=width, driver_commit=len(pdf) <= SMALL_BATCH_ROWS
-        )
+        self._execute_and_log(df, width=width)
 
-    def _execute_and_log(self, df: DataFrame, width: int | None = None,
-                         driver_commit: bool = False) -> None:
-        """Execute job rows and commit outcome rows. ``width`` set means
-        ``df`` is already in priority order (``_execute_bounded``) and
-        runs on ``width`` tasks; ``driver_commit`` commits the outcome as
-        one driver-written file instead of executor-side parts."""
-        if width is None and df.isEmpty():
-            return
+    def _executor(self):
+        return _make_executor(self.retry_delay_fn, self.worker_id, self.middlewares,
+                              error_handler=self.error_handler,
+                              death_handler=self.death_handler,
+                              skip_dead_queue=self.skip_dead_queue)
+
+    def _execute_local(self, pdf: pd.DataFrame) -> None:
+        """Run the job fns in this process on ``pdf`` (already in priority
+        order) and commit the outcome as one driver-written file."""
         import time as _time
 
         _exec_start = _time.perf_counter()
-        if width is None:
-            # bounded-staleness priority (P8): front-priority rows first.
-            # sortWithinPartitions (not a global orderBy): priority is
-            # already an approximation per SURVEY §7.4.1, and a global
-            # sort would add a range-sampling pass + full shuffle per
-            # micro-batch. Width follows the cluster (defaultParallelism),
-            # not a constant — on local[32] this is 32; on a
-            # 1000-executor cluster it is the fleet's task slots.
-            ordered = df.repartition(
-                self.spark.sparkContext.defaultParallelism
-            ).sortWithinPartitions(F.col("priority").desc(), F.col("enqueued_at"))
-        else:
-            # narrow coalesce keeps the caller's order and skips the
-            # repartition shuffle stage entirely
-            ordered = df.coalesce(width)
-        if self.emit_in_progress and not driver_commit:
-            # executor-side in-progress stamp: same staged-append as the
-            # outcome commit; the seq (fresh time base + per-id hash
-            # offset) stays below the outcome row's later time base, so
-            # the outcome remains the job's latest row
-            marked_df = (
-                ordered.withColumn("status", F.lit(STATUS_IN_PROGRESS))
-                .withColumn("worker_id", F.lit(self.worker_id))
-                .withColumn(
-                    "seq",
-                    F.lit(next_seq()) + F.pmod(F.xxhash64("id"), F.lit(1_000_000)),
-                )
-            )
-            self.ledger.append_df(marked_df)
-        elif self.emit_in_progress:
-            marked = self._to_arrow(ordered)
+        if self.emit_in_progress:
+            # in-progress stamp: one file whose fresh seqs stay below the
+            # outcome rows' later time base, so the outcome remains each
+            # job's latest row
             base = next_seq()
-            marked = marked.set_column(
-                marked.schema.get_field_index("status"),
-                "status",
-                pa.array([STATUS_IN_PROGRESS] * marked.num_rows, type=pa.string()),
-            ).set_column(
-                marked.schema.get_field_index("worker_id"),
-                "worker_id",
-                pa.array([self.worker_id] * marked.num_rows, type=pa.string()),
-            ).set_column(
-                marked.schema.get_field_index("seq"),
-                "seq",
-                pa.array([base + i for i in range(marked.num_rows)], type=pa.int64()),
+            marked = pdf.assign(
+                status=STATUS_IN_PROGRESS,
+                worker_id=self.worker_id,
+                seq=[base + i for i in range(len(pdf))],
             )
-            self.ledger.append_table(marked)
-        outcome = ordered.mapInPandas(
-            _make_executor(self.retry_delay_fn, self.worker_id, self.middlewares,
-                           error_handler=self.error_handler,
-                           death_handler=self.death_handler,
-                           skip_dead_queue=self.skip_dead_queue),
-            schema=df.schema,
+            self.ledger.append_table(
+                pa.Table.from_pandas(marked, schema=ARROW_LOG_SCHEMA, preserve_index=False)
+            )
+        out_tbl = pa.Table.from_pandas(
+            next(self._executor()(iter([pdf]))), schema=ARROW_LOG_SCHEMA, preserve_index=False
         )
-        if not driver_commit:
-            self._commit_distributed(outcome, _exec_start)
-            return
-        out_tbl = self._to_arrow(outcome)
         self.executions += out_tbl.num_rows
         # one parquet file per micro-batch == the ack/commit txn
         self.ledger.append_table(out_tbl)
@@ -755,6 +721,48 @@ class Worker:
             ).to_pandas()
             self.metrics.record_latency_classes(latency_classes_ms(lat_pdf, self._now()))
         self._batch_callbacks(out_tbl)
+
+    def _execute_and_log(self, df: DataFrame, width: int | None = None) -> None:
+        """Execute job rows on executors (``mapInPandas``) and commit the
+        outcome as executor-written parts. ``width`` set means ``df`` is
+        already in priority order (``_execute_bounded``) and runs on
+        ``width`` tasks."""
+        if width is None and df.isEmpty():
+            return
+        import time as _time
+
+        _exec_start = _time.perf_counter()
+        if width is None:
+            # bounded-staleness priority (P8): front-priority rows first.
+            # sortWithinPartitions (not a global orderBy): priority is
+            # already an approximation per SURVEY §7.4.1, and a global
+            # sort would add a range-sampling pass + full shuffle per
+            # micro-batch. Width follows the cluster (defaultParallelism),
+            # not a constant — on local[32] this is 32; on a
+            # 1000-executor cluster it is the fleet's task slots.
+            ordered = df.repartition(
+                self.spark.sparkContext.defaultParallelism
+            ).sortWithinPartitions(F.col("priority").desc(), F.col("enqueued_at"))
+        else:
+            # narrow coalesce keeps the caller's order and skips the
+            # repartition shuffle stage entirely
+            ordered = df.coalesce(width)
+        if self.emit_in_progress:
+            # executor-side in-progress stamp: same staged-append as the
+            # outcome commit; the seq (fresh time base + per-id hash
+            # offset) stays below the outcome row's later time base, so
+            # the outcome remains the job's latest row
+            marked_df = (
+                ordered.withColumn("status", F.lit(STATUS_IN_PROGRESS))
+                .withColumn("worker_id", F.lit(self.worker_id))
+                .withColumn(
+                    "seq",
+                    F.lit(next_seq()) + F.pmod(F.xxhash64("id"), F.lit(1_000_000)),
+                )
+            )
+            self.ledger.append_df(marked_df)
+        outcome = ordered.mapInPandas(self._executor(), schema=df.schema)
+        self._commit_distributed(outcome, _exec_start)
 
     def _commit_distributed(self, outcome: DataFrame, exec_start: float) -> None:
         """Executor-side ack/commit: tasks write outcome parts in parallel,

@@ -253,11 +253,16 @@ def test_replay_dead_and_retention(spark, ledger):
     assert api.dashboard_counts() == {"deleted": 1}
 
 
-def test_priority_front_executes_first_within_partitions(spark, ledger, tmp_path):
+@pytest.mark.parametrize("small_batch_rows", [None, 0], ids=["driver", "distributed"])
+def test_priority_front_executes_first_within_partitions(spark, ledger, tmp_path, monkeypatch,
+                                                         small_batch_rows):
     """P8 bounded-staleness priority: WITHIN each partition of a
     micro-batch, front-priority jobs execute before back-priority (the
     documented contract — cross-partition order is concurrent). Observed
-    via a middleware recording (partition, order, priority)."""
+    via a middleware recording (partition, order, priority). Runs on
+    both placements: the default small batch executes in the driver (no
+    task context, recorded as partition 0); SMALL_BATCH_ROWS=0 runs it
+    through mapInPandas tasks."""
     import os
     import time as _time
 
@@ -270,7 +275,8 @@ def test_priority_front_executes_first_within_partitions(spark, ledger, tmp_path
         def wrapped(job):
             from pyspark import TaskContext
 
-            pid = TaskContext.get().partitionId()
+            ctx = TaskContext.get()
+            pid = ctx.partitionId() if ctx is not None else 0
             with open(os.path.join(trace, f"{pid}-{_time.monotonic_ns()}-{job['id']}"), "w") as f:
                 f.write(str(job.get("priority", "")))
             return next_fn(job)
@@ -282,6 +288,8 @@ def test_priority_front_executes_first_within_partitions(spark, ledger, tmp_path
         client.perform_async("noop", i)
     for i in range(50):
         client.perform_async("noop", 1000 + i, priority=PRIORITY_FRONT)
+    if small_batch_rows is not None:
+        monkeypatch.setattr(worker_mod, "SMALL_BATCH_ROWS", small_batch_rows)
     worker = Worker(spark, ledger, rand_int=lambda n: 0, middlewares=(recorder,))
     worker.process_available()
 
@@ -650,24 +658,24 @@ def test_crash_recovery_small_batch_path(spark, ledger):
 
 
 def test_small_batch_routing(spark, ledger, monkeypatch):
-    """Micro-batches at or under SMALL_BATCH_ROWS take the driver-
-    compacted path; bigger ones keep the fully distributed path. The
-    row estimate comes from the streaming source log + parquet footers
-    (no Spark job)."""
+    """Micro-batches at or under SMALL_BATCH_ROWS run in the driver;
+    bigger ones keep the fully distributed path. The file list and row
+    count come from the streaming source log + parquet footers (no
+    Spark job)."""
     calls = []
-    orig = Worker._process_batch_small
+    orig = Worker._process_batch_local
 
-    def spy(self, rows_all):
+    def spy(self, files):
         calls.append(True)
-        return orig(self, rows_all)
+        return orig(self, files)
 
-    monkeypatch.setattr(Worker, "_process_batch_small", spy)
+    monkeypatch.setattr(Worker, "_process_batch_local", spy)
 
     client = JobClient(ledger)
     for i in range(20):
         client.perform_async("noop", i)
     Worker(spark, ledger, rand_int=lambda n: 0).process_available()
-    assert calls == [True]  # 20 rows ≤ 10k default → small path
+    assert calls == [True]  # 20 rows ≤ 10k default → driver path
     assert counts(spark, ledger) == {"success": 20}
 
     calls.clear()
