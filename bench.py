@@ -259,18 +259,15 @@ def jobs_throughput(spark, n_jobs: int = 100_000, failure_rate: float = 0.01) ->
 
     from goose_spark.client import JobClient
     from goose_spark.functions.registry import reset_flaky
-    from goose_spark.streaming.worker import SMALL_BATCH_ROWS, Worker
+    from goose_spark.streaming.worker import Worker
 
     reset_flaky()
 
-    # warm-up parity (criterium, perf/goose/core.clj:39-53): one untimed
-    # pass through the full streaming path first — the file source /
-    # checkpoint / commit machinery costs ~4s of one-time spin-up in a
-    # fresh session that would otherwise be billed to the measured
-    # load. The pass is sized above SMALL_BATCH_ROWS so it takes the
-    # placement the measured batch takes (mapInPandas and the
-    # executor-side commit); a smaller one runs in the driver and
-    # leaves that path cold.
+    # warm-up parity (criterium, perf/goose/core.clj:39-53): one small
+    # untimed pass through the full streaming path first — the file
+    # source / checkpoint / commit machinery costs ~4s of one-time
+    # spin-up in a fresh session that would otherwise be billed to the
+    # measured load
     warm_root = tempfile.mkdtemp(prefix="goose-bench-warm-")
     warm_client = JobClient(warm_root)
     warm_client.ledger.append_rows(
@@ -278,7 +275,7 @@ def jobs_throughput(spark, n_jobs: int = 100_000, failure_rate: float = 0.01) ->
             warm_client._job_row("flaky", (f"warm-{i}", 1), None, max_retries=1)
             if i % 100 == 0
             else warm_client._job_row("noop", (i,), None)
-            for i in range(SMALL_BATCH_ROWS + 5000)
+            for i in range(5000)
         ]
     )
     warm_worker = Worker(spark, warm_root, retry_delay_fn=lambda n: 0)

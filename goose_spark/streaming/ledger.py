@@ -78,25 +78,6 @@ def visible_parquet(directory: str) -> list[str]:
     ]
 
 
-def _footer_seq_max(path: str) -> int | None:
-    """Largest ``seq`` of a parquet file from its footer statistics;
-    None when the file or a row group's stats cannot tell."""
-    try:
-        meta = pq.ParquetFile(path).metadata
-    except OSError:
-        return None
-    col = meta.schema.to_arrow_schema().get_field_index("seq")
-    if col < 0 or meta.num_row_groups == 0:
-        return None
-    out = None
-    for g in range(meta.num_row_groups):
-        stats = meta.row_group(g).column(col).statistics
-        if stats is None or not stats.has_min_max:
-            return None
-        out = stats.max if out is None else max(out, stats.max)
-    return out
-
-
 def _stream_committed_files(checkpoint: str) -> set[str] | None:
     """Basenames of every source file a streaming query has COMMITTED
     (its exactly-once horizon): union of the checkpoint's source
@@ -165,8 +146,6 @@ class Ledger:
         # commit forward before serving reads
         self._publisher = Publisher(root)
         self._publisher.recover()
-        # log file -> its largest seq (footer stats), for latest_rows
-        self._log_seq_max: dict[str, int | None] = {}
 
     # ---- producer-side append (Spark-free, like the goose client) -------
 
@@ -263,23 +242,16 @@ class Ledger:
         Spark job). Agrees with ``state()`` for every id whose latest
         row is at or after ``min_seq``; ids with no such row are absent.
 
-        Files whose largest ``seq`` is below ``min_seq`` are not opened:
-        each file's footer is read once per ``Ledger``, because a log
-        file never changes once renamed into place under its unique
-        name. In the files left, parquet ``seq`` stats skip older row
-        groups, and only ``id``/``seq``/``status`` are read. Past one
-        directory listing, cost follows the age of ``min_seq`` and
-        memory the matched rows — never the size of the log."""
+        The filter is pushed into the scan: parquet ``seq`` stats skip
+        row groups older than ``min_seq``, and only ``id``/``seq``/
+        ``status`` are read. Past one footer read per file, cost follows
+        the age of ``min_seq`` and memory the matched rows — never the
+        size of the log."""
         import pyarrow.compute as pc
         import pyarrow.dataset as ds
 
         ids = pc.unique(pa.array(ids, type=pa.string()))
-        known = self._log_seq_max
-        self._log_seq_max = {
-            f: known[f] if f in known else _footer_seq_max(f)
-            for f in visible_parquet(self.log_dir)
-        }
-        files = [f for f, m in self._log_seq_max.items() if m is None or m >= min_seq]
+        files = visible_parquet(self.log_dir)
         if not files or len(ids) == 0:
             return {}
         tbl = ds.dataset(files, schema=ARROW_LOG_SCHEMA, format="parquet").to_table(

@@ -21,11 +21,11 @@ Engine mapping:
 * queue-depth gauges → ``events.job_queue_depth_stream`` aggregation
 * engine-level progress (rows/sec, batch duration, watermark lag) →
   Spark's own ``StreamingQuery.lastProgress`` / ``StreamingQueryListener``
-  (emitted natively per trigger; no engine wrapper). Its input-row
-  counts cover only micro-batches above ``SMALL_BATCH_ROWS``: a smaller
-  batch is read with pyarrow and executed in the driver, so Spark never
-  runs its batch frame and reports 0 input rows; the per-batch outcome
-  counts below still cover it
+  (emitted natively per trigger; no engine wrapper) for a micro-batch
+  above ``SMALL_BATCH_ROWS``. A smaller batch is read with pyarrow and
+  executed in the driver, so Spark never runs its batch frame and
+  reports 0 input rows; the worker reports that batch's input rows and
+  duration through ``record_micro_batch`` instead
 
 The worker emits COUNTS per micro-batch, not one datagram per job: at
 cluster scale a per-job UDP send from the driver would serialize the
@@ -62,6 +62,10 @@ class Metrics:
     SCHEDULE_LATENCY = "scheduled.latency"
     CRON_SCHEDULE_LATENCY = "cron_scheduled.latency"
     RETRY_LATENCY = "retry.latency"
+    # engine-level progress of a micro-batch run in the driver (no
+    # goose equivalent; Spark's own progress covers the larger ones)
+    MICRO_BATCH_ROWS = "micro_batch.input_rows"
+    MICRO_BATCH_TIME = "micro_batch.duration"
     # gauges (metrics.clj:27-33)
     TOTAL_ENQUEUED_SIZE = "total_enqueued_jobs.count"
     SCHEDULED_SIZE = "scheduled_jobs.count"
@@ -120,6 +124,13 @@ class Metrics:
         self.increment(self.format_batch_status(status))
         if completion_ms is not None and completion_ms > 0:
             self.timing(self.BATCH_COMPLETION_TIME, completion_ms)
+
+    def record_micro_batch(self, input_rows: int, wall_ms: float) -> None:
+        """A micro-batch run in the driver: its input rows as a counter
+        (rows/sec is its rate) and its wall time as one timing per
+        batch — the figures ``lastProgress`` reads 0 for."""
+        self.increment(self.MICRO_BATCH_ROWS, input_rows)
+        self.timing(self.MICRO_BATCH_TIME, wall_ms)
 
     # -- worker feed (record-metrics parity, metrics.clj:59-86) ----------
 

@@ -9,8 +9,9 @@ One streaming query replaces goose's whole worker fleet:
   Same at-least-once contract as the reference (ADR reliability.md).
 * **Execution (W2/W3)**: the registered job fn runs row by row in the
   driver for a bounded batch of at most ``SMALL_BATCH_ROWS`` rows (a
-  small micro-batch or a due-sweep chunk), as goose runs job fns on
-  in-process worker threads (``worker.clj:81-87``); above that bound
+  small micro-batch or a due-sweep chunk), on up to
+  ``defaultParallelism`` threads, as goose runs job fns on in-process
+  worker threads (``worker.clj:81-87``); above that bound
   ``mapInPandas`` runs it on executors, with Arrow batches moving the
   rows.
 * **Retry/bury (W5/W6)**: failure-state fields and the
@@ -34,6 +35,8 @@ from __future__ import annotations
 
 import json
 import os
+import time
+from concurrent.futures import ThreadPoolExecutor
 from datetime import datetime, timezone
 from typing import Callable, Iterator
 
@@ -55,7 +58,7 @@ from goose_spark.schema import (
     STATUS_SUCCESS,
     batch_status,
 )
-from goose_spark.streaming.ledger import ARROW_LOG_SCHEMA, Ledger, next_seq
+from goose_spark.streaming.ledger import ARROW_LOG_SCHEMA, Ledger, next_seq, visible_parquet
 
 
 def _now() -> datetime:
@@ -66,18 +69,40 @@ def _now() -> datetime:
 # src/goose/defaults.clj:49): bounds rows materialized per due-sweep pop.
 DEFAULT_SCHEDULE_POP_LIMIT = 10_000
 
-# Execution fan-out of a driver-built frame above SMALL_BATCH_ROWS (a
-# due-sweep chunk of a raised schedule_pop_limit): one mapInPandas task
-# per this many rows, capped at defaultParallelism.
+# Execution fan-out of a driver-built frame (a small micro-batch or a
+# due-sweep chunk): one chunk per this many rows, run on at most
+# defaultParallelism driver threads (or, above SMALL_BATCH_ROWS,
+# mapInPandas tasks) — 250 quick jobs take 4, not 32.
 ROWS_PER_TASK = 64
 
-# Driver placement bound. A micro-batch (by its parquet footer rows) or
-# a due-sweep chunk of at most this many rows runs in the driver: pyarrow
-# reads the batch, the job fns execute in this process and the outcome
-# commits as one file — no Spark job. Larger ones run through
-# mapInPandas on executors and the executor-side commit
-# (_commit_distributed); 0 sends every batch there. Read at call time.
+# Driver placement bound. A micro-batch (by its parquet footer rows,
+# with a deletion index of at most as many) or a due-sweep chunk of at
+# most this many rows runs in the driver: pyarrow reads the batch, the
+# job fns execute on driver threads and the outcome commits as one
+# file — no Spark job. Larger ones run through mapInPandas on executors
+# and the executor-side commit (_commit_distributed); 0 sends every
+# batch there. Read at call time.
 SMALL_BATCH_ROWS = 10_000
+
+# Footer-count routing reads at most this many parquet footers per
+# directory it sizes (a micro-batch's files, the deletion index); past
+# it the batch takes the distributed path.
+_FOOTER_FILES_MAX = 256
+
+
+def _footer_rows(paths: list[str]) -> int | None:
+    """Row count of parquet files from their footers: O(files) metadata
+    reads, no Spark job. None = couldn't tell cheaply (more than
+    ``_FOOTER_FILES_MAX`` files, or one unreadable)."""
+    if len(paths) > _FOOTER_FILES_MAX:
+        return None
+    n = 0
+    for path in paths:
+        try:
+            n += pq.ParquetFile(path).metadata.num_rows
+        except OSError:
+            return None
+    return n
 
 
 def _coerce_log_pdf(pdf: "pd.DataFrame") -> "pd.DataFrame":
@@ -146,9 +171,10 @@ def _make_executor(retry_delay_fn: Callable[[int], int] | None, worker_id: str,
                    skip_dead_queue: bool = False):
     """Build the execution fn (W3/W4/W5/W6): it maps pandas frames of
     job rows to full outcome rows, resolving fns via the registry. The
-    worker calls it directly in the driver on a batch of at most
-    ``SMALL_BATCH_ROWS`` rows; above that it is the ``mapInPandas`` fn,
-    serialized to executors. Column-wise output assembly (no per-row
+    worker calls it directly on driver threads for a batch of at most
+    ``SMALL_BATCH_ROWS`` rows (so middlewares and handlers must be
+    thread-safe, as under goose's worker threads); above that it is the
+    ``mapInPandas`` fn, serialized to executors. Column-wise output assembly (no per-row
     .loc mutation) keeps the Python side ~10× faster per batch.
 
     ``middlewares`` composes around the execute call exactly like
@@ -499,8 +525,8 @@ class Worker:
         source log (``checkpoint/sources/0/<batchId>``, the committed
         manifest the file source itself replays from —
         ``DataFrame.inputFiles()`` is empty on streaming batch frames).
-        None = couldn't tell cheaply (no log entry, non-local files, too
-        many files) → caller takes the fully distributed path."""
+        None = couldn't tell cheaply (no log entry, non-local files, see
+        ``_footer_rows``) → caller takes the fully distributed path."""
         from urllib.parse import unquote, urlparse
 
         src_dir = os.path.join(self.checkpoint_dir, "sources", "0")
@@ -522,19 +548,14 @@ class Worker:
                         files.append(entry["path"])
         except (OSError, ValueError, KeyError):
             return None
-        if len(files) > 256:
-            return None  # that many append txns is a big batch anyway
-        paths, n = [], 0
+        paths = []
         for uri in files:
             parsed = urlparse(uri)
             if parsed.scheme not in ("", "file"):
                 return None
             paths.append(unquote(parsed.path) if parsed.scheme else uri)
-            try:
-                n += pq.ParquetFile(paths[-1]).metadata.num_rows
-            except OSError:
-                return None
-        return paths, n
+        n = _footer_rows(paths)
+        return None if n is None else (paths, n)
 
     def _for_each_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
         # Small batches (the steady state of a low-latency trigger) run
@@ -546,12 +567,23 @@ class Worker:
         # latency. Bounded by SMALL_BATCH_ROWS (10k ≈ a few MB): large
         # batches — the 100 TB shape — keep the fully distributed path,
         # so this is a latency optimization with a hard ceiling, not a
-        # driver funnel.
+        # driver funnel. The deletion index the batch is filtered against
+        # must fit the same bound: purge() can make it unbounded, and the
+        # driver reads all of it.
+        start = time.perf_counter()
         batch = self._batch_files(epoch_id)
         if batch is not None and 0 < batch[1] <= SMALL_BATCH_ROWS:
-            with self._lock:
-                self._process_batch_local(batch[0])
-            return
+            tombs = _footer_rows(visible_parquet(self.ledger.tombstones_dir))
+            if tombs is not None and tombs <= SMALL_BATCH_ROWS:
+                with self._lock:
+                    self._process_batch_local(batch[0])
+                if self.metrics is not None and self.metrics.enabled():
+                    # Spark never runs this batch's frame, so its own
+                    # progress reports 0 input rows for it
+                    self.metrics.record_micro_batch(
+                        batch[1], (time.perf_counter() - start) * 1000
+                    )
+                return
         rows = batch_df.persist()
         try:
             with self._lock:
@@ -678,10 +710,13 @@ class Worker:
 
     def _execute_local(self, pdf: pd.DataFrame) -> None:
         """Run the job fns in this process on ``pdf`` (already in priority
-        order) and commit the outcome as one driver-written file."""
-        import time as _time
-
-        _exec_start = _time.perf_counter()
+        order) and commit the outcome as one driver-written file. Chunks
+        of ``ROWS_PER_TASK`` rows run on at most ``defaultParallelism``
+        threads, taken in priority order — goose's worker-thread pool
+        (``worker.clj:81-87``) — so a job fn that waits on I/O keeps the
+        fan-out the ``mapInPandas`` tasks gave it. One chunk runs on the
+        calling thread."""
+        _exec_start = time.perf_counter()
         if self.emit_in_progress:
             # in-progress stamp: one file whose fresh seqs stay below the
             # outcome rows' later time base, so the outcome remains each
@@ -695,8 +730,16 @@ class Worker:
             self.ledger.append_table(
                 pa.Table.from_pandas(marked, schema=ARROW_LOG_SCHEMA, preserve_index=False)
             )
+        run = self._executor()
+        chunks = [pdf.iloc[i:i + ROWS_PER_TASK] for i in range(0, len(pdf), ROWS_PER_TASK)]
+        threads = min(len(chunks), self.spark.sparkContext.defaultParallelism)
+        if threads <= 1:
+            outs = list(run(iter(chunks)))
+        else:
+            with ThreadPoolExecutor(threads, thread_name_prefix="goose-job") as pool:
+                outs = list(pool.map(lambda chunk: next(run(iter([chunk]))), chunks))
         out_tbl = pa.Table.from_pandas(
-            next(self._executor()(iter([pdf]))), schema=ARROW_LOG_SCHEMA, preserve_index=False
+            pd.concat(outs), schema=ARROW_LOG_SCHEMA, preserve_index=False
         )
         self.executions += out_tbl.num_rows
         # one parquet file per micro-batch == the ack/commit txn
@@ -711,7 +754,7 @@ class Worker:
             # metrics middleware position parity (worker.clj:46-55)
             self.metrics.record_outcomes(
                 out_tbl["status"].to_pylist(),
-                (_time.perf_counter() - _exec_start) * 1000,
+                (time.perf_counter() - _exec_start) * 1000,
             )
             from goose_spark.streaming.metrics import latency_classes_ms
 

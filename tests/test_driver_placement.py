@@ -19,7 +19,7 @@ import goose_spark.streaming.worker as worker_mod
 from goose_spark.api import LedgerAPI
 from goose_spark.client import JobClient
 from goose_spark.plans.profile import group_profile, job_group
-from goose_spark.schema import PRIORITY_FRONT
+from goose_spark.schema import PRIORITY_BACK, PRIORITY_FRONT
 from goose_spark.streaming.ledger import Ledger, visible_parquet
 from goose_spark.streaming.worker import Worker
 
@@ -170,3 +170,91 @@ def test_driver_path_skips_deleted_and_superseded_rows(spark, ledger, monkeypatc
     assert state[moved] == ("success", PRIORITY_FRONT)
     successes = ledger.log(spark).filter(f"id = '{moved}' AND status = 'success'").count()
     assert successes == 1
+
+
+@pytest.mark.parametrize("tomb_rows, driver", [(5, True), (6, False)])
+def test_deletion_index_above_bound_takes_distributed_path(spark, ledger, monkeypatch,
+                                                           tomb_rows, driver):
+    """A small batch runs in the driver only while the deletion index it
+    is filtered against also fits ``SMALL_BATCH_ROWS`` by its footers;
+    a larger index sends the batch to the distributed path, which
+    leaves the join to Spark. Both apply the index."""
+    monkeypatch.setattr(worker_mod, "SMALL_BATCH_ROWS", 5)
+    client = JobClient(ledger)
+    ids = [client.perform_async("noop", i)["id"] for i in range(3)]
+    ledger.add_tombstones([ids[0]] + [f"other-{i}" for i in range(tomb_rows - 1)])
+    calls = []
+    local = Worker._process_batch_local
+    monkeypatch.setattr(Worker, "_process_batch_local",
+                        lambda self, files: calls.append(files) or local(self, files))
+    worker = Worker(spark, ledger, rand_int=lambda n: 0)
+    worker.process_available()
+    assert bool(calls) == driver
+    assert worker.executions == 2
+    state = {r["id"]: r["status"] for r in ledger.state(spark).collect()}
+    assert [state[i] for i in ids] == ["enqueued", "success", "success"]
+
+
+def test_driver_batch_reports_input_rows(spark, ledger, monkeypatch):
+    """Spark's progress reads 0 input rows for a batch run in the
+    driver, so the worker reports the batch's rows and duration through
+    the metrics backend; a distributed batch is left to Spark's own."""
+    from goose_spark.streaming.metrics import Metrics, MetricsSink
+
+    client = JobClient(ledger)
+    for i in range(20):
+        client.perform_async("noop", i)
+    sink = MetricsSink()
+    Worker(spark, ledger, rand_int=lambda n: 0, metrics=sink).process_available()
+    assert sink.counters[Metrics.MICRO_BATCH_ROWS] == 20
+    assert len(sink.timings[Metrics.MICRO_BATCH_TIME]) == 1
+    assert sink.counters[Metrics.JOBS_PROCESSED] == 20
+
+    for i in range(20):
+        client.perform_async("noop", i)
+    monkeypatch.setattr(worker_mod, "SMALL_BATCH_ROWS", 0)
+    sink = MetricsSink()
+    Worker(spark, ledger, rand_int=lambda n: 0, metrics=sink).process_available()
+    assert Metrics.MICRO_BATCH_ROWS not in sink.counters
+    assert sink.counters[Metrics.JOBS_PROCESSED] == 20
+
+
+def test_driver_placement_runs_chunks_on_threads(spark, ledger):
+    """A driver-placed batch runs its chunks of ``ROWS_PER_TASK`` rows
+    on up to ``defaultParallelism`` threads, so job fns that wait keep
+    the fan-out mapInPandas tasks gave them; each thread takes its rows
+    in priority order."""
+    import threading
+
+    client = JobClient(ledger)
+    n = 4 * worker_mod.ROWS_PER_TASK
+    for i in range(n):
+        client.perform_async("time:sleep", 0.002,
+                             priority=PRIORITY_FRONT if i % 2 else PRIORITY_BACK)
+    lock, inflight, peak, seen = threading.Lock(), [0], [0], {}
+
+    def track(next_fn):
+        def wrapped(job):
+            with lock:
+                inflight[0] += 1
+                peak[0] = max(peak[0], inflight[0])
+                seen.setdefault(threading.get_ident(), []).append(job["id"])
+            try:
+                return next_fn(job)
+            finally:
+                with lock:
+                    inflight[0] -= 1
+
+        return wrapped
+
+    worker = Worker(spark, ledger, rand_int=lambda n: 0, middlewares=(track,))
+    worker.process_available()
+    assert worker.executions == n
+    threads = min(4, spark.sparkContext.defaultParallelism)
+    assert len(seen) == threads
+    if threads > 1:
+        assert peak[0] > 1
+    prio = {r["id"]: r["priority"] for r in ledger.state(spark).collect()}
+    for ids in seen.values():
+        prios = [prio[i] for i in ids]
+        assert prios == sorted(prios, reverse=True)

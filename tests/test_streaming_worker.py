@@ -260,10 +260,12 @@ def test_priority_front_executes_first_within_partitions(spark, ledger, tmp_path
     micro-batch, front-priority jobs execute before back-priority (the
     documented contract — cross-partition order is concurrent). Observed
     via a middleware recording (partition, order, priority). Runs on
-    both placements: the default small batch executes in the driver (no
-    task context, recorded as partition 0); SMALL_BATCH_ROWS=0 runs it
-    through mapInPandas tasks."""
+    both placements: the default small batch executes on driver threads
+    (no task context; the thread stands for the partition, as it takes
+    its chunks in priority order); SMALL_BATCH_ROWS=0 runs it through
+    mapInPandas tasks."""
     import os
+    import threading
     import time as _time
 
     from goose_spark.schema import PRIORITY_FRONT
@@ -276,7 +278,7 @@ def test_priority_front_executes_first_within_partitions(spark, ledger, tmp_path
             from pyspark import TaskContext
 
             ctx = TaskContext.get()
-            pid = ctx.partitionId() if ctx is not None else 0
+            pid = ctx.partitionId() if ctx is not None else threading.get_ident()
             with open(os.path.join(trace, f"{pid}-{_time.monotonic_ns()}-{job['id']}"), "w") as f:
                 f.write(str(job.get("priority", "")))
             return next_fn(job)

@@ -259,39 +259,6 @@ def test_latest_rows_matches_state(spark, ledger):
     assert live == {"live"}
 
 
-def test_latest_rows_opens_only_files_that_can_match(spark, ledger, monkeypatch):
-    """Files whose footer max seq is below the bound are not scanned,
-    each footer is read once per Ledger, and a fold that replaces the
-    files keeps the lookup equal to state()."""
-    import pyarrow.dataset as ds
-
-    import goose_spark.streaming.ledger as ledger_mod
-
-    ledger.append_rows([_row("a", STATUS_SCHEDULED)])
-    ledger.append_rows([_row("b", STATUS_SCHEDULED)])
-    bound = next_seq()
-    ledger.append_rows([_row("a", STATUS_SUCCESS)])
-    footers, scanned = [], []
-    real_footer, real_dataset = ledger_mod._footer_seq_max, ds.dataset
-    monkeypatch.setattr(ledger_mod, "_footer_seq_max",
-                        lambda p: footers.append(p) or real_footer(p))
-    monkeypatch.setattr(
-        ds, "dataset", lambda files, **kw: scanned.append(list(files)) or real_dataset(files, **kw)
-    )
-    want = _state_rows(spark, ledger, ["a", "b"])
-    assert ledger.latest_rows(["a", "b"], bound) == {"a": want["a"]}
-    assert scanned[-1] == [max(ledger_mod.visible_parquet(ledger.log_dir))]
-    assert len(footers) == 3
-    assert ledger.latest_rows(["a", "b"], 0) == want
-    assert len(footers) == 3  # cached
-    assert len(scanned[-1]) == 3
-    folded = ledger.compact_log(spark, checkpoints=[], min_files=1, keep_recent=0)
-    assert folded["folded"] == 3
-    assert ledger.latest_rows(["a", "b"], 0) == _state_rows(spark, ledger, ["a", "b"]) == want
-    assert len(footers) == 4  # only the new generation's footer
-    assert sorted(ledger._log_seq_max) == sorted(ledger_mod.visible_parquet(ledger.log_dir))
-
-
 def test_latest_rows_empty_log(spark, ledger):
     assert ledger.latest_rows(["a", "b"], 0) == {}
     assert ledger.state(spark).count() == 0
