@@ -11,9 +11,10 @@ One streaming query replaces goose's whole worker fleet:
   driver for a bounded batch of at most ``SMALL_BATCH_ROWS`` rows (a
   small micro-batch or a due-sweep chunk), on up to
   ``defaultParallelism`` threads, as goose runs job fns on in-process
-  worker threads (``worker.clj:81-87``); above that bound
-  ``mapInPandas`` runs it on executors, with Arrow batches moving the
-  rows.
+  worker threads (``worker.clj:81-87``); above that bound, or when the
+  batch's job fns would hold the driver's CPU (the GIL) longer than
+  ``_DRIVER_CPU_S``, ``mapInPandas`` runs it on executors, with Arrow
+  batches moving the rows.
 * **Retry/bury (W5/W6)**: failure-state fields and the
   ``20 + rand(20)·(n+1) + n⁴`` backoff mirror ``src/goose/retry.clj``.
 * **Scheduler (W7)**: scheduled/retrying rows are parked in the
@@ -83,6 +84,17 @@ ROWS_PER_TASK = 64
 # and the executor-side commit (_commit_distributed); 0 sends every
 # batch there. Read at call time.
 SMALL_BATCH_ROWS = 10_000
+
+# Driver CPU budget of one bounded batch's job fns, in seconds. Driver
+# threads overlap a job fn's waits but not its Python CPU (the GIL);
+# mapInPandas spreads that over executor processes for about the fixed
+# cost of one execution job, 0.42-0.52 s measured (ROADMAP direction
+# 6). A driver batch hands the chunks it has not started to mapInPandas
+# once its finished chunks used this much thread CPU, and a frame of
+# more than one chunk that would use more, at the CPU per row of the
+# last driver batch, goes there whole. Either way the outcome still
+# commits as one driver-written file.
+_DRIVER_CPU_S = 0.5
 
 # Footer-count routing reads at most this many parquet footers per
 # directory it sizes (a micro-batch's files, the deletion index); past
@@ -173,9 +185,10 @@ def _make_executor(retry_delay_fn: Callable[[int], int] | None, worker_id: str,
     job rows to full outcome rows, resolving fns via the registry. The
     worker calls it directly on driver threads for a batch of at most
     ``SMALL_BATCH_ROWS`` rows (so middlewares and handlers must be
-    thread-safe, as under goose's worker threads); above that it is the
-    ``mapInPandas`` fn, serialized to executors. Column-wise output assembly (no per-row
-    .loc mutation) keeps the Python side ~10× faster per batch.
+    thread-safe, as under goose's worker threads); above that, or past
+    ``_DRIVER_CPU_S``, it is the ``mapInPandas`` fn, serialized to
+    executors. Column-wise output assembly (no per-row .loc mutation)
+    keeps the Python side ~10× faster per batch.
 
     ``middlewares`` composes around the execute call exactly like
     goose's chain (src/goose/brokers/redis/worker.clj:46-55): each is
@@ -384,6 +397,9 @@ class Worker:
         # ledger append per micro-batch.
         self.emit_in_progress = emit_in_progress
         self.executions = 0
+        # job-fn CPU seconds per row of the last driver-executed frame
+        # (see _DRIVER_CPU_S)
+        self._cpu_s_per_row = 0.0
         # W9: process registry + heartbeat (heartbeat.clj:22-33) — the
         # console's workers view. Registered on construction; re-beaten
         # by every timer tick; deregistered by Handle.stop.
@@ -682,41 +698,31 @@ class Worker:
     def _execute_bounded(self, pdf: pd.DataFrame) -> None:
         """Execute a driver-built frame of runnable rows (a small
         micro-batch or a due-sweep chunk) in priority order (P8, applied
-        in pandas). At most SMALL_BATCH_ROWS rows run in the driver.
-        Above that, createDataFrame slices contiguously, so the narrow
-        coalesce in _execute_and_log keeps the order and no repartition
-        shuffle runs; fan-out is ceil(rows / ROWS_PER_TASK) tasks."""
+        in pandas). A frame of at most SMALL_BATCH_ROWS rows commits as
+        one driver-written file; its job fns run on driver threads
+        (``_run_local``) when one chunk holds them or their estimated CPU
+        fits _DRIVER_CPU_S, and the rows left past that budget run on
+        the executors, whose outcome comes back to the same commit. A
+        larger frame takes _execute_and_log's executor-side commit.
+        Rows sent to the executors are sliced contiguously by
+        createDataFrame, so the narrow coalesce keeps their order and no
+        repartition shuffle runs; fan-out is ceil(rows / ROWS_PER_TASK)
+        tasks."""
         pdf = pdf.sort_values(["priority", "enqueued_at"], ascending=[False, True])
-        if len(pdf) <= SMALL_BATCH_ROWS:
-            self._execute_local(pdf)
+
+        def frame(rows: pd.DataFrame) -> DataFrame:
+            return self.spark.createDataFrame(
+                _coerce_log_pdf(rows), schema=self.ledger._spark_log_schema()
+            )
+
+        def width(rows: pd.DataFrame) -> int:
+            return max(1, min(self.spark.sparkContext.defaultParallelism,
+                              -(-len(rows) // ROWS_PER_TASK)))
+
+        if len(pdf) > SMALL_BATCH_ROWS:
+            self._execute_and_log(frame(pdf), width=width(pdf))
             return
-        width = max(
-            1,
-            min(
-                self.spark.sparkContext.defaultParallelism,
-                -(-len(pdf) // ROWS_PER_TASK),
-            ),
-        )
-        df = self.spark.createDataFrame(
-            _coerce_log_pdf(pdf), schema=self.ledger._spark_log_schema()
-        )
-        self._execute_and_log(df, width=width)
-
-    def _executor(self):
-        return _make_executor(self.retry_delay_fn, self.worker_id, self.middlewares,
-                              error_handler=self.error_handler,
-                              death_handler=self.death_handler,
-                              skip_dead_queue=self.skip_dead_queue)
-
-    def _execute_local(self, pdf: pd.DataFrame) -> None:
-        """Run the job fns in this process on ``pdf`` (already in priority
-        order) and commit the outcome as one driver-written file. Chunks
-        of ``ROWS_PER_TASK`` rows run on at most ``defaultParallelism``
-        threads, taken in priority order — goose's worker-thread pool
-        (``worker.clj:81-87``) — so a job fn that waits on I/O keeps the
-        fan-out the ``mapInPandas`` tasks gave it. One chunk runs on the
-        calling thread."""
-        _exec_start = time.perf_counter()
+        exec_start = time.perf_counter()
         if self.emit_in_progress:
             # in-progress stamp: one file whose fresh seqs stay below the
             # outcome rows' later time base, so the outcome remains each
@@ -730,17 +736,15 @@ class Worker:
             self.ledger.append_table(
                 pa.Table.from_pandas(marked, schema=ARROW_LOG_SCHEMA, preserve_index=False)
             )
-        run = self._executor()
-        chunks = [pdf.iloc[i:i + ROWS_PER_TASK] for i in range(0, len(pdf), ROWS_PER_TASK)]
-        threads = min(len(chunks), self.spark.sparkContext.defaultParallelism)
-        if threads <= 1:
-            outs = list(run(iter(chunks)))
-        else:
-            with ThreadPoolExecutor(threads, thread_name_prefix="goose-job") as pool:
-                outs = list(pool.map(lambda chunk: next(run(iter([chunk]))), chunks))
-        out_tbl = pa.Table.from_pandas(
-            pd.concat(outs), schema=ARROW_LOG_SCHEMA, preserve_index=False
-        )
+        outs = []
+        if len(pdf) <= ROWS_PER_TASK or len(pdf) * self._cpu_s_per_row <= _DRIVER_CPU_S:
+            local, pdf = self._run_local(pdf)
+            outs.append(local)
+        if len(pdf):
+            df = frame(pdf)
+            outcome = df.coalesce(width(pdf)).mapInPandas(self._executor(), schema=df.schema)
+            outs.append(self._to_arrow(outcome))
+        out_tbl = pa.concat_tables(outs)
         self.executions += out_tbl.num_rows
         # one parquet file per micro-batch == the ack/commit txn
         self.ledger.append_table(out_tbl)
@@ -754,7 +758,7 @@ class Worker:
             # metrics middleware position parity (worker.clj:46-55)
             self.metrics.record_outcomes(
                 out_tbl["status"].to_pylist(),
-                (time.perf_counter() - _exec_start) * 1000,
+                (time.perf_counter() - exec_start) * 1000,
             )
             from goose_spark.streaming.metrics import latency_classes_ms
 
@@ -764,6 +768,46 @@ class Worker:
             ).to_pandas()
             self.metrics.record_latency_classes(latency_classes_ms(lat_pdf, self._now()))
         self._batch_callbacks(out_tbl)
+
+    def _executor(self):
+        return _make_executor(self.retry_delay_fn, self.worker_id, self.middlewares,
+                              error_handler=self.error_handler,
+                              death_handler=self.death_handler,
+                              skip_dead_queue=self.skip_dead_queue)
+
+    def _run_local(self, pdf: pd.DataFrame) -> tuple[pa.Table, pd.DataFrame]:
+        """Run the job fns in this process on ``pdf`` (already in priority
+        order): its outcome rows, and the rows left for the executors.
+        Chunks of ``ROWS_PER_TASK`` rows run on at most
+        ``defaultParallelism`` threads, taken in priority order — goose's
+        worker-thread pool (``worker.clj:81-87``) — so a job fn that
+        waits on I/O keeps the fan-out the ``mapInPandas`` tasks gave it.
+        Once the finished chunks' thread CPU time passes
+        ``_DRIVER_CPU_S``, the chunks not yet started are left; the CPU
+        per row of the chunks run here sets ``_cpu_s_per_row`` for the
+        next routing decision."""
+        run = self._executor()
+        spent = []  # thread CPU seconds of each finished chunk
+
+        def run_chunk(chunk):
+            if sum(spent) > _DRIVER_CPU_S:
+                return None  # left for the executors
+            cpu = time.thread_time()
+            out = next(run(iter([chunk])))
+            spent.append(time.thread_time() - cpu)
+            return out
+
+        chunks = [pdf.iloc[i:i + ROWS_PER_TASK] for i in range(0, len(pdf), ROWS_PER_TASK)]
+        threads = min(len(chunks), self.spark.sparkContext.defaultParallelism)
+        with ThreadPoolExecutor(max(1, threads), thread_name_prefix="goose-job") as pool:
+            outs = list(pool.map(run_chunk, chunks))
+        rest = [chunk for chunk, out in zip(chunks, outs) if out is None]
+        out_tbl = pa.Table.from_pandas(
+            pd.concat([out for out in outs if out is not None]),
+            schema=ARROW_LOG_SCHEMA, preserve_index=False,
+        )
+        self._cpu_s_per_row = sum(spent) / out_tbl.num_rows
+        return out_tbl, pd.concat(rest) if rest else pdf.iloc[:0]
 
     def _execute_and_log(self, df: DataFrame, width: int | None = None) -> None:
         """Execute job rows on executors (``mapInPandas``) and commit the

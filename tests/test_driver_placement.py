@@ -20,7 +20,7 @@ from goose_spark.api import LedgerAPI
 from goose_spark.client import JobClient
 from goose_spark.plans.profile import group_profile, job_group
 from goose_spark.schema import PRIORITY_BACK, PRIORITY_FRONT
-from goose_spark.streaming.ledger import Ledger, visible_parquet
+from goose_spark.streaming.ledger import ARROW_LOG_SCHEMA, Ledger, visible_parquet
 from goose_spark.streaming.worker import Worker
 
 
@@ -106,10 +106,17 @@ def _run_mix(spark, base: str, skip_dead_queue: bool):
 
 @pytest.mark.parametrize("skip_dead_queue", [False, True], ids=["dead", "skip_dead_queue"])
 def test_driver_and_distributed_placements_agree(spark, tmp_path, monkeypatch, skip_dead_queue):
+    """The mix agrees on three placements: driver threads; mapInPandas
+    with the driver commit, which takes the rows the driver's CPU budget
+    leaves (here all of them); and the fully distributed path
+    (SMALL_BATCH_ROWS=0)."""
     driver = _run_mix(spark, str(tmp_path / "driver"), skip_dead_queue)
+    with monkeypatch.context() as m:
+        m.setattr(Worker, "_run_local", lambda self, pdf: (ARROW_LOG_SCHEMA.empty_table(), pdf))
+        over_budget = _run_mix(spark, str(tmp_path / "over-budget"), skip_dead_queue)
     monkeypatch.setattr(worker_mod, "SMALL_BATCH_ROWS", 0)
     distributed = _run_mix(spark, str(tmp_path / "distributed"), skip_dead_queue)
-    assert driver == distributed
+    assert driver == over_budget == distributed
     state, handlers, middleware, executions = driver
     dead = "deleted" if skip_dead_queue else "dead"
     assert {k: v[0] for k, v in state.items()} == {
@@ -258,3 +265,62 @@ def test_driver_placement_runs_chunks_on_threads(spark, ledger):
     for ids in seen.values():
         prios = [prio[i] for i in ids]
         assert prios == sorted(prios, reverse=True)
+
+
+def test_cpu_bound_job_fns_leave_the_driver(spark, ledger, tmp_path, monkeypatch):
+    """Driver threads do not spread Python CPU (the GIL), so job fns
+    that hold the driver's CPU past ``_DRIVER_CPU_S`` go to mapInPandas:
+    within a batch, the chunks not started once the budget is spent; in
+    later batches, every row of a frame of more than one chunk whose
+    rows would cost more at the CPU per row of the last driver batch.
+    Cheap job fns keep multi-chunk batches in the driver. A middleware
+    records where each job ran: a driver thread has no task context."""
+    import time
+
+    marks = tmp_path / "marks"
+    marks.mkdir()
+
+    def placement(cpu_s):
+        def middleware(next_fn):
+            def wrapped(job):
+                from pyspark import TaskContext
+
+                where = "driver" if TaskContext.get() is None else "executors"
+                open(os.path.join(str(marks), f"{where}-{uuid.uuid4().hex}"), "w").close()
+                start = time.thread_time()
+                while time.thread_time() - start < cpu_s:
+                    pass
+                return next_fn(job)
+
+            return wrapped
+
+        return middleware
+
+    def batch(worker, rows):
+        for f in os.listdir(marks):
+            os.remove(os.path.join(marks, f))
+        client = JobClient(worker.ledger)
+        for i in range(rows):
+            client.perform_async("noop", i)
+        worker.process_available()
+        return Counter(f.split("-")[0] for f in os.listdir(marks))
+
+    cheap = Worker(spark, Ledger(str(tmp_path / "cheap")), rand_int=lambda n: 0,
+                   middlewares=(placement(0.0),))
+    rows = 2 * worker_mod.ROWS_PER_TASK
+    assert batch(cheap, rows) == {"driver": rows}
+    assert batch(cheap, rows) == {"driver": rows}
+
+    chunk = 8
+    monkeypatch.setattr(worker_mod, "ROWS_PER_TASK", chunk)
+    monkeypatch.setattr(worker_mod, "_DRIVER_CPU_S", 0.02)
+    worker = Worker(spark, ledger, rand_int=lambda n: 0, middlewares=(placement(0.001),))
+    first = 4 * spark.sparkContext.defaultParallelism * chunk
+    split = batch(worker, first)
+    assert split["driver"] > 0 and split["executors"] > 0
+    assert split["driver"] + split["executors"] == first
+    assert worker._cpu_s_per_row >= 0.001
+    assert batch(worker, 4 * chunk) == {"executors": 4 * chunk}  # 32 rows × ≥1 ms > 20 ms
+    assert batch(worker, chunk) == {"driver": chunk}
+    assert worker.executions == first + 5 * chunk
+    assert LedgerAPI(spark, ledger).dashboard_counts() == {"success": first + 5 * chunk}
