@@ -92,8 +92,9 @@ SMALL_BATCH_ROWS = 10_000
 # 6). A driver batch hands the chunks it has not started to mapInPandas
 # once its finished chunks used this much thread CPU, and a frame of
 # more than one chunk that would use more, at the CPU per row of the
-# last driver batch, goes there whole. Either way the outcome still
-# commits as one driver-written file.
+# last driver batch, goes there but for its first chunk, which runs in
+# the driver meanwhile and renews that estimate. Either way the outcome
+# still commits as one driver-written file.
 _DRIVER_CPU_S = 0.5
 
 # Footer-count routing reads at most this many parquet footers per
@@ -700,9 +701,10 @@ class Worker:
         micro-batch or a due-sweep chunk) in priority order (P8, applied
         in pandas). A frame of at most SMALL_BATCH_ROWS rows commits as
         one driver-written file; its job fns run on driver threads
-        (``_run_local``) when one chunk holds them or their estimated CPU
-        fits _DRIVER_CPU_S, and the rows left past that budget run on
-        the executors, whose outcome comes back to the same commit. A
+        (``_run_local``) when their estimated CPU fits _DRIVER_CPU_S
+        (else only the first chunk does), and the rows left past that
+        budget run on the executors, whose outcome comes back to the
+        same commit. A
         larger frame takes _execute_and_log's executor-side commit.
         Rows sent to the executors are sliced contiguously by
         createDataFrame, so the narrow coalesce keeps their order and no
@@ -736,14 +738,27 @@ class Worker:
             self.ledger.append_table(
                 pa.Table.from_pandas(marked, schema=ARROW_LOG_SCHEMA, preserve_index=False)
             )
+
+        def on_executors(rows: pd.DataFrame) -> pa.Table:
+            df = frame(rows)
+            return self._to_arrow(
+                df.coalesce(width(rows)).mapInPandas(self._executor(), schema=df.schema)
+            )
+
+        # The driver's share: the whole frame, or only its first chunk
+        # when the last driver batch's CPU per row says the frame would
+        # pass _DRIVER_CPU_S. That chunk runs beside the executors' job,
+        # so the estimate follows job fns whose cost changes.
+        share = len(pdf) if len(pdf) * self._cpu_s_per_row <= _DRIVER_CPU_S else ROWS_PER_TASK
         outs = []
-        if len(pdf) <= ROWS_PER_TASK or len(pdf) * self._cpu_s_per_row <= _DRIVER_CPU_S:
-            local, pdf = self._run_local(pdf)
-            outs.append(local)
-        if len(pdf):
-            df = frame(pdf)
-            outcome = df.coalesce(width(pdf)).mapInPandas(self._executor(), schema=df.schema)
-            outs.append(self._to_arrow(outcome))
+        with ThreadPoolExecutor(1, thread_name_prefix="goose-share") as pool:
+            driver = pool.submit(self._run_local, pdf.iloc[:share])
+            if share < len(pdf):
+                outs.append(on_executors(pdf.iloc[share:]))
+            local, rest = driver.result()
+        outs.append(local)
+        if len(rest):
+            outs.append(on_executors(rest))
         out_tbl = pa.concat_tables(outs)
         self.executions += out_tbl.num_rows
         # one parquet file per micro-batch == the ack/commit txn

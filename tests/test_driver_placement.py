@@ -271,10 +271,11 @@ def test_cpu_bound_job_fns_leave_the_driver(spark, ledger, tmp_path, monkeypatch
     """Driver threads do not spread Python CPU (the GIL), so job fns
     that hold the driver's CPU past ``_DRIVER_CPU_S`` go to mapInPandas:
     within a batch, the chunks not started once the budget is spent; in
-    later batches, every row of a frame of more than one chunk whose
-    rows would cost more at the CPU per row of the last driver batch.
-    Cheap job fns keep multi-chunk batches in the driver. A middleware
-    records where each job ran: a driver thread has no task context."""
+    later batches, every row but the first chunk of a frame whose rows
+    would cost more at the CPU per row of the last driver batch. That
+    first chunk renews the estimate, so job fns that turn cheap bring
+    multi-chunk batches back to the driver. A middleware records where
+    each job ran: a driver thread has no task context."""
     import time
 
     marks = tmp_path / "marks"
@@ -288,7 +289,7 @@ def test_cpu_bound_job_fns_leave_the_driver(spark, ledger, tmp_path, monkeypatch
                 where = "driver" if TaskContext.get() is None else "executors"
                 open(os.path.join(str(marks), f"{where}-{uuid.uuid4().hex}"), "w").close()
                 start = time.thread_time()
-                while time.thread_time() - start < cpu_s:
+                while time.thread_time() - start < cpu_s[0]:
                     pass
                 return next_fn(job)
 
@@ -306,7 +307,7 @@ def test_cpu_bound_job_fns_leave_the_driver(spark, ledger, tmp_path, monkeypatch
         return Counter(f.split("-")[0] for f in os.listdir(marks))
 
     cheap = Worker(spark, Ledger(str(tmp_path / "cheap")), rand_int=lambda n: 0,
-                   middlewares=(placement(0.0),))
+                   middlewares=(placement([0.0]),))
     rows = 2 * worker_mod.ROWS_PER_TASK
     assert batch(cheap, rows) == {"driver": rows}
     assert batch(cheap, rows) == {"driver": rows}
@@ -314,13 +315,18 @@ def test_cpu_bound_job_fns_leave_the_driver(spark, ledger, tmp_path, monkeypatch
     chunk = 8
     monkeypatch.setattr(worker_mod, "ROWS_PER_TASK", chunk)
     monkeypatch.setattr(worker_mod, "_DRIVER_CPU_S", 0.02)
-    worker = Worker(spark, ledger, rand_int=lambda n: 0, middlewares=(placement(0.001),))
+    cpu_s = [0.001]  # read by the job, so executors see the value at submit
+    worker = Worker(spark, ledger, rand_int=lambda n: 0, middlewares=(placement(cpu_s),))
     first = 4 * spark.sparkContext.defaultParallelism * chunk
     split = batch(worker, first)
     assert split["driver"] > 0 and split["executors"] > 0
     assert split["driver"] + split["executors"] == first
     assert worker._cpu_s_per_row >= 0.001
-    assert batch(worker, 4 * chunk) == {"executors": 4 * chunk}  # 32 rows × ≥1 ms > 20 ms
+    # 32 rows × ≥1 ms > 20 ms: all but the first chunk leave the driver
+    assert batch(worker, 4 * chunk) == {"driver": chunk, "executors": 3 * chunk}
     assert batch(worker, chunk) == {"driver": chunk}
-    assert worker.executions == first + 5 * chunk
-    assert LedgerAPI(spark, ledger).dashboard_counts() == {"success": first + 5 * chunk}
+    cpu_s[0] = 0.0
+    assert batch(worker, 4 * chunk) == {"driver": chunk, "executors": 3 * chunk}
+    assert batch(worker, 4 * chunk) == {"driver": 4 * chunk}
+    assert worker.executions == first + 13 * chunk
+    assert LedgerAPI(spark, ledger).dashboard_counts() == {"success": first + 13 * chunk}
